@@ -144,10 +144,32 @@ object GraftSession {
   // Spark lazily recomputes an unpersisted frame.
   private val liveCaches =
     scala.collection.mutable.Map.empty[SparkSession, scala.collection.mutable.Buffer[DataFrame]]
+  /** Contexts whose application end sweeps their sessions' caches. */
+  private val watched = java.util.Collections.newSetFromMap(
+    new java.util.WeakHashMap[org.apache.spark.SparkContext, java.lang.Boolean])
 
   /** `df.cache()` + remember the frame so [[sweepCaches]] can free it. */
   def trackCache(df: DataFrame): DataFrame = synchronized {
     df.cache()
+    val session = df.sparkSession
+    val sc = session.sparkContext
+    // a session whose context stops is never swept by a next query, and
+    // Spark keeps a stopped context reachable (its long-lived threads
+    // inherit the active session): without this its cache manager keeps
+    // every cached plan and RDD lineage for the rest of the JVM. At
+    // application end nothing can read the context's caches again, so
+    // they are all dropped at once — one by one, each uncache would try
+    // to rebuild the entries that read it, on a context already stopping.
+    // `SparkContext.stop` drains the listener bus before it stops the
+    // block manager, so the drop still reaches the stored blocks
+    // (GraftSessionSpec stops a context and checks its cache manager).
+    if (watched.add(sc)) sc.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+      override def onApplicationEnd(end: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit =
+        GraftSession.synchronized {
+          liveCaches.keys.filter(_.sparkContext eq sc).toSeq.foreach(liveCaches.remove)
+          session.catalog.clearCache()
+        }
+    })
     liveCaches.getOrElseUpdate(df.sparkSession, scala.collection.mutable.Buffer.empty) += df
     df
   }

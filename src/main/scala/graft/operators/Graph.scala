@@ -200,21 +200,23 @@ object Graph {
     // construction — the declared contract stays "the 8-round unrolled
     // recurrence" (the oracle replays it; Round12Spec pins round 8 as a
     // fixed point), this only skips provably-identical work.
-    var eCount = -1L
+    // lineage cut, load-bearing twice over: each alternation references
+    // its input ~8× (sym explode ×2, two agg self-joins, the union), so
+    // an uncut plan grows 8^round — the analyzer's DeduplicateRelations
+    // pass alone is exponential (measured: the 8-round plan never
+    // finishes analysis). Eager localCheckpoint materializes the
+    // (non-increasing, node-bounded) edge set once per round and starts
+    // the next round from a leaf — the same per-iteration checkpoint
+    // GraphFrames ships for this exact algorithm; a multi-executor
+    // deployment would flip to reliable `checkpoint` on shared storage.
+    // The initial edge set is checkpointed here, once; every later round
+    // starts from the previous round's already-checkpointed `next`.
+    e = e.localCheckpoint()
+    var eCount = e.count()
     var converged = false
     var round = 0
     while (round < rounds && !converged) {
-      // lineage cut, load-bearing twice over: each alternation references
-      // its input ~8× (sym explode ×2, two agg self-joins, the union), so
-      // an uncut plan grows 8^round — the analyzer's DeduplicateRelations
-      // pass alone is exponential (measured: the 8-round plan never
-      // finishes analysis). Eager localCheckpoint materializes the
-      // (non-increasing, node-bounded) edge set once per round and starts
-      // the next round from a leaf — the same per-iteration checkpoint
-      // GraphFrames ships for this exact algorithm; a multi-executor
-      // deployment would flip to reliable `checkpoint` on shared storage.
-      val prev = e.localCheckpoint()
-      if (eCount < 0L) eCount = prev.count()
+      val prev = e
       // LARGE-STAR over the symmetric closure: every node u links its
       // STRICTLY LARGER neighbors to m = min(Γ(u) ∪ {u}); output stays
       // canonical (m <= u < emitted source).

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** End-to-end training-corpus preparation: the composition every LLM data
@@ -386,7 +387,6 @@ object Pipeline {
     * the spec can drive the τ-absent (≤ k stratum) branch, which the
     * fixture's ≥ 64-doc strata never reach. */
   private[graft] def reservoirCore(d: DataFrame, k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val rk = graft.GraftSession.trackCache(d
       .withColumn("priority", expr(ReservoirPriorityExpr))
       .withColumn("rn", row_number().over(
@@ -560,20 +560,20 @@ object Pipeline {
       .groupBy("dim")
       .agg(count(lit(1)).as("c_raw"),
         sum(when(col("lang") === "en", 1L).otherwise(0L)).as("c_tgt"))
-    val tot = dist.agg(sum("c_raw"), sum("c_tgt")).collect()(0)
-    // a zero-token corpus leaves dist empty and the sums NULL; 0/0 keeps
-    // the weights map empty and every doc at score 0 (doc_id tiebreak
-    // selection), matching the oracle's LEFT JOIN degradation
-    val (tRaw, tTgt) =
-      if (tot.isNullAt(0)) (0L, 0L) else (tot.getLong(0), tot.getLong(1))
-    // log2 quantized to 1e-6 INSIDE Spark expressions (constants included,
-    // via constant folding) so the IEEE log2 sequence is the engine's own,
-    // mirrored literally by the oracle's — never driver-side math.log
+    // log2 quantized to 1e-6 INSIDE Spark expressions so the IEEE log2
+    // sequence is the engine's own, mirrored literally by the oracle's —
+    // never driver-side math.log
     def l2q(c: Column): Column =
       floor(log2(c.cast("double")) * 1e6 + 0.5).cast("long")
+    // the corpus totals ride a window sum over the <= 256 dist rows, so
+    // ONE aggregate of the feature stream yields totals and weights. A
+    // zero-token corpus leaves dist empty: the weights map stays empty
+    // and every doc scores 0 (doc_id tiebreak selection), matching the
+    // oracle's LEFT JOIN degradation
+    val all = Window.partitionBy()
     val weights = dist.select(col("dim"),
-      (l2q(col("c_tgt") + 1) - l2q(lit(tTgt + B))
-        - (l2q(col("c_raw") + 1) - l2q(lit(tRaw + B)))).as("q6"))
+      (l2q(col("c_tgt") + 1) - l2q(sum("c_tgt").over(all) + B)
+        - (l2q(col("c_raw") + 1) - l2q(sum("c_raw").over(all) + B))).as("q6"))
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     val wMap = typedLit(weights.toMap)
     // pass 2 — scores: per-OCCURRENCE weight lookup, doc-keyed sum

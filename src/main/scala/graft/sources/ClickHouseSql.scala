@@ -39,11 +39,12 @@ import scala.collection.mutable
   *  - `SELECT ...` translates and returns the DataFrame.
   *
   * Expression translation (ClickHouseSqlSpec pins each):
-  * `JSONExtractString/Int/UInt(m,'k')` → `get_json_object` (+ BIGINT
-  * cast); `JSONExtract(m,'k','Tuple(...)')` → `named_struct` of per-field
-  * `get_json_object`, field NAMES resolved from the destination column's
-  * declared tuple (exactly CH's positional-to-declared-names insert
-  * semantics); `fromUnixTimestamp64Milli` → `timestamp_millis`;
+  * `JSONExtractString/Int/UInt(m,'k')` → a STRING field of one
+  * `from_json` per message column (+ BIGINT cast for the Int forms);
+  * `JSONExtract(m,'k','Tuple(...)')` → a struct field of the same parse,
+  * field NAMES resolved from the destination column's declared tuple
+  * (exactly CH's positional-to-declared-names insert semantics);
+  * `fromUnixTimestamp64Milli` → `timestamp_millis`;
   * `toStartOfDay` → `date_trunc('DAY', ...)`; `toInt8` → TINYINT cast;
   * `count()` → `count(*)`; `GROUP BY (a, b)` / `ORDER BY (a, b)` tuple
   * forms → plain lists; backticks and `default.` qualifiers stripped.
@@ -56,23 +57,47 @@ import scala.collection.mutable
   * `sum(st.s) / sum(st.c)` — one division of exact integer sums, so the
   * result is bit-reproducible cross-engine (SURVEY §5 q_corr pattern).
   *
+  * Storage: a MergeTree-family table is an ordered list of PARTS, as in
+  * ClickHouse. Each `INSERT` / MV append adds one part, the appended
+  * select's rows; the table reads as the union of its parts. A table's
+  * parts are STORED (cached through [[graft.GraftSession.trackCache]])
+  * from the statement that makes it a table with two reading statements
+  * on: from then on each part is computed once, on its next read, and
+  * every later read scans it instead of re-running the upstream chain
+  * (the Step-2.3 JSON extraction, the Step-3/4 MV and backfill legs). A
+  * table read by one statement only is never stored: storing would
+  * materialise every column where its one reader's plan prunes to the
+  * columns it needs. Stored parts live until the next
+  * [[graft.GraftSession.sweepCaches]] (each `SparkEntry` key sweeps at
+  * entry); after a sweep a read recomputes them from their plans and gets
+  * the same rows. The catalog is bound to session temp views only for
+  * the duration of one statement.
+  *
   * Scale: the front-end only TRANSLATES; execution is whatever plan
   * Catalyst picks for the emitted Spark SQL — the same plans the native
   * keys run (the MV chain is two partial-aggregated shuffles; nothing
-  * here adds driver-side row work; tables live as session temp views).
+  * here adds driver-side row work).
   */
 final class ClickHouseSql(
     spark: SparkSession,
     topicFrame: String => DataFrame) {
   import ClickHouseSql._
 
-  /** name -> current contents; MergeTree tables accumulate via union. */
+  /** name -> current contents: a queue's topic frame, or a MergeTree
+    * table's empty typed frame ∪ its parts, oldest first. */
   private val tables = mutable.LinkedHashMap.empty[String, DataFrame]
   /** (table, column) -> declared Tuple field names (JSONExtract rewrite). */
   private val tupleFields = mutable.Map.empty[(String, String), Seq[String]]
   /** table -> (engine, engine params, ORDER BY key columns) — what
     * `FROM t FINAL` needs to collapse a ReplacingMergeTree. */
   private val tableMeta = mutable.Map.empty[String, (String, Seq[String], Seq[String])]
+
+  /** table -> statements that have read it (see "Storage" above). */
+  private val readers = mutable.Map.empty[String, Int].withDefaultValue(0)
+  /** table -> its parts appended while it had fewer than two readers. */
+  private val unstored = mutable.Map.empty[String, mutable.Buffer[DataFrame]]
+  /** Tables the running statement reads. */
+  private val reading = mutable.Set.empty[String]
 
   /** Executes one statement; SELECTs return the frame, DDL/INSERT None. */
   def execute(statement: String): Option[DataFrame] = {
@@ -101,9 +126,41 @@ final class ClickHouseSql(
     * clobbered by, any same-named view elsewhere in the shared session). */
   private def withViews[T](body: => T): T = {
     tables.foreach { case (n, df) => df.createOrReplaceTempView(n) }
-    try body
-    finally tables.keys.foreach(spark.catalog.dropTempView(_))
+    reading.clear()
+    try {
+      val out = body
+      reading.foreach(countReader)
+      out
+    } finally tables.keys.foreach(dropView)
   }
+
+  /** `spark.sql` on translated text, noting the catalog tables it reads:
+    * the outermost views in its analyzed plan (a table's plan holds the
+    * views the statements that filled it read; those are not read again). */
+  private def sql(text: String): DataFrame = {
+    val df = spark.sql(text)
+    def views(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Unit = p match {
+      case v: org.apache.spark.sql.catalyst.plans.logical.View =>
+        Some(v.desc.identifier.table).filter(tables.contains).foreach(reading += _)
+      case _ => (p.children ++ p.subqueries).foreach(views)
+    }
+    views(df.queryExecution.analyzed)
+    df
+  }
+
+  /** One more statement read `t`; its second stores the parts so far. */
+  private def countReader(t: String): Unit = {
+    readers(t) += 1
+    if (readers(t) == 2) unstored.remove(t).foreach(_.foreach(graft.GraftSession.trackCache))
+  }
+
+  /** Drops a temp view WITHOUT uncaching: `spark.catalog.dropTempView`
+    * also uncaches every cached plan with the view's result, and a view
+    * over a table whose parts are all stored has exactly a stored part's
+    * result — so the public call would drop the parts after each
+    * statement, before any later statement could read them. */
+  private def dropView(name: String): Unit =
+    spark.sessionState.catalog.dropTempView(name)
 
   private def runSelect(s0: String): DataFrame =
     withViews {
@@ -120,6 +177,7 @@ final class ClickHouseSql(
         val t = stripName(m.group(1))
         val view = s"__graft_final_$t"
         finalView(t).createOrReplaceTempView(view)
+        reading += t
         finalViews += view
         java.util.regex.Matcher.quoteReplacement(s"FROM $view")
       })
@@ -128,8 +186,8 @@ final class ClickHouseSql(
           "(alias/JOIN FINAL forms are outside the dialect subset)")
       try fillClause.findFirstMatchIn(s) match {
         case Some(m) => runWithFill(m)
-        case None => spark.sql(translateQuery(s))
-      } finally finalViews.foreach(spark.catalog.dropTempView(_))
+        case None => sql(translateQuery(s))
+      } finally finalViews.foreach(dropView)
     }
 
   /** The `FINAL` collapse of a `ReplacingMergeTree(version)` table:
@@ -175,7 +233,7 @@ final class ClickHouseSql(
   private def runWithFill(m: scala.util.matching.Regex.Match): DataFrame = {
     val (inner, c) = (m.group(1), m.group(2))
     val step = Option(m.group(5)).getOrElse("1")
-    val src = spark.sql(translateQuery(inner))
+    val src = sql(translateQuery(inner))
     val view = "__graft_fill_src"
     src.createOrReplaceTempView(view)
     try {
@@ -211,7 +269,7 @@ final class ClickHouseSql(
            |      UNION SELECT `$c` FROM $view) f
            |LEFT JOIN $view q ON f.`$c` <=> q.`$c`
            |ORDER BY f.`$c`""".stripMargin)
-    } finally spark.catalog.dropTempView(view)
+    } finally dropView(view)
   }
 
   private def createTable(s: String): Unit = {
@@ -294,19 +352,69 @@ final class ClickHouseSql(
 
   /** Appends a select's rows to a declared table, aligned by name with
     * casts to the declared column types (CH inserts coerce the same way).
-    * The new table state is CACHED (tracked for the shared sweep): a CH
-    * MV target IS a materialized table, and without the cache each
-    * downstream leg would lazily recompute its whole upstream chain —
-    * the Step-3/4 cascade re-runs the JSON extraction 2^depth times. */
+    * The rows become one new PART — a CH MV target IS a materialized
+    * table, and without stored parts every read would recompute the
+    * whole upstream chain (the Step-3/4 cascade re-runs the JSON
+    * extraction 2^depth times). The part is stored (tracked for the
+    * shared sweep) at once if the table has two readers already, else
+    * when its second reader comes. Only the new part is ever cached, never
+    * the union: the earlier parts are stored already or are not to be. */
   private def appendTo(target: String, chSelect: String): Unit = {
     val existing = tables.getOrElse(target,
       throw new IllegalArgumentException(s"unknown destination table $target"))
     val rows = withViews {
-      spark.sql(translateQuery(chSelect, tupleOwner = Some(target)))
+      sql(translateQuery(chSelect, tupleOwner = Some(target)))
     }
     val aligned = rows.select(existing.schema.map(f =>
       col(f.name).cast(f.dataType).as(f.name)): _*)
-    tables(target) = graft.GraftSession.trackCache(existing.unionByName(aligned))
+    if (readers(target) >= 2) graft.GraftSession.trackCache(aligned)
+    else unstored.getOrElseUpdate(target, mutable.Buffer.empty) += aligned
+    tables(target) = existing.unionByName(aligned)
+  }
+
+  /** The JSONExtract family → fields of ONE `from_json` per message
+    * column: every extract of a column in the statement reads the same
+    * parse, whose schema holds each extracted key — as STRING for the
+    * scalar forms (the value's text, as `get_json_object` returns it; the
+    * Int forms add the BIGINT cast), as the destination column's declared
+    * Tuple for `JSONExtract(m, 'k', 'Tuple(...)') AS alias` (field NAMES
+    * from the INSERT/MV target, CH's positional-insert semantics). The
+    * identical `from_json` calls are one common subexpression, evaluated
+    * once per row. The options map only restates the default mode: with
+    * no options the optimizer prunes each field access to its own
+    * one-field `from_json`, which would parse the message once per
+    * extract again. */
+  private def translateJsonExtract(sql: String, tupleOwner: Option[String]): String = {
+    val scalar = "\\bJSONExtract(String|UInt|Int)\\(\\s*([A-Za-z_][\\w.]*)\\s*,\\s*'([^']+)'\\s*\\)".r
+    val tuple = ("(?s)\\bJSONExtract\\(\\s*([A-Za-z_][\\w.]*)\\s*,\\s*'([^']+)'\\s*,\\s*" +
+      "'Tuple[^']*'\\s*\\)\\s+AS\\s+(\\w+)").r
+    def tupleType(alias: String): String = {
+      val owner = tupleOwner.getOrElse(throw new IllegalArgumentException(
+        "JSONExtract Tuple form outside an INSERT/MV context"))
+      val fields = tupleFields.getOrElse((owner, alias), throw new IllegalArgumentException(
+        s"no declared Tuple column $owner.$alias to resolve field names"))
+      fields.map(f => s"`$f`: STRING").mkString("STRUCT<", ", ", ">")
+    }
+    // message column -> extracted key -> its type in the parse, first use first
+    val keys = mutable.LinkedHashMap.empty[String, mutable.LinkedHashMap[String, String]]
+    def declare(msg: String, key: String, t: String): Unit = {
+      val had = keys.getOrElseUpdate(msg, mutable.LinkedHashMap.empty).getOrElseUpdate(key, t)
+      require(had == t, s"JSONExtract of '$key' as both $had and $t in one statement " +
+        "is outside the dialect subset")
+    }
+    scalar.findAllMatchIn(sql).foreach(m => declare(m.group(2), m.group(3), "STRING"))
+    tuple.findAllMatchIn(sql).foreach(m => declare(m.group(1), m.group(2), tupleType(m.group(3))))
+    def field(msg: String, key: String): String = {
+      val schema = keys(msg).map { case (k, t) => s"`$k` $t" }.mkString(", ")
+      val name = if (key.matches("[A-Za-z_]\\w*")) key else s"`$key`"
+      s"from_json($msg, '$schema', map('mode', 'PERMISSIVE')).$name"
+    }
+    val q = tuple.replaceAllIn(sql, m => java.util.regex.Matcher.quoteReplacement(
+      s"${field(m.group(1), m.group(2))} AS ${m.group(3)}"))
+    scalar.replaceAllIn(q, m => java.util.regex.Matcher.quoteReplacement(m.group(1) match {
+      case "String" => field(m.group(2), m.group(3))
+      case _ => s"CAST(${field(m.group(2), m.group(3))} AS BIGINT)"
+    }))
   }
 
   /** Dialect → Spark SQL. `tupleOwner` is the destination table whose
@@ -347,24 +455,7 @@ final class ClickHouseSql(
     // tuple-form group/order lists → plain lists
     q = q.replaceAll("(?i)\\b(GROUP\\s+BY|ORDER\\s+BY)\\s*\\(([^()]*)\\)", "$1 $2")
     q = q.replaceAll("(?i)\\bcount\\(\\s*\\)", "count(*)")
-    // JSONExtract family (string-keyed forms)
-    q = replaceJsonExtract(q, "JSONExtractString", (m, k) => s"get_json_object($m, '$$.$k')")
-    q = replaceJsonExtract(q, "JSONExtractUInt",
-      (m, k) => s"CAST(get_json_object($m, '$$.$k') AS BIGINT)")
-    q = replaceJsonExtract(q, "JSONExtractInt",
-      (m, k) => s"CAST(get_json_object($m, '$$.$k') AS BIGINT)")
-    // JSONExtract(m, 'k', 'Tuple(...)') AS alias — field names from the
-    // destination's declared tuple column (CH positional-insert semantics)
-    q = "(?s)JSONExtract\\(\\s*([A-Za-z_][\\w.]*)\\s*,\\s*'([^']+)'\\s*,\\s*'Tuple[^']*'\\s*\\)\\s+AS\\s+(\\w+)".r
-      .replaceAllIn(q, mm => {
-        val (msg, key, alias) = (mm.group(1), mm.group(2), mm.group(3))
-        val owner = tupleOwner.getOrElse(throw new IllegalArgumentException(
-          "JSONExtract Tuple form outside an INSERT/MV context"))
-        val fields = tupleFields.getOrElse((owner, alias), throw new IllegalArgumentException(
-          s"no declared Tuple column $owner.$alias to resolve field names"))
-        val ns = fields.map(f => s"'$f', get_json_object($msg, '$$.$key.$f')").mkString(", ")
-        java.util.regex.Matcher.quoteReplacement(s"named_struct($ns) AS $alias")
-      })
+    q = translateJsonExtract(q, tupleOwner)
     q = rewrapFn(q, "fromUnixTimestamp64Milli", a => s"timestamp_millis($a)")
     q = rewrapFn(q, "toStartOfDay", a => s"date_trunc('DAY', $a)")
     // toStartOfMonth/toMonday return Date in CH (toStartOfDay returns
@@ -551,13 +642,6 @@ object ClickHouseSql {
           s"${argList.mkString(", ").take(120)})")
       wrap(argList)
     })
-
-  /** JSONExtractXxx(msg, 'key') rewrites (simple two-arg string-key form). */
-  private def replaceJsonExtract(sql: String, fn: String,
-      build: (String, String) => String): String =
-    (fn + "\\(\\s*([A-Za-z_][\\w.]*)\\s*,\\s*'([^']+)'\\s*\\)").r
-      .replaceAllIn(sql, m => java.util.regex.Matcher.quoteReplacement(
-        build(m.group(1), m.group(2))))
 
   private def stripName(n: String): String =
     n.replace("`", "").replaceAll("(?i)^default\\.", "")

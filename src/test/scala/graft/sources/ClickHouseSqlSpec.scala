@@ -17,11 +17,17 @@ class ClickHouseSqlSpec extends SparkSpec {
     assert(c.translateQuery("SELECT x FROM t GROUP BY (a, b) ORDER BY (a, b)") ==
       "SELECT x FROM t GROUP BY a, b ORDER BY a, b")
     assert(c.translateQuery("SELECT JSONExtractString(message, 'subject') AS s FROM q") ==
-      "SELECT get_json_object(message, '$.subject') AS s FROM q")
+      "SELECT from_json(message, '`subject` STRING', map('mode', 'PERMISSIVE')).subject AS s FROM q")
     assert(c.translateQuery("SELECT toInt8(JSONExtractInt(message, 'points')) AS p FROM q") ==
-      "SELECT CAST(CAST(get_json_object(message, '$.points') AS BIGINT) AS TINYINT) AS p FROM q")
+      "SELECT CAST(CAST(from_json(message, '`points` STRING', map('mode', 'PERMISSIVE')).points " +
+        "AS BIGINT) AS TINYINT) AS p FROM q")
     assert(c.translateQuery("SELECT fromUnixTimestamp64Milli(JSONExtractUInt(m, 'timestamp')) FROM q") ==
-      "SELECT timestamp_millis(CAST(get_json_object(m, '$.timestamp') AS BIGINT)) FROM q")
+      "SELECT timestamp_millis(CAST(from_json(m, '`timestamp` STRING', map('mode', 'PERMISSIVE'))" +
+        ".timestamp AS BIGINT)) FROM q")
+    // every extract of one message column reads the same parse
+    assert(c.translateQuery("SELECT JSONExtractString(m, 'a'), JSONExtractInt(m, 'b') FROM q") ==
+      "SELECT from_json(m, '`a` STRING, `b` STRING', map('mode', 'PERMISSIVE')).a, " +
+        "CAST(from_json(m, '`a` STRING, `b` STRING', map('mode', 'PERMISSIVE')).b AS BIGINT) FROM q")
     assert(c.translateQuery("SELECT toStartOfDay(timestamp) AS day FROM t") ==
       "SELECT date_trunc('DAY', timestamp) AS day FROM t")
     assert(c.translateQuery("SELECT maxState(x) AS m FROM t") == "SELECT max(x) AS m FROM t")
@@ -250,6 +256,72 @@ class ClickHouseSqlSpec extends SparkSpec {
         |LIMIT 1""".stripMargin).get.collect().head
     assert(latest.getTimestamp(0).getTime == 1378022400000L + 999L * 3600000L)
     assert(c.execute("SELECT * FROM default.student_entry_events LIMIT 20").get.count() == 20)
+  }
+
+  test("stored parts: a MergeTree table is read from its stored parts until a sweep frees them") {
+    val cutoff = "2013-09-02 12:00:00"
+    val c = new ClickHouseSql(spark,
+      _ => EventsSource.syntheticKafkaFrameCoarse(spark, 2000L, 37, 4))
+    c.executeAll(Seq(
+      ClickHouseDemo.queueDdl, ClickHouseDemo.eventsDdl, ClickHouseDemo.eventsMv,
+      ClickHouseDemo.granularDdl, ClickHouseDemo.granularMv(cutoff),
+      ClickHouseDemo.granularBackfill(cutoff),
+      ClickHouseDemo.dailyDdl, ClickHouseDemo.dailyMv(cutoff),
+      ClickHouseDemo.dailyBackfill(cutoff)))
+    val q = "SELECT count() AS n, sum(points) AS p FROM student_entry_events"
+    val first = answer(c.execute(q).get)
+    // the next statement reads the part the first one computed: the
+    // statement's own view bookkeeping must not drop it
+    val second = c.execute(q).get
+    assert(stored(second), "the second read re-ran the extraction instead of scanning the stored part")
+    assert(answer(second) == first)
+    val merge = c.execute(ClickHouseDemo.dailyMergeQuery).get
+    val merged = answer(merge)
+    assert(stored(merge), "the *Merge select re-ran the MV/backfill legs")
+    // the shared sweep frees every part; reads recompute the same rows
+    graft.GraftSession.sweepCaches(spark)
+    val after = c.execute(q).get
+    assert(!stored(after), "the sweep left a part stored")
+    assert(answer(after) == first)
+    assert(answer(c.execute(ClickHouseDemo.dailyMergeQuery).get) == merged)
+    graft.GraftSession.sweepCaches(spark)
+  }
+
+  test("stored parts: a table is stored from its second reading statement on") {
+    val c = new ClickHouseSql(spark, _ => EventsSource.syntheticKafkaFrame(spark, 2000L, 4))
+    c.executeAll(Seq(ClickHouseDemo.queueDdl, ClickHouseDemo.eventsDdl, ClickHouseDemo.eventsMv))
+    val q = "SELECT room, count() AS n FROM student_entry_events GROUP BY room"
+    val first = c.execute(q).get
+    assert(!stored(first), "the table's only reader paid for storing every column")
+    val rows = answer(first)
+    val second = c.execute(q).get
+    assert(stored(second), "the second reader left the part unstored")
+    assert(answer(second) == rows)
+    graft.GraftSession.sweepCaches(spark)
+  }
+
+  private def stored(df: org.apache.spark.sql.DataFrame): Boolean =
+    df.queryExecution.withCachedData.exists(
+      _.isInstanceOf[org.apache.spark.sql.execution.columnar.InMemoryRelation])
+
+  private def answer(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSet
+
+  test("the Step-2.3 extraction parses each message once") {
+    val records = EventsSource.syntheticKafkaFrame(spark, 100L, 2)
+    val c = new ClickHouseSql(spark, _ => records)
+    c.execute(ClickHouseDemo.queueDdl)
+    c.execute(ClickHouseDemo.eventsDdl)
+    val select = "(?s)AS\\s+(SELECT.*)".r.findFirstMatchIn(ClickHouseDemo.eventsMv).get.group(1)
+    val view = "entry_events_queue"
+    records.select(col("value").cast("string").as("message")).createOrReplaceTempView(view)
+    try {
+      val plan = spark.sql(c.translateQuery(select, tupleOwner = Some("student_entry_events")))
+        .queryExecution.optimizedPlan
+      val parses = plan.expressions.flatMap(_.collect {
+        case j: org.apache.spark.sql.catalyst.expressions.JsonToStructs => j.canonicalized
+      }).distinct
+      assert(parses.size == 1, s"${parses.size} distinct JSON parses of one message")
+    } finally spark.catalog.dropTempView(view)
   }
 
   test("the Kafka-engine MV is continuous: streaming the queue through the translated MV equals the dialect table") {
