@@ -11,289 +11,14 @@ import org.apache.spark.sql.SparkSession
   * time as a normal timing).
   */
 object Bench {
-  // Headline set: the scale-sensitive operators (scans+joins+aggs, the
-  // shingle-join dedups, ANN, sessionization windows).
-  val headline: Seq[String] = Seq(
-    "q1_pricing", "q3_shipping", "q5_region_revenue", "q_top_customers",
-    "attendance_daily", "sessionize", "q_asof_join",
-    "dedup_minhash_lsh", "dedup_ngram_jaccard", "dedup_embedding", "dedup_simhash",
-    "ann_topk", "text_quality", "text_fingerprint",
-    // round-2 widening (no r1 counterpart in BENCH_r01)
-    "q_argmax", "q_retention", "q_window_funnel", "dedup_normalized",
-    // round-3 widening
-    "q_pivot", "q_cube", "q_histogram", "text_tfidf",
-    // round-4 honesty: the slowest operators belong in the headline too
-    "dedup_clusters", "pipeline_clean_corpus", "ann_lsh", "ann_ivf",
-    // round-4 widening (incl. the streaming MV run and the in-query
-    // bucketize+join — both do real work and both get timed)
-    "streaming_points_by_type", "q_semi_join", "q_distinct_users",
-    // the colocated key is split into its two phases (r8 probe couldn't
-    // adjudicate a write-vs-join regression while one number timed both):
-    // wh_bucketize_write pays the layout, wh_colocated_join reuses it and
-    // times ONLY the exchange-free join
-    "q_moving_sum", "wh_bucketize_write", "wh_colocated_join",
-    "q_ntile", "multimodal_audio_windows",
-    "jdbc_sink_roundtrip",
-    // round-5 widening
-    "text_repetition", "q_corr", "pipeline_decontaminate",
-    "text_pii_redact", "streaming_dedup", "ann_pq",
-    "pipeline_pack", "wh_partition_prune", "q_grouping_sets", "ann_ivfpq",
-    // round-6 widening (stored-state merge incl. its state-table write;
-    // the MV cutover incl. its streaming run + backfill)
-    "wh_agg_state_merge", "streaming_backfill_cutover",
-    // round-7 widening (the zorder key includes its range-write)
-    "q_session_window", "pipeline_decontaminate_bloom", "text_perplexity",
-    "wh_zorder_range", "pipeline_contrastive_pairs",
-    // round-8 widening (ref_points_by_house times the JSON wire parse;
-    // emb_covariance times the one-pass moments aggregate)
-    "text_charstats", "ref_points_by_house", "emb_covariance", "emb_pca",
-    "q_decayed_sum", "q_audience_overlap", "streaming_session_window",
-    // format legs (orc key includes its write; csv times the wire parse)
-    "wh_orc_roundtrip", "ref_ingest_csv",
-    // round-8 continuation (the compaction key includes both the
-    // fragmented write and the compacting rewrite; the merge key times
-    // the union+collapse)
-    "wh_replacing_merge", "wh_compaction", "q_fill_gaps", "q_event_gaps",
-    // asymmetric containment runs the prefix⋈full shingle join; the
-    // evolution key includes both generation writes + the merged read
-    "dedup_containment", "wh_schema_evolution",
-    // the sketch-state key includes the state write + the merge read;
-    // percent_rank runs the two-pass range-partitioned global rank
-    "wh_sketch_state_merge", "q_percent_rank",
-    // the salted shuffle join IS the timed work (hot 5-value key spread
-    // over 8 salts; hinted away from broadcast)
-    "q_skew_join",
-    // interval-bucketed range join (equi-join + residual, never BNLJ)
-    "q_range_join",
-    // perceptual-hash image near-dup: decode-stage hashing + band join
-    "multimodal_phash",
-    // curriculum assignment: quality scan + the two-pass prefix sum
-    "pipeline_curriculum",
-    // exact sliding uniques via the membership-explode inversion
-    "q_sliding_distinct",
-    // the streamed CDC fold: staging writes + two micro-batches + state
-    "streaming_replacing_merge",
-    // sign-annihilation merge: union + one tiny-key algebraic aggregate
-    "wh_collapsing_merge",
-    // TTL key includes the partitioned write + the dir drop + the read
-    "wh_ttl_expire",
-    // cohort matrix: membership distinct + co-keyed cohort join
-    "q_cohort_matrix",
-    // zipf: vocabulary agg + the two-pass global rank + exact moments
-    "text_zipf",
-    // the stream-stream interval join: two watermarked sides + join state
-    "streaming_interval_join",
-    // scene cuts: decode-stage frame hashing + keyed lag differencing
-    "multimodal_scene_cuts",
-    // NDJSON export/import round-trip (includes the text write)
-    "ref_export_ndjson",
-    // chained conditional mins (three co-keyed agg+join rounds)
-    "q_sequence_match",
-    // map-side regex canonicalization + host rollup
-    "text_url_normalize",
-    // dictionary encode: layout build (dict + fact rewrite) + int-key agg
-    "wh_dictionary_encode",
-    // bloom skip index: 16-file layout + per-file index build + point read
-    "wh_bloom_skip_index",
-    // BPE pair counting: within-word pair explode + tiny-key aggregate
-    "text_bpe_pairs",
-    // temperature mixture: two doc passes + a 5-key rollup
-    "pipeline_mix_temperature",
-    // int8 quantization: one map-side HOF pass over every vector
-    "emb_int8_quantize",
-    // LOCF fill: the dense-calendar stitch + one keyed window
-    "q_interpolate_fill",
-    // weighted median: bucket-then-refine (coarse histogram picks the
-    // pivot bucket; the exact scan runs inside that bucket only)
-    "q_quantile_exact_weighted",
-    // late-data semantics: staging writes + 3 micro-batches + state
-    "streaming_late_data",
-    // segment-then-stitch positive-delta accumulation
-    "q_deltasum",
-    // three quartiles off one shared bucket-then-refine pass
-    "q_quantiles_weighted",
-    // Spearman over collapsed rank codes (two value equi-joins)
-    "q_rank_corr",
-    // projection build (two partial-agg passes + writes) + routed read
-    "wh_projection",
-    // stratified hash holdout: langId pass + per-row bucket compare
-    "pipeline_split",
-    // fractional repetition: langId pass + map-side sequence explode
-    "pipeline_repeat_upsample",
-    // the statistical aggregates: one count/moment shuffle each
-    "q_entropy", "q_cramers_v", "q_welch_ttest",
-    // bitmap state build (bucketed construct + write) + OR-merge read
-    "wh_bitmap_state_merge",
-    // three partial-sum part writes + the key-grouped merge read
-    "wh_summing_merge",
-    // sweep line: orderkey join + day collapse + distributed prefix sum
-    "q_max_intersections",
-    // mutation: range layout write + stats pass + the surgical rewrite
-    "wh_mutation_delete",
-    // AUC: one score-count shuffle + the prefix sum over the score domain
-    "q_auc",
-    // KS: same shuffle, both CDFs over ONE shared range exchange
-    "q_ks_test",
-    // LIMIT 3 BY customer: the bounded-heap TopKPerKeyExec, no sort
-    "q_limit_by",
-    // repeated-substring spans: gram-df counts + keyed island windows
-    "text_dup_spans",
-    // the PRODUCTION pruned ANN configs (own-bucket probe, nprobe=2,
-    // bounded rerank): the checked ann_* keys moved to their exhaustive
-    // calibration configs in round 9 (provably == brute force, SQL
-    // oracle), so the configs a user would actually ship get their own
-    // bench-only timings here — the judge sees both the verified shape
-    // and the pruned shape's cost, per round
-    "ann_lsh_pruned", "ann_ivf_pruned", "ann_pq_pruned", "ann_ivfpq_pruned",
-    // round-9 continuation: the -If battery / bit folds / capped
-    // distinct / Markov rollup (one or two small exchanges each)
-    "q_cond_agg", "q_bit_ops", "q_uniq_upto", "q_transition_matrix",
-    // UPDATE mutation: range layout write + stats pass + surgical rewrite
-    "wh_mutation_update",
-    // pow-2 batch-shape planning: one map-side token count + tiny agg
-    "pipeline_length_buckets",
-    // dimension-sized fuzzy match (300 pairs regardless of fact scale)
-    "text_edit_distance",
-    // hashing-trick vectorizer: token explode + (doc, dim) aggregate
-    "text_hashed_bow",
-    // round-10: the headline now times the FULL query surface — the 35
-    // keys below were previously unbenched (mostly cheap scans and the
-    // r9 snapshot-commit late wave); no exclusion rule remains, every
-    // SparkEntry.queries key gets a per-round number (BenchSpec asserts
-    // the coverage stays total)
-    "attendance_granular", "dedup_cdc", "dedup_exact", "events_count",
-    "ingest_events_typed", "latest_event", "multimodal_embed_join",
-    "multimodal_framesample", "multimodal_meta", "multimodal_patches",
-    "multimodal_resize", "pipeline_train_mix", "pipeline_weighted_sample",
-    "points_by_type", "q_anti_join", "q_approx_distinct",
-    "q_approx_quantile", "q_funnel", "q_heavy_hitters", "q_linreg",
-    "q_lttb", "q_mad", "q_part_stats", "q_quantiles", "q_rollup",
-    "q_running_total", "q_sample", "q_theils_u", "q_top_spenders",
-    "ref_ingest_kafka", "text_bigrams", "text_langid", "text_tokens",
-    "text_topterms", "wh_partition_ops",
-    // round-11: the README's literal ClickHouse-SQL scripts through the
-    // dialect front-end (Step 2 house rollup; the full Step 3+4 MV chain),
-    // cluster-representative selection, and the MRL truncation QA pass
-    "ref_ch_points_by_house", "ref_ch_attendance_daily",
-    "pipeline_keep_best", "emb_matryoshka",
-    // round-11 widening: the ad-hoc dialect vocabulary (conditional/
-    // selector aggregates, LIMIT BY, time dimensions, array surface)
-    "ref_ch_conditional", "ref_ch_top_rooms", "ref_ch_daypart",
-    "ref_ch_tokens", "ref_ch_with_fill", "ref_ch_uniq_upto",
-    "ref_ch_final",
-    // round-11 widening: ExactSubstr cross-doc window dedup; daily
-    // streak islands; deterministic shuffle-and-shard
-    "dedup_substring", "q_user_streaks", "pipeline_shard",
-    // round-12: the README's JSONEachRow queue alternative through the
-    // dialect (typed from_json parse, reduced MV)
-    "ref_ch_each_row",
-    // round-12 widening: DSIR hashed-ngram selection (two ≤256-key
-    // distribution aggs + map-side scoring + top-k), SemDeDup-shaped
-    // within-bucket dedup, and the no-window rank-sum test
-    "pipeline_dsir", "dedup_semantic", "dedup_semantic_kmeans", "q_mann_whitney",
-    // round-12 continuation: BM25 probe-query retrieval (broadcast
-    // 3-term scoring join + quantized per-doc sum + constant-k top-20)
-    // and cosine radius search (broadcast queries, map-side τ filter,
-    // no rank/agg anywhere)
-    "text_bm25", "ann_range",
-    // binary-quantization cascade: packed sign words, hamming64
-    // shortlist via the bounded heap, broadcast re-fetch + exact rerank;
-    // and the distributed-GD classifier filter (3 gradient passes, each
-    // one narrow scan into a ≤257-key map-side partial aggregate)
-    "ann_hamming", "pipeline_classifier_filter",
-    // fixed-point PageRank: one cached pre-partitioned edge build, then
-    // 5 Pregel-shaped iterations (rank shuffle + ≤V-key agg each); and
-    // the frozen-merge BPE encode (HOF merge loop per DISTINCT word)
-    "q_pagerank", "text_bpe_encode",
-    // Large-Star/Small-Star connected components (8 alternations over a
-    // non-increasing edge set) and the map-side context-window chunker
-    "q_components", "text_chunk",
-    // degree-oriented triangle counting on the co-trade projection,
-    // weighted HITS (4 L1 half-step pairs), and PMI collocations
-    "q_triangles", "q_hits", "text_collocations",
-    // per-source corpus release statistics (one scan + one rollup),
-    // capped multi-source BFS, and the log2 degree histogram
-    "pipeline_data_card", "q_seed_distance", "q_degree_dist",
-    // continuous top-k: streamed complete-state hourly aggregate with
-    // the bounded-heap rank in the serving query; Newman assortativity
-    // on the exact-moment contract
-    "streaming_topk", "q_assortativity",
-    // k-core peel: 8 degree-agg + survivor-semi-join rounds over a
-    // non-increasing edge set
-    "q_kcore",
-    // synchronous LPA: 4 label-mode rounds on the shared cached edge layout
-    "q_label_prop",
-    // Newman modularity of the LPA partition (exact moments + one chain)
-    "q_modularity",
-    // round-14: global clustering coefficient (oriented triangle count +
-    // exact wedge moments) and Resource-Allocation link prediction (the
-    // dmax-capped wedge self-join over the co-trade projection)
-    "q_transitivity", "q_link_predict",
-    // round-15: the DOULION sampled tier beside the exact triangle pair
-    // (deterministic 1/4 coin, exact count on the sample, 64x scale-up)
-    // and the N-round BPE trainer over the vocabulary-sized histogram
-    "q_triangles_approx", "text_bpe_train",
-    // round-16: the per-node DOULION report (same sampled edge set,
-    // per-vertex census + floor), the train→apply BPE loop (shared
-    // cached vocabulary histogram), the stratified priority-sampling
-    // reservoir (bounded per-stratum heap), and the IVF nprobe sweep
-    // (one index build, cells calibration points)
-    "q_triangles_approx_nodes", "text_bpe_apply", "q_reservoir",
-    "ann_recall_curve",
-    // round-17: the reservoir's streaming sibling (mapGroupsWithState
-    // bounded heap per stratum, one state shuffle) and the IVF-PQ
-    // refinement-axis sweep (one index build + the exact-top5 pass,
-    // then candidate-sized aggregates)
-    "streaming_reservoir", "ann_ivfpq_rerank_curve",
-    // round-18: the compression-axis sweep (m — PQ code bytes/vector),
-    // closing the retrieval family's third knob: shared coarse build +
-    // exact baseline, per-m ADC legs unioned into one job
-    "ann_ivfpq_m_curve",
-    // round-19: the granularity-axis sweep (cells — probed corpus
-    // fraction ~nprobe/cells, the scan-bandwidth knob), completing all
-    // four knobs: shared PQ artifacts + exact baseline + one ADC pass
-    // over the distinct candidate union, per-cells coarse legs only
-    "ann_ivfpq_cells_curve")
+  /** Every key of [[SparkEntry.keys]] in its declared order: the checked
+    * keys and the bench-only timing phases. */
+  val headline: Seq[String] = SparkEntry.keys.map(_.name)
 
-  /** Bench-only phase keys layered over [[SparkEntry.queries]]:
-    * `wh_bucketize_write` pays the colocated layout write so the
-    * `wh_colocated_join` entry that follows times ONLY the exchange-free
-    * join (the returned DF is a 1-row marker for the shared count()
-    * harness). These are timing phases, not checkable operators — they
-    * deliberately do NOT appear in the driver's correctness surface. */
+  /** [[SparkEntry.queries]] plus the bench-only phases, each through the
+    * same cache-sweeping wrapper. */
   val benchQueries: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame] =
-    SparkEntry.queries ++ Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame](
-      "wh_bucketize_write" -> ((s: SparkSession, d: String) => {
-        operators.Warehouse.bucketizeOrders(s, d, buckets = 8, prefix = "whq")
-        s.range(1).toDF("ok")
-      }),
-      // the shipped pruned index configs (defaults): recall-floor specs
-      // own their accuracy contract, this phase owns their cost
-      "ann_lsh_pruned" -> ((s: SparkSession, d: String) => operators.Similarity.lshTopK(s, d)),
-      "ann_ivf_pruned" -> ((s: SparkSession, d: String) => operators.Similarity.ivfTopK(s, d)),
-      "ann_pq_pruned" -> ((s: SparkSession, d: String) => operators.Similarity.pqTopK(s, d)),
-      "ann_ivfpq_pruned" -> ((s: SparkSession, d: String) => operators.Similarity.ivfPqTopK(s, d)),
-      // the capped-k-means production bucketing of dedup_semantic (the
-      // pruned-config pattern: SemanticKMeansSpec owns the cap/soundness
-      // contract, this phase owns its cost)
-      "dedup_semantic_kmeans" -> ((s: SparkSession, d: String) =>
-        operators.Dedup.semanticKMeans(s, d)),
-      // the IVF recall-vs-cost calibration sweep: Round16Spec owns the
-      // monotonicity/endpoint contract, this phase owns its cost
-      "ann_recall_curve" -> ((s: SparkSession, d: String) =>
-        operators.Similarity.ivfRecallCurve(s, d)),
-      // the IVF-PQ rerank-depth sweep (the composition's second knob):
-      // Round17Spec owns the monotonicity/∞-endpoint contract
-      "ann_ivfpq_rerank_curve" -> ((s: SparkSession, d: String) =>
-        operators.Similarity.ivfpqRerankCurve(s, d)),
-      // the IVF-PQ code-size sweep (the third knob — m bytes/vector):
-      // Round18Spec owns the monotonicity + rerank-curve-row equality
-      "ann_ivfpq_m_curve" -> ((s: SparkSession, d: String) =>
-        operators.Similarity.ivfpqMCurve(s, d)),
-      // the IVF-PQ granularity sweep (the fourth knob — coarse cells):
-      // Round19Spec owns the triple crossing-point equality
-      "ann_ivfpq_cells_curve" -> ((s: SparkSession, d: String) =>
-        operators.Similarity.ivfpqCellsCurve(s, d)))
+    SparkEntry.keys.map(k => k.name -> k.run).toMap
 
   /** One query's noise evidence, carried in the bench artifact so a reader
     * can tell VM contention from cross-query JVM state without re-running:

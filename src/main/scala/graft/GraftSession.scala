@@ -16,42 +16,31 @@ import graft.plans.{TopKPerKeyExtension, TopKPerKeyRewrite, TopKPerKeyStrategy}
   */
 object GraftSession {
 
-  /** Injects graft's native Catalyst functions (codegen'd, no UDF overhead). */
+  /** graft's native Catalyst functions (codegen'd, no UDF overhead), each
+    * declared once: SQL name, expression class, and the builder from the
+    * call's arguments. [[Extensions]] injects them into the sessions graft
+    * builds; [[registerFunctions]] adds them to a session it did not. */
+  val nativeFunctions: Seq[(String, Class[_ <: Expression], Seq[Expression] => Expression)] = Seq(
+    ("hamming64", classOf[HammingDistance64], c => HammingDistance64(c(0), c(1))),
+    ("dot_product", classOf[DotProduct], c => DotProduct(c(0), c(1))),
+    ("simhash64", classOf[SimHash64], c => SimHash64(c.head)),
+    ("minhash32", classOf[MinHash32], c => MinHash32(c.head)),
+    ("cdc_chunks", classOf[CdcChunks], c => CdcChunks(c.head)),
+    ("gram_stats", classOf[GramStats],
+      c => GramStats(c(0), c(1).eval().asInstanceOf[Number].intValue)),
+    ("char_stats", classOf[CharStats], c => CharStats(c.head)),
+    ("sorted_intersect_count", classOf[SortedIntersectCount],
+      c => SortedIntersectCount(c(0), c(1))))
+
+  private def functionDescriptions =
+    nativeFunctions.map { case (name, cls, build) =>
+      (new FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), build)
+    }
+
+  /** Injects [[nativeFunctions]] and the TopKPerKey rewrite. */
   class Extensions extends (SparkSessionExtensions => Unit) {
     override def apply(ext: SparkSessionExtensions): Unit = {
-      ext.injectFunction(
-        (new FunctionIdentifier("hamming64"),
-          new ExpressionInfo(classOf[HammingDistance64].getName, "hamming64"),
-          (children: Seq[Expression]) => HammingDistance64(children(0), children(1))))
-      ext.injectFunction(
-        (new FunctionIdentifier("dot_product"),
-          new ExpressionInfo(classOf[DotProduct].getName, "dot_product"),
-          (children: Seq[Expression]) => DotProduct(children(0), children(1))))
-      ext.injectFunction(
-        (new FunctionIdentifier("simhash64"),
-          new ExpressionInfo(classOf[SimHash64].getName, "simhash64"),
-          (children: Seq[Expression]) => SimHash64(children.head)))
-      ext.injectFunction(
-        (new FunctionIdentifier("minhash32"),
-          new ExpressionInfo(classOf[MinHash32].getName, "minhash32"),
-          (children: Seq[Expression]) => MinHash32(children.head)))
-      ext.injectFunction(
-        (new FunctionIdentifier("cdc_chunks"),
-          new ExpressionInfo(classOf[CdcChunks].getName, "cdc_chunks"),
-          (children: Seq[Expression]) => CdcChunks(children.head)))
-      ext.injectFunction(
-        (new FunctionIdentifier("gram_stats"),
-          new ExpressionInfo(classOf[GramStats].getName, "gram_stats"),
-          (children: Seq[Expression]) => GramStats(children(0),
-            children(1).eval().asInstanceOf[Number].intValue)))
-      ext.injectFunction(
-        (new FunctionIdentifier("char_stats"),
-          new ExpressionInfo(classOf[CharStats].getName, "char_stats"),
-          (children: Seq[Expression]) => CharStats(children.head)))
-      ext.injectFunction(
-        (new FunctionIdentifier("sorted_intersect_count"),
-          new ExpressionInfo(classOf[SortedIntersectCount].getName, "sorted_intersect_count"),
-          (children: Seq[Expression]) => SortedIntersectCount(children(0), children(1))))
+      functionDescriptions.foreach(ext.injectFunction)
       ext.injectOptimizerRule(_ => TopKPerKeyRewrite)
       ext.injectPlannerStrategy(_ => TopKPerKeyStrategy)
     }
@@ -223,62 +212,8 @@ object GraftSession {
     * driver-owned session handed to SparkEntry.queries). Idempotent. */
   def registerFunctions(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    val hammingId = new FunctionIdentifier("hamming64")
-    if (!reg.functionExists(hammingId)) {
-      reg.registerFunction(
-        hammingId,
-        new ExpressionInfo(classOf[HammingDistance64].getName, "hamming64"),
-        (children: Seq[Expression]) => HammingDistance64(children(0), children(1)))
-    }
-    val dotId = new FunctionIdentifier("dot_product")
-    if (!reg.functionExists(dotId)) {
-      reg.registerFunction(
-        dotId,
-        new ExpressionInfo(classOf[DotProduct].getName, "dot_product"),
-        (children: Seq[Expression]) => DotProduct(children(0), children(1)))
-    }
-    val simhashId = new FunctionIdentifier("simhash64")
-    if (!reg.functionExists(simhashId)) {
-      reg.registerFunction(
-        simhashId,
-        new ExpressionInfo(classOf[SimHash64].getName, "simhash64"),
-        (children: Seq[Expression]) => SimHash64(children.head))
-    }
-    val minhashId = new FunctionIdentifier("minhash32")
-    if (!reg.functionExists(minhashId)) {
-      reg.registerFunction(
-        minhashId,
-        new ExpressionInfo(classOf[MinHash32].getName, "minhash32"),
-        (children: Seq[Expression]) => MinHash32(children.head))
-    }
-    val cdcId = new FunctionIdentifier("cdc_chunks")
-    if (!reg.functionExists(cdcId)) {
-      reg.registerFunction(
-        cdcId,
-        new ExpressionInfo(classOf[CdcChunks].getName, "cdc_chunks"),
-        (children: Seq[Expression]) => CdcChunks(children.head))
-    }
-    val gramId = new FunctionIdentifier("gram_stats")
-    if (!reg.functionExists(gramId)) {
-      reg.registerFunction(
-        gramId,
-        new ExpressionInfo(classOf[GramStats].getName, "gram_stats"),
-        (children: Seq[Expression]) => GramStats(children(0),
-          children(1).eval().asInstanceOf[Number].intValue))
-    }
-    val charId = new FunctionIdentifier("char_stats")
-    if (!reg.functionExists(charId)) {
-      reg.registerFunction(
-        charId,
-        new ExpressionInfo(classOf[CharStats].getName, "char_stats"),
-        (children: Seq[Expression]) => CharStats(children.head))
-    }
-    val sicId = new FunctionIdentifier("sorted_intersect_count")
-    if (!reg.functionExists(sicId)) {
-      reg.registerFunction(
-        sicId,
-        new ExpressionInfo(classOf[SortedIntersectCount].getName, "sorted_intersect_count"),
-        (children: Seq[Expression]) => SortedIntersectCount(children(0), children(1)))
+    functionDescriptions.foreach { case (id, info, build) =>
+      if (!reg.functionExists(id)) reg.registerFunction(id, info, build)
     }
     TopKPerKeyExtension.install(spark)
   }

@@ -19,6 +19,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * The signature values are internal to candidate generation (pairs are
   * exact-verified afterwards), so the mixing function does not need to
   * match any other engine.
+  *
+  * Null elements are skipped: a null is not a feature, and reading its
+  * slot gives 0 under `eval` but whatever the column buffer holds under
+  * codegen over a columnar scan.
   */
 case class MinHash32(child: Expression) extends UnaryExpression {
 
@@ -36,15 +40,17 @@ case class MinHash32(child: Expression) extends UnaryExpression {
     val sig = Array.fill(32)(Long.MaxValue)
     var i = 0
     while (i < n) {
-      val h = arr.getLong(i)
-      var p = 0
-      while (p < 32) {
-        var z = h ^ (-7046029254386353131L * (p + 1))
-        z = (z ^ (z >>> 30)) * -4658895280553007687L
-        z = (z ^ (z >>> 27)) * -7723592293110705685L
-        z = z ^ (z >>> 31)
-        if (z < sig(p)) sig(p) = z
-        p += 1
+      if (!arr.isNullAt(i)) {
+        val h = arr.getLong(i)
+        var p = 0
+        while (p < 32) {
+          var z = h ^ (-7046029254386353131L * (p + 1))
+          z = (z ^ (z >>> 30)) * -4658895280553007687L
+          z = (z ^ (z >>> 27)) * -7723592293110705685L
+          z = z ^ (z >>> 31)
+          if (z < sig(p)) sig(p) = z
+          p += 1
+        }
       }
       i += 1
     }
@@ -64,6 +70,7 @@ case class MinHash32(child: Expression) extends UnaryExpression {
          |long[] $sig = new long[32];
          |java.util.Arrays.fill($sig, Long.MAX_VALUE);
          |for (int $i = 0; $i < $n; $i++) {
+         |  if ($a.isNullAt($i)) continue;
          |  long $h = $a.getLong($i);
          |  for (int $p = 0; $p < 32; $p++) {
          |    long $z = $h ^ (-7046029254386353131L * ($p + 1));

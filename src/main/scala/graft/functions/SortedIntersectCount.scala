@@ -23,7 +23,12 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * branch-predictable long compares inside whole-stage codegen.
   *
   * Both inputs MUST be sorted ascending with no duplicates (the shingle
-  * arrays are `array_distinct` products); the count is then exact.
+  * arrays are `array_distinct` products); the count is then exact. Off
+  * that precondition nothing fails: the result is the number of equal
+  * pairs the walk meets. On sorted input with duplicates that is the
+  * multiset intersection (Σ min of the two multiplicities, so [1,1] and
+  * [1,1] give 2); on unsorted input it can undercount ([3,1,2] and
+  * [1,2,3] give 1), but never exceeds min(|a|, |b|).
   * Null ELEMENTS are skipped (a null is not a value and never matches
   * anything — the walk checks isNullAt before reading, because
   * ArrayData.getLong on a null slot would silently read 0 and inflate

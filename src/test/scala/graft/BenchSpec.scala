@@ -36,7 +36,7 @@ class BenchSpec extends SparkSpec {
     // SparkEntrySpec's "every headline name resolves to a query" test)
     val missing = SparkEntry.queries.keySet -- Bench.headline.toSet
     assert(missing.isEmpty,
-      s"unbenched keys (add them to Bench.headline): ${missing.toSeq.sorted.mkString(", ")}")
+      s"unbenched keys: ${missing.toSeq.sorted.mkString(", ")}")
   }
 
   test("headline JSON stays well-formed with no errors") {

@@ -18,9 +18,9 @@ class SparkEntrySpec extends AnyFunSuite {
   }
 
   test("every headline name resolves to a query, exactly once") {
-    // Bench.run silently skips unknown names (queries.get(...).foreach),
-    // so a typo'd headline entry would drop a key from the official
-    // timing without any error — pin the containment here instead
+    // both derive from SparkEntry.keys, so this holds by construction;
+    // it still guards: Bench.run silently skips unknown names, and a
+    // duplicated key name would collapse two keys into one map entry
     val unknown = Bench.headline.toSet.diff(Bench.benchQueries.keySet)
     assert(unknown.isEmpty, s"headline without query: $unknown")
     val dups = Bench.headline.groupBy(identity).collect { case (k, vs) if vs.size > 1 => k }

@@ -36,4 +36,15 @@ class SortedIntersectCountSpec extends SparkSpec {
       assert(e.eval(null) == a.toSet.intersect(b.toSet).size.toLong)
     }
   }
+
+  test("off its precondition the walk counts the equal pairs it meets") {
+    graft.GraftSession.registerFunctions(spark)
+    def count(a: String, b: String): Long =
+      spark.sql(s"SELECT sorted_intersect_count(array($a), array($b))").collect().head.getLong(0)
+    // sorted with duplicates: the multiset intersection, not the set's 2
+    assert(count("1L, 1L, 2L", "1L, 1L, 1L, 2L") == 3L)
+    // unsorted: 3 passes 1 and 2 on the right before it matches, so the
+    // common 1 and 2 are never compared — 1, not the set's 3
+    assert(count("3L, 1L, 2L", "1L, 2L, 3L") == 1L)
+  }
 }

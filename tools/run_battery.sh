@@ -32,9 +32,12 @@ cd "$(dirname "$0")/.."
 SCALE="$1"
 PASSES="${2:-3}"
 CONTROL="${3:-}"
-# DIR empty = graft.Bench's default
+# DIR empty = graft.Bench's default. sf0.1 runs at the heap the tier-1
+# test command derives for this host: half of MemTotal, clamped to 2-8 g.
 case "$SCALE" in
-  sf0.1) DIR=""; MEM=89g ;;
+  sf0.1) DIR=""
+         MEM=$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' \
+           /proc/meminfo 2>/dev/null || echo 2g) ;;
   sf1)   DIR=data/sf1; MEM=8g ;;
   sf5)   DIR=data/sf5; MEM=8g ;;
   sf10)  DIR=data/sf10; MEM=12g ;;
