@@ -41,18 +41,17 @@ object Bench {
       busyS: Double, stealS: Double, iowaitS: Double,
       blkFiles: Long, blkMB: Double)
 
-  /** Times each named query via `SparkEntry.queries`; a throwing query
-    * lands in the error map (exception class + message), not the timings.
-    * When `instrument` is set, each timing also gets a [[QueryProbe]]. */
+  /** Times each named query from `queries`; a throwing query lands in the
+    * error map (exception class + message), not the timings. Each timing
+    * also gets a [[QueryProbe]]. */
   def run(spark: SparkSession, sfDir: String, names: Seq[String],
-      queries: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame] = SparkEntry.queries,
-      instrument: Boolean = false)
+      queries: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame])
       : (Seq[(String, Double)], Seq[(String, String)], Seq[(String, QueryProbe)]) = {
     val timings = Seq.newBuilder[(String, Double)]
     val errors = Seq.newBuilder[(String, String)]
     val probes = Seq.newBuilder[(String, QueryProbe)]
-    val listener = if (instrument) Some(new TaskMetricsProbe) else None
-    listener.foreach(spark.sparkContext.addSparkListener)
+    val listener = new TaskMetricsProbe
+    spark.sparkContext.addSparkListener(listener)
     try {
       names.foreach { name =>
         queries.get(name).foreach { fn =>
@@ -68,17 +67,17 @@ object Bench {
           // analog of sweepCaches' blocking unpersist discipline. Wall
           // times are unaffected (the timer starts after); the cost is
           // untimed inter-key milliseconds.
-          if (instrument) System.gc()
-          listener.foreach(_.snapshotAndReset()) // drop the previous query's tail
-          val cpu0 = if (instrument) ProcStat.read() else null
+          System.gc()
+          listener.snapshotAndReset() // drop the previous query's tail
+          val cpu0 = ProcStat.read()
           val t0 = System.nanoTime()
           try {
             fn(spark, sfDir).count()
             timings += name -> (System.nanoTime() - t0) / 1e9
             // Diagnostics in their OWN try: a probe-side failure must never
             // reclassify a successful query as an error (it already timed).
-            try listener.foreach { l =>
-              val snap = l.snapshotAndReset()
+            try {
+              val snap = listener.snapshotAndReset()
               val cpu = ProcStat.read() - cpu0
               val blk = DirStat.blockMgrDirs(spark).map(DirStat.of)
                 .foldLeft(DirStat.Stat(0, 0))((a, b) =>
@@ -98,7 +97,7 @@ object Bench {
           }
         }
       }
-    } finally listener.foreach(spark.sparkContext.removeSparkListener)
+    } finally spark.sparkContext.removeSparkListener(listener)
     (timings.result(), errors.result(), probes.result())
   }
 
@@ -182,9 +181,12 @@ object Bench {
       f"[bench] host cpu over the run: busy=${d.busyS}%.1fs idle=${d.idleS}%.1fs " +
         f"iowait=${d.iowaitS}%.1fs steal=${d.stealS}%.1fs")
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").trim.toInt
+  /** The bench JVM's set-up, shared with [[Probe]] so a probe replays the
+    * bench's conditions by construction: the session, one warm-up read and
+    * the TIMED shingle-layout build. Returns the session and the layout's
+    * timing (empty when the build failed — committed evidence must never
+    * claim a layout that never built). */
+  private[graft] def start(sfDir: String, cpus: Int): (SparkSession, Seq[(String, Double)]) = {
     val spark = GraftSession.builder(s"local[$cpus]", cpus)
       .config("spark.sql.warehouse.dir",
         graft.GraftSession.scratchDir("graft-bench-warehouse").toString)
@@ -210,9 +212,16 @@ object Bench {
       System.err.println(s"[bench] shingle layout skipped: ${e.getMessage}")
       Seq.empty
     }
+    (spark, layout)
+  }
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").trim.toInt
+    val (spark, layout) = start(sfDir, cpus)
     val cpu0 = ProcStat.read()
     val (timings, errors, probes) =
-      run(spark, sfDir, headline, queries = benchQueries, instrument = true)
+      run(spark, sfDir, headline, benchQueries)
     val hostCpu = ProcStat.read() - cpu0
     reportEnv(hostCpu)
     // Sidecar evidence file (committed next snapshot → readable per round);

@@ -26,28 +26,9 @@ object Probe {
     val passes = flags.collectFirst { case f if f.startsWith("--passes=") =>
       f.stripPrefix("--passes=").toInt }.getOrElse(1)
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt)
-      .config("spark.sql.warehouse.dir",
-        graft.GraftSession.scratchDir("graft-probe-warehouse").toString)
-      // same shuffle-file reclamation nudge as Bench.main (the probe
-      // must replay the bench's JVM conditions to bisect its readings)
-      .config("spark.cleaner.periodicGC.interval", "60s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.read.parquet(s"$dir/region.parquet").count() // JVM/codegen warmup
-    val t0 = System.nanoTime()
-    // sidecar omits the key when the build failed (Bench.main discipline:
-    // committed evidence must never claim a layout that never built)
-    val layoutTiming = try {
-      operators.Warehouse.materializeShingles(spark, dir, buckets = cpus.toInt)
-      val w = (System.nanoTime() - t0) / 1e9
-      println(f"PROBE shingle_layout_build   $w%8.2f s")
-      Seq("shingle_layout_build" -> w)
-    } catch { case e: Throwable =>
-      System.err.println(s"[probe] shingle layout skipped: ${e.getMessage}")
-      Seq.empty[(String, Double)]
-    }
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").trim.toInt
+    val (spark, layoutTiming) = Bench.start(dir, cpus)
+    layoutTiming.foreach { case (k, w) => println(f"PROBE $k%-24s $w%8.2f s") }
     val names = if (names0.nonEmpty) names0.toSeq else Bench.headline
     // benchQueries, NOT SparkEntry.queries: the bench-only phase keys
     // (wh_bucketize_write, the pruned ANN configs) must run here too —
@@ -63,7 +44,7 @@ object Probe {
     var sidecar: Option[String] = None
     (1 to passes).foreach { pass =>
       val (timings, errors, probes) =
-        Bench.run(spark, dir, names, Bench.benchQueries, instrument = true)
+        Bench.run(spark, dir, names, Bench.benchQueries)
       if (pass == 1) sidecar = Some(
         Bench.renderProbeJson(layoutTiming ++ timings, probes, dir))
       val probeMap = probes.toMap

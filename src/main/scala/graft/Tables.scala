@@ -63,11 +63,7 @@ final case class Tables(spark: SparkSession, dir: String) {
     * microseconds — exactly what a native TimestampType read would hold. */
   def events: DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = t("events")
-    df.schema("ts").dataType match {
-      case LongType => df.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-      case _ => df
-    }
+    Tables.withMicrosTs(t("events"))
   }
   def documents: DataFrame = scattered(t("documents"), "documents")
   def embeddings: DataFrame = scattered(t("embeddings"), "embeddings")
@@ -82,4 +78,12 @@ object Tables {
     * rewritten layout). Mirrors what Warehouse.dropShingleLayout does for
     * the shingle registry. */
   def clearSplitCounts(): Unit = splitCounts.clear()
+
+  /** The `ts` rebuild for an events frame, batch or stream: a nanos long
+    * (the TIMESTAMP(NANOS) layout read under nanosAsLong) becomes a
+    * microsecond timestamp; a native timestamp column passes through. */
+  def withMicrosTs(events: DataFrame): DataFrame = events.schema("ts").dataType match {
+    case LongType => events.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
+    case _ => events
+  }
 }

@@ -635,10 +635,10 @@ object Graph {
     * [[pageRank]]'s scaladoc drops its own.
     *
     * Scale shape mirrors [[pageRank]]: the weighted edge list is built
-    * from ONE lineitem⨝orders scan and cached TWICE — once partitioned
-    * by customer, once by supplier — because the two half-steps join on
-    * alternating keys and each must stream its cached layout against a
-    * shuffle_hash build of the node-sized score table; totals ride a
+    * from ONE lineitem⨝orders scan and cached ONCE, partitioned by
+    * customer; the two half-steps join on alternating keys, each against a
+    * shuffle_hash build of the node-sized score table, so the hub
+    * half-step re-exchanges the edge stream by supplier; totals ride a
     * broadcast single-row crossJoin. No collect anywhere; node and edge
     * state stays distributed. */
   def hits(spark: SparkSession, dir: String, iters: Int = 4): DataFrame = {
@@ -669,32 +669,12 @@ object Graph {
     // checkpointed score table is shuffled each half-step.
     val nShuf = spark.conf.get("spark.sql.shuffle.partitions").toInt
     val byC = graft.GraftSession.trackCache(pairs.repartition(nShuf, col("c")))
-    // MEMORY/SHUFFLE TRADE, conf-selectable (r14 verdict item — the sf10
-    // full-pass OOM headroom question). Two layouts: DOUBLE caches the
-    // edge set TWICE (byC for the authority half-step, byS for the hub
-    // half-step) so neither half-step ever exchanges the edge stream;
-    // SINGLE drops the second copy — the hub half-step then re-exchanges
-    // the edge stream by `s` once per iteration (4 edge exchanges/run)
-    // for half the cached-edge block footprint. A/B at sf10 under the
-    // 8 g bench JVM (solo, data/sf10, measured r14): double 48.4 s /
-    // 9.9 GB shuffle vs single 50.2 s / 12.2 GB (spill accounting
-    // ~18-19 GB both ways — the memoryBytesSpilled artifact, see
-    // repeatTradeSym's note). The DECIDER (the verdict's "keep whichever
-    // completes the full pass" rule): inside the 197-key sf10 pass the
-    // double layout OOM'd the 8 g JVM at this key even after the r13
-    // eager raw-cache release AND the r14 inter-key System.gc — the
-    // second edge copy is exactly the margin — while single completes.
-    // So SINGLE is the default: ~4% solo wall for half the footprint is
-    // the right trade at bench-like memory-per-core;
-    // `spark.graft.hits.doubleLayout=true` restores the double layout
-    // for memory-rich clusters (results identical either way —
-    // Round14Spec pins equality; at web scale the cached copy is
-    // edge-sized while the exchange is per-iteration — rerun the A/B at
-    // YOUR edge count before flipping it).
-    val doubleLayout =
-      spark.conf.getOption("spark.graft.hits.doubleLayout").exists(_.toBoolean)
-    val byS = if (!doubleLayout) null
-      else graft.GraftSession.trackCache(byC.repartition(nShuf, col("s")))
+    // ONE cached edge layout (by `c`): the hub half-step re-exchanges the
+    // edge stream by `s` once per iteration rather than caching a second
+    // edge copy by `s`. A/B at sf10 under the 8 g bench JVM (measured
+    // r14): double 48.4 s / 9.9 GB shuffle vs single 50.2 s / 12.2 GB —
+    // but inside the full sf10 pass the second edge copy OOM'd the JVM at
+    // this key, so ~4% solo wall buys half the cached-edge footprint.
     val custs = graft.GraftSession.trackCache(byC.select("c").distinct())
     val nC = custs.count()
     // r14 advice (medium): the hub init mass is the integer m/nC — a
@@ -767,7 +747,7 @@ object Graph {
       // OOM at this key (r13, disclosed in SURVEY §6)
       aRaw.unpersist()
       val hRaw = graft.GraftSession.trackCache(
-        (if (doubleLayout) byS else byC).join(auth.hint("shuffle_hash"), "s")
+        byC.join(auth.hint("shuffle_hash"), "s")
           .groupBy("c").agg(sum(expr("a * w")).as("raw")))
       guardRaw(hRaw, "hub")
       hub = hRaw

@@ -1,9 +1,15 @@
 package graft.operators
 
+import java.nio.file.{Files, Path, Paths}
+import java.nio.file.attribute.FileTime
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupStateTimeout, Trigger}
+import org.apache.spark.sql.types.{DoubleType, LongType, StructType}
+import graft.{GraftSession, Tables}
+import graft.streaming.{EventPipeline, ParquetUpsertSink}
 
 /** Spark-first re-expression of the reference's Kafka → ClickHouse pipeline
   * (anelook/apache-kafka-clickhouse-demo, README.rst Steps 2-4).
@@ -80,6 +86,140 @@ object RefPipeline {
       .limit(1)
       .select("event_id", "user_id", "event_type")
 
+  // ---- Bounded-stream scaffolding: the nine streaming_* keys ----
+  //
+  // SERIAL-ONLY contract: a key pins session-wide confs for its run
+  // ([[withConfs]], restored after) and its memory sink has one fixed view
+  // name, so concurrent invocations on one session — or a concurrent query
+  // reading the same view — would interfere. The bench/verify/spec
+  // harnesses are all serial per session by design.
+
+  private val ShufflePartitions = "spark.sql.shuffle.partitions"
+
+  /** Streaming state partitions are sized to STATE VOLUME, not core count:
+    * each stateful operator materializes one state store per shuffle
+    * partition, with a checkpoint+fsync per batch — at 32 partitions a plan
+    * with two stateful operators pays 64 stores of fixed overhead for a few
+    * thousand keys. 8 keeps the same result (hash partitioning only moves
+    * keys) at a quarter of the store cost; a production deployment raises
+    * it with its actual key cardinality. */
+  private val StatePartitions = ShufflePartitions -> "8"
+
+  /** Runs `body` with each conf set, then puts every key back as it was:
+    * a key that was set gets its old value, a key that was unset is unset
+    * again. */
+  private def withConfs[A](spark: SparkSession, confs: (String, String)*)(body: => A): A = {
+    val set = spark.conf.getAll
+    val prev = confs.map { case (k, _) => k -> set.get(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** Runs a bounded stream to its end: an AvailableNow trigger processes
+    * everything the source holds at start (in as many micro-batches as the
+    * source's per-trigger cap asks), then the query stops — the form in
+    * which a stream is checkable against its batch rendition. */
+  private def runToEnd(writer: DataStreamWriter[_]): Unit =
+    writer.trigger(Trigger.AvailableNow()).start().awaitTermination()
+
+  /** Runs `df` to its end into the in-memory table `sink` under output
+    * `mode`, and returns the table. The view is dropped first, so a shared
+    * session may re-run the key. */
+  private def memoryTable(df: DataFrame, sink: String, mode: String): DataFrame = {
+    val spark = df.sparkSession
+    spark.catalog.dropTempView(sink)
+    runToEnd(df.writeStream.format("memory").queryName(sink).outputMode(mode))
+    spark.table(sink)
+  }
+
+  /** A parquet file stream over `glob` (file streams need an explicit
+    * schema). `basePath` is the directory the files sit in. A single file
+    * must be spelled as a one-character glob (`events.[p]arquet`):
+    * FileStreamSource force-sets basePath := path for NON-glob paths
+    * (clobbering the option), and batch resolution then rejects a file
+    * basePath; the glob skips the override and lets the directory through.
+    * `filesPerBatch` > 0 caps the files one micro-batch takes; the source
+    * takes files oldest mtime first. */
+  private def parquetStream(spark: SparkSession, schema: StructType, basePath: String,
+      glob: String, filesPerBatch: Int = 0): DataFrame = {
+    val reader = spark.readStream.schema(schema).option("basePath", basePath)
+    (if (filesPerBatch > 0) reader.option("maxFilesPerTrigger", filesPerBatch.toString)
+     else reader).parquet(glob)
+  }
+
+  /** [[parquetStream]] over the top-level data files of a stage dir
+    * written by [[stageParts]]. */
+  private def stagedStream(spark: SparkSession, schema: StructType, stage: Path,
+      filesPerBatch: Int): DataFrame =
+    parquetStream(spark, schema, stage.toString, s"$stage/*.[p]arquet", filesPerBatch)
+
+  /** The raw footer schema of `dir/events.parquet`. Its `ts` is parquet
+    * TIMESTAMP(NANOS), which Spark reads only as a long, under nanosAsLong
+    * (set here, as [[Tables.events]] sets it). */
+  private def eventsSchema(spark: SparkSession, dir: String): StructType = {
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    spark.read.parquet(s"$dir/events.parquet").schema
+  }
+
+  /** The events table as a file stream — the stand-in for the Kafka source
+    * ([[graft.sources.EventsSource.kafkaStream]]; the connector jar is
+    * unavailable offline) — with the batch reader's `ts` rebuild. */
+  private def eventsStream(spark: SparkSession, dir: String): DataFrame =
+    Tables.withMicrosTs(
+      parquetStream(spark, eventsSchema(spark, dir), dir, s"$dir/events.[p]arquet"))
+
+  /** Stages `df` into `stage` for a file stream, as `files` parquet parts
+    * named `name_000.parquet`, `name_001.parquet`, …, all with mtime
+    * `mtimeMs`. The file source takes files oldest mtime first, so
+    * distinct mtimes order staged groups into micro-batches. The parts are
+    * written into a build dir and then moved up, so the stage's top level
+    * holds only finished data files. `pad` copies the first part until the
+    * group holds `files` files; it suits sentinel groups only, since each
+    * copy repeats the part's rows. */
+  private def stageParts(stage: Path, df: DataFrame, name: String, files: Int,
+      mtimeMs: Long, pad: Boolean = false): Unit = {
+    val build = stage.resolve(s"build_$name")
+    // one part needs no shuffle; a group spreads its write over `files` tasks
+    (if (files == 1) df.coalesce(1) else df.repartition(files))
+      .write.mode("overwrite").parquet(build.toString)
+    val parts = {
+      val ls = Files.list(build)
+      try ls.iterator().asScala.toSeq
+        .filter(_.getFileName.toString.endsWith(".parquet")).sortBy(_.getFileName.toString)
+      finally ls.close()
+    }
+    def dest(i: Int) = stage.resolve(f"${name}_$i%03d.parquet")
+    val n = if (pad) files max parts.size else parts.size
+    parts.zipWithIndex.foreach { case (part, i) => Files.move(part, dest(i)) }
+    (parts.size until n).foreach(i => Files.copy(dest(0), dest(i)))
+    (0 until n).foreach(i => Files.setLastModifiedTime(dest(i), FileTime.fromMillis(mtimeMs)))
+  }
+
+  /** 2030-01-01 in epoch nanos: far past every corpus event. */
+  private val Sentinel2030Nanos = 1893456000000000000L
+
+  /** One far-future SENTINEL event in the raw footer schema: read after the
+    * corpus, it advances the watermark past every real event, so append
+    * mode emits what the corpus left open. Its user id is Long.MinValue,
+    * unambiguous at any corpus (a real corpus could legitimately use -1 or
+    * NULL, which must flow through like batch). `ts` follows
+    * [[Tables.withMicrosTs]]'s schema guard: nanos long in this layout, a
+    * native timestamp if the corpus is ever rewritten with one. */
+  private def sentinelEvent(spark: SparkSession, schema: StructType, tsNanos: Long): DataFrame =
+    spark.range(1).select(schema.fields.toIndexedSeq.map { f =>
+      (f.name, f.dataType) match {
+        case ("ts", LongType) => lit(tsNanos).as("ts")
+        case ("ts", _) => lit(new java.sql.Timestamp(tsNanos / 1000000L)).as("ts")
+        case ("user_id", LongType) => lit(Long.MinValue).as("user_id")
+        case ("value", DoubleType) => lit(0.0d).as("value")
+        case (n, dt) => lit(null).cast(dt).as(n)
+      }
+    }: _*)
+
   /** The reference's core story — a STREAM maintaining the MV aggregate
     * (README.rst Step 1-2: kcat → Kafka topic → engine table → MV) — as a
     * driver-checkable query: the events file streams through the typed
@@ -91,30 +231,12 @@ object RefPipeline {
     *
     * Scale shape: the streaming aggregation keeps one state row per group
     * (5 event types) and runs partial aggregation per micro-batch; the file
-    * source is the stand-in for the Kafka source ([[graft.sources
-    * .EventsSource.kafkaStream]] — connector jar unavailable offline). */
-  def streamingPointsByType(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // file streams need an explicit schema: take it from the parquet footer
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
-    val sink = "graft_streaming_points"
-    spark.catalog.dropTempView(sink) // shared sessions may re-run the query
-    // events.parquet is a single FILE. FileStreamSource force-sets
-    // basePath := path for NON-glob paths (clobbering the user option),
-    // and then batch resolution rejects a file basePath — so the path is
-    // spelled as a one-character glob, which skips the override and lets
-    // the explicit directory basePath through.
-    val q = spark.readStream.schema(schema).option("basePath", dir)
-      .parquet(s"$dir/events.[p]arquet")
+    * source is the Kafka stand-in ([[eventsStream]]). */
+  def streamingPointsByType(spark: SparkSession, dir: String): DataFrame =
+    memoryTable(eventsStream(spark, dir)
       .groupBy("event_type")
-      .agg(round(sum("value"), 4).as("total_points"), count(lit(1)).as("n"))
-      .writeStream.format("memory").queryName(sink)
-      .outputMode("complete")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(sink)
-  }
+      .agg(round(sum("value"), 4).as("total_points"), count(lit(1)).as("n")),
+      "graft_streaming_points", "complete")
 
   /** Streaming dedup-on-ingest as a CHECKED key: the stateful
     * `dropDuplicates` operator — the streaming half of the dedup family,
@@ -133,37 +255,17 @@ object RefPipeline {
     * `dropDuplicatesWithinWatermark` on the event-time column — same
     * plan, state trimmed to the lateness horizon. */
   def streamingDistinctUsers(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
-    val sink = "graft_streaming_dedup"
-    spark.catalog.dropTempView(sink)
-    // streaming state partitions are sized to STATE VOLUME, not core
-    // count: this plan has two stateful operators (dedup + agg), each
-    // materializing one state store per shuffle partition with per-batch
-    // checkpoint+fsync — at 32 partitions that is 64 stores of fixed
-    // overhead for a few thousand keys. 8 keeps the same result (hash
-    // partitioning only moves keys) at a quarter of the store cost; a
-    // production deployment raises it with actual key cardinality.
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
-      val q = spark.readStream.schema(schema).option("basePath", dir)
-        .parquet(s"$dir/events.[p]arquet")
-        .select("user_id", "event_type")
-        // oracle parity: count(DISTINCT user_id) ignores NULL keys, but the
-        // dedup state would keep a NULL user as one key and count it —
-        // exclude it explicitly (a no-op on the generated corpus)
-        .filter(col("user_id").isNotNull)
-        .dropDuplicates("user_id", "event_type")
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n_users"))
-        .writeStream.format("memory").queryName(sink)
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-    spark.table(sink)
+    val users = eventsStream(spark, dir)
+      .select("user_id", "event_type")
+      // oracle parity: count(DISTINCT user_id) ignores NULL keys, but the
+      // dedup state would keep a NULL user as one key and count it —
+      // exclude it explicitly (a no-op on the generated corpus)
+      .filter(col("user_id").isNotNull)
+      .dropDuplicates("user_id", "event_type")
+      .groupBy("event_type")
+      .agg(count(lit(1)).as("n_users"))
+    // two stateful operators (dedup + agg), one state store each per partition
+    withConfs(spark, StatePartitions)(memoryTable(users, "graft_streaming_dedup", "complete"))
   }
 
   /** Continuous top-k serving (`streaming_topk`) — the dashboard pattern
@@ -176,7 +278,7 @@ object RefPipeline {
     * engine's MV + `LIMIT n BY` reader is the same split).
     *
     * Scale shape: streaming state = (hours × types) rows, partitions
-    * sized to state volume (the [[streamingDistinctUsers]] note); the
+    * sized to state volume ([[StatePartitions]]); the
     * serving rank runs on the bounded-heap TopKPerKey rewrite (constant
     * k per window, never a full sort). The hour key is exposed as epoch
     * SECONDS (`unix_timestamp` of the window start — exact integer,
@@ -184,30 +286,10 @@ object RefPipeline {
     * batch rendition of the same aggregate + rank; equality proves the
     * streamed state converged to the batch answer. */
   def streamingTopK(spark: SparkSession, dir: String, k: Int = 3): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
-    val sink = "graft_streaming_topk"
-    spark.catalog.dropTempView(sink)
-    // ts arrives as TIMESTAMP(NANOS) → LongType under nanosAsLong (the
-    // sentinel-builder branch in streamingLateData documents the same)
-    val tsCol = schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType => expr("timestamp_micros(ts div 1000)")
-      case _ => col("ts")
-    }
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
-      val q = spark.readStream.schema(schema).option("basePath", dir)
-        .parquet(s"$dir/events.[p]arquet")
-        .groupBy(window(tsCol, "1 hour").as("w"), col("event_type"))
-        .agg(count(lit(1)).as("n"))
-        .writeStream.format("memory").queryName(sink)
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-    spark.table(sink)
+    val hourly = eventsStream(spark, dir)
+      .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
+      .agg(count(lit(1)).as("n"))
+    withConfs(spark, StatePartitions)(memoryTable(hourly, "graft_streaming_topk", "complete"))
       .select(unix_timestamp(col("w.start")).as("hour_s"), col("event_type"), col("n"))
       .withColumn("rn", row_number().over(
         Window.partitionBy("hour_s").orderBy(col("n").desc, col("event_type"))))
@@ -268,66 +350,44 @@ object RefPipeline {
     * can feed a MULTI-file fixture (one micro-batch per file under
     * `maxFilesPerTrigger=1`) and prove the heap's admit/evict survives
     * batch boundaries, which the single-file driver table exercises only
-    * as one batch.
-    *
-    * SERIAL-ONLY contract (the house streaming-key convention —
-    * [[streamingTopK]] and siblings share it): the run uses one fixed
-    * memory-sink view name and temporarily pins the session-wide
-    * `spark.sql.shuffle.partitions` (restored in the finally), so
-    * concurrent invocations on one session — or a concurrent query
-    * reading the same view — would interfere. The bench/verify/spec
-    * harnesses are all serial per session by design. */
+    * as one batch. Serial-only, like every streaming key (the
+    * bounded-stream scaffolding note). */
   private[graft] def streamingReservoirFrom(spark: SparkSession, glob: String,
-      basePath: String, schema: org.apache.spark.sql.types.StructType,
-      k: Int): DataFrame = {
+      basePath: String, schema: StructType, k: Int): DataFrame = {
     import spark.implicits._
-    val sink = "graft_streaming_reservoir"
-    spark.catalog.dropTempView(sink)
-    // state-volume-sized shuffle partitions (the streamingDistinctUsers
-    // note): one state store per partition for a handful of strata
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
     // best-first = the batch rank order; the PQ dequeues the MAX under
     // its ordering, so ordering by (-priority, doc_id) makes the head
     // the reservoir's current WORST member — the one k+1 admission tests
     val best = Ordering.by[RsvDoc, (Long, Long)](d => (-d.priority, d.doc_id))
-    try {
-      val q = spark.readStream.schema(schema).option("basePath", basePath)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(glob)
-        .select(col("lang"), col("doc_id"), col("n_chars"),
-          expr(Pipeline.ReservoirPriorityExpr).as("priority"))
-        .as[RsvIn]
-        .groupByKey(_.lang)
-        .mapGroupsWithState[RsvState, RsvOut](
-          org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout) {
-          (lang, docs, state) =>
-            val st = state.getOption.getOrElse(RsvState(0L, Seq.empty))
-            val heap = collection.mutable.PriorityQueue.empty[RsvDoc](best)
-            st.items.foreach(heap.enqueue(_))
-            var seen = st.n_seen
-            docs.foreach { d =>
-              seen += 1
-              val cand = RsvDoc(d.doc_id, d.n_chars, d.priority)
-              if (heap.size <= k) heap.enqueue(cand) // hold k+1, the τ slot
-              else if (best.lt(cand, heap.head)) { // beats the worst member
-                heap.dequeue(); heap.enqueue(cand)
-              }
+    val sample = parquetStream(spark, schema, basePath, glob, filesPerBatch = 1)
+      .select(col("lang"), col("doc_id"), col("n_chars"),
+        expr(Pipeline.ReservoirPriorityExpr).as("priority"))
+      .as[RsvIn]
+      .groupByKey(_.lang)
+      .mapGroupsWithState[RsvState, RsvOut](GroupStateTimeout.NoTimeout) {
+        (lang, docs, state) =>
+          val st = state.getOption.getOrElse(RsvState(0L, Seq.empty))
+          val heap = collection.mutable.PriorityQueue.empty[RsvDoc](best)
+          st.items.foreach(heap.enqueue(_))
+          var seen = st.n_seen
+          docs.foreach { d =>
+            seen += 1
+            val cand = RsvDoc(d.doc_id, d.n_chars, d.priority)
+            if (heap.size <= k) heap.enqueue(cand) // hold k+1, the τ slot
+            else if (best.lt(cand, heap.head)) { // beats the worst member
+              heap.dequeue(); heap.enqueue(cand)
             }
-            // dequeueAll drains worst-first under `best`; reverse to rank order
-            val items = heap.dequeueAll.reverse.toSeq
-            state.update(RsvState(seen, items))
-            val tau = if (items.size == k + 1) items(k).priority else 0L
-            RsvOut(lang, seen, items.take(k).map(d =>
-              RsvOutDoc(d.doc_id, d.n_chars, d.priority, math.max(d.n_chars, tau))))
-        }
-        .writeStream.format("memory").queryName(sink)
-        .outputMode("update")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-    spark.table(sink)
+          }
+          // dequeueAll drains worst-first under `best`; reverse to rank order
+          val items = heap.dequeueAll.reverse.toSeq
+          state.update(RsvState(seen, items))
+          val tau = if (items.size == k + 1) items(k).priority else 0L
+          RsvOut(lang, seen, items.take(k).map(d =>
+            RsvOutDoc(d.doc_id, d.n_chars, d.priority, math.max(d.n_chars, tau))))
+      }
+    // a handful of strata: one state store per partition
+    withConfs(spark, StatePartitions)(
+      memoryTable(sample.toDF(), "graft_streaming_reservoir", "update"))
       .withColumn("mx", max("n_seen").over(Window.partitionBy("lang")))
       .where(col("n_seen") === col("mx"))
       .select(col("lang"), explode(col("docs")).as("d"))
@@ -361,35 +421,14 @@ object RefPipeline {
     * while the stream only ever holds post-cutover state — exactly why
     * the reference invented the trick. */
   def mvBackfillCutover(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val cutover = lit("2024-01-16").cast("date")
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
-    val tmpRoot = graft.GraftSession.scratchDir("graft-mv-cutover")
-    registerTempCleanup(tmpRoot)
-    val sink = tmpRoot.resolve("mv").toString
-    val raw = spark.readStream.schema(schema).option("basePath", dir)
-      .parquet(s"$dir/events.[p]arquet")
-    // same TIMESTAMP(NANOS) rebuild Tables.events does for the batch reader
-    val typed =
-      if (schema("ts").dataType == org.apache.spark.sql.types.LongType)
-        raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-      else raw
-    val mv = typed
+    val sink = GraftSession.scratchDir("graft-mv-cutover").resolve("mv").toString
+    val mv = eventsStream(spark, dir)
       .filter(to_date(col("ts")) >= cutover) // the MV's future-timestamp WHERE
       .groupBy(to_date(col("ts")).as("day"), col("event_type"))
       .agg(round(sum("value"), 4).as("total"), count(lit(1)).as("n"))
-    // Streaming state partitions sized to state volume (days x types ≈ 75
-    // keys), not core count — same rationale and numbers as
-    // [[streamingDistinctUsers]]: at 32 partitions the stateful agg pays 32
-    // state-store checkpoints+fsyncs per batch for a handful of keys.
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
-      val q = graft.streaming.ParquetUpsertSink.attach(mv, sink)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    // state volume: days x types ≈ 75 keys
+    withConfs(spark, StatePartitions)(runToEnd(ParquetUpsertSink.attach(mv, sink)))
     // Zero batches written (possible when no row lands past the cutover):
     // the read-back would die on schema inference — the MV half is then
     // legitimately empty, with the MV's own schema.
@@ -397,12 +436,12 @@ object RefPipeline {
       .exists(_.exists(f => f.isDirectory && f.getName.startsWith("batch=")))
     val mvHalf =
       if (wroteBatches)
-        graft.streaming.ParquetUpsertSink
+        ParquetUpsertSink
           .read(spark, sink, Seq("day", "event_type"))
           .select("day", "event_type", "total", "n")
       else
         spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-          org.apache.spark.sql.types.StructType(
+          StructType(
             mv.schema.filter(f => Seq("day", "event_type", "total", "n").contains(f.name))))
     val backfill = Tables(spark, dir).events // the one-time backfill INSERT
       .filter(to_date(col("ts")) < cutover)
@@ -410,12 +449,6 @@ object RefPipeline {
       .agg(round(sum("value"), 4).as("total"), count(lit(1)).as("n"))
     mvHalf.unionByName(backfill)
   }
-
-  /** JVM-exit cleanup for per-invocation temp sink dirs (a lazy result
-    * frame still reads the files later in the session, so eager deletion
-    * is wrong; exit-time sweep stops repeat invocations leaking). */
-  private def registerTempCleanup(p: java.nio.file.Path): Unit =
-    graft.TempSweep.register(p)
 
   /** The "JDBC sink" north star as a CHECKED key: the grouped-sum MV is
     * upserted TWICE (the second apply is a replay — idempotence is what
@@ -506,8 +539,8 @@ object RefPipeline {
     * Append mode only emits a session once the watermark passes its end,
     * and a bounded AvailableNow run ends with the watermark at the last
     * REAL event — so the input is staged into a temp dir as two files:
-    * the corpus, then one far-future SENTINEL event (user_id −1, year
-    * 2030, explicitly later mtime). `maxFilesPerTrigger=1` + oldest-first
+    * the corpus, then one far-future [[sentinelEvent]] (year 2030,
+    * explicitly later mtime). `maxFilesPerTrigger=1` + oldest-first
     * file order makes the corpus set the session state in batch 1, the
     * sentinel advance the watermark in batch 2, and the trailing no-data
     * batch flush every real session; the sentinel's own still-open
@@ -518,96 +551,30 @@ object RefPipeline {
     * BOUNDS it on an unbounded stream, where the batch rendition would
     * hold all sessions). */
   def streamingSessionWindow(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
-    val stage = graft.GraftSession.scratchDir("graft-stream-sessions")
-    registerTempCleanup(stage)
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(s"$dir/events.parquet"), stage.resolve("events.parquet"))
-    // one sentinel row in the raw footer schema: 2030-01-01, under a user
-    // id unambiguous at any corpus (Long.MinValue — a real corpus could
-    // legitimately use -1 or NULL, which must flow through like batch).
-    // ts mirrors Tables.events' schema guard: nanos long in this layout,
-    // a native timestamp if the corpus is ever rewritten with one.
-    val sentinel = spark.range(1).select(schema.fields.toIndexedSeq.map { f =>
-      (f.name, f.dataType) match {
-        case ("ts", org.apache.spark.sql.types.LongType) =>
-          lit(1893456000000000000L).as("ts") // nanos
-        case ("ts", _) => lit("2030-01-01 00:00:00").cast("timestamp").as("ts")
-        case ("user_id", org.apache.spark.sql.types.LongType) =>
-          lit(Long.MinValue).as("user_id")
-        case ("value", org.apache.spark.sql.types.DoubleType) => lit(0.0d).as("value")
-        case (n, dt) => lit(null).cast(dt).as(n)
-      }
-    }: _*)
-    val build = stage.resolve("flush_build")
-    sentinel.coalesce(1).write.mode("overwrite").parquet(build.toString)
-    val part = {
-      import scala.jdk.CollectionConverters._
-      val ls = java.nio.file.Files.list(build)
-      try ls.iterator().asScala.find(_.getFileName.toString.endsWith(".parquet")).get
-      finally ls.close()
-    }
-    val flush = stage.resolve("zz_flush.parquet")
-    java.nio.file.Files.move(part, flush)
-    // file order is BY MODIFICATION TIME (oldest first): make the sentinel
-    // strictly later so it can never be read before the corpus (which
-    // would advance the watermark first and drop every event as late)
-    java.nio.file.Files.setLastModifiedTime(flush,
-      java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis() + 60000))
-    val raw = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .option("basePath", stage.toString)
-      .parquet(s"$stage/*.[p]arquet") // top-level data files only
-    // the Tables.events nanos conversion, behind the same schema-type
-    // guard (a native-timestamp rewrite of the corpus must keep working)
-    val typed = schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-      case _ => raw
-    }
-    val events = typed
+    val schema = eventsSchema(spark, dir)
+    val stage = GraftSession.scratchDir("graft-stream-sessions")
+    val corpus = Paths.get(s"$dir/events.parquet")
+    Files.copy(corpus, stage.resolve("events.parquet"))
+    // the sentinel's mtime is strictly later, so it can never be read
+    // before the corpus (which would advance the watermark first and drop
+    // every event as late)
+    stageParts(stage, sentinelEvent(spark, schema, Sentinel2030Nanos), "zz_flush",
+      files = 1, System.currentTimeMillis() + 60000)
+    val events = Tables.withMicrosTs(stagedStream(spark, schema, stage, filesPerBatch = 1))
       .select(col("user_id"), col("value"),
         timestamp_seconds(unix_timestamp(col("ts"))).as("t"))
       .withWatermark("t", "1 second")
-    // streaming state partitions = shuffle partitions at checkpoint
-    // creation, and EACH partition materializes a state store per batch
-    // (the round-5 sizing lesson): size to STATE VOLUME, not core count —
-    // and state volume here scales with the corpus (sessions stay open
-    // until the sentinel closes them), so the partition count scales
-    // with the corpus file size between the 8-partition floor (small
-    // state; per-store overhead would dominate) and the core count
-    // (r12: the fixed 8 made each sf5 store carry ~600k sessions on one
-    // task — wall and GC both paid for it). The input side gets a
-    // smaller split target for the same reason: the corpus is staged as
-    // ONE parquet file, and the default 128 MB split would hand batch
-    // 1's whole scan to a single task.
-    val corpusBytes = java.nio.file.Files.size(
-      java.nio.file.Paths.get(s"$dir/events.parquet"))
+    // state volume here scales with the corpus (sessions stay open until
+    // the sentinel closes them), so the partition count scales with the
+    // corpus file size between the 8-partition floor (small state;
+    // per-store overhead would dominate) and the core count (r12: a fixed
+    // 8 made each sf5 store carry ~600k sessions on one task — wall and GC
+    // both paid for it). The input side gets a smaller split target for
+    // the same reason: the corpus is staged as ONE parquet file, and the
+    // default 128 MB split would hand batch 1's whole scan to a single
+    // task.
     val cores = spark.sparkContext.defaultParallelism.toLong
-    val stateParts = math.max(8L, math.min(cores, corpusBytes / (4L << 20)))
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    val prevSplit = spark.conf.get("spark.sql.files.maxPartitionBytes")
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val changelogKey =
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-    val prevProvider = spark.conf.getOption(providerKey)
-    val prevChangelog = spark.conf.getOption(changelogKey)
-    spark.conf.set("spark.sql.shuffle.partitions", stateParts.toString)
-    spark.conf.set("spark.sql.files.maxPartitionBytes", (8L << 20).toString)
-    // RocksDB state store (bundled with Spark): session state here is
-    // corpus-sized (most events are their own session until the sentinel
-    // closes them), and the default heap-map store made GC the largest
-    // single cost of this key at sf5 — off-heap state is exactly what
-    // the provider knob exists for, and what a production deployment of
-    // a corpus-sized session job would run
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    // changelog checkpointing: commit = the batch's delta, not a full
-    // SST snapshot per store per batch — the right durability/latency
-    // trade for a 3-batch bounded replay and the production default for
-    // large state
-    spark.conf.set(changelogKey, "true")
+    val stateParts = math.max(8L, math.min(cores, Files.size(corpus) / (4L << 20)))
     // PARQUET sink, not the memory sink (r12): closed sessions scale
     // with the corpus (most events are their own session on this event
     // cadence), and the memory sink collects every emitted row onto the
@@ -615,26 +582,27 @@ object RefPipeline {
     // measured GC majority of this key. The file sink keeps the result
     // distributed; the returned frame is a plain scan of it.
     val outDir = stage.resolve("sessions_out")
-    try {
-      val q = sessionWindowCore(events) // THE claim: the identical function
+    withConfs(spark,
+      ShufflePartitions -> stateParts.toString,
+      "spark.sql.files.maxPartitionBytes" -> (8L << 20).toString,
+      // RocksDB state store (bundled with Spark): session state here is
+      // corpus-sized (most events are their own session until the
+      // sentinel closes them), and the default heap-map store made GC the
+      // largest single cost of this key at sf5 — off-heap state is
+      // exactly what the provider knob exists for, and what a production
+      // deployment of a corpus-sized session job would run
+      "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+      // changelog checkpointing: commit = the batch's delta, not a full
+      // SST snapshot per store per batch — the right durability/latency
+      // trade for a 3-batch bounded replay and the production default
+      // for large state
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true") {
+      runToEnd(sessionWindowCore(events) // THE claim: the identical function
         .writeStream.format("parquet")
         .option("path", outDir.toString)
         .option("checkpointLocation", stage.resolve("sessions_ckpt").toString)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prev)
-      spark.conf.set("spark.sql.files.maxPartitionBytes", prevSplit)
-      prevProvider match {
-        case Some(p) => spark.conf.set(providerKey, p)
-        case None => spark.conf.unset(providerKey)
-      }
-      prevChangelog match {
-        case Some(p) => spark.conf.set(changelogKey, p)
-        case None => spark.conf.unset(changelogKey)
-      }
+        .outputMode("append"))
     }
     // drop EXACTLY the sentinel's (never-closed, but defensive) session —
     // null-safe so NULL-user sessions flow through like the batch key
@@ -662,35 +630,14 @@ object RefPipeline {
     * unbounded batch join over a growing log can never promise.
     * Timestamps leave as exact epoch micros (the oracle convention). */
   def streamingIntervalJoin(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
-    val sink = "graft_streaming_interval_join"
-    spark.catalog.dropTempView(sink)
-    val raw = spark.readStream.schema(schema).option("basePath", dir)
-      .parquet(s"$dir/events.[p]arquet")
-    val typed = schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-      case _ => raw
-    }
-    val joined = graft.streaming.EventPipeline
-      .purchaseAttribution(graft.streaming.EventPipeline.typed(typed))
+    val joined = EventPipeline
+      .purchaseAttribution(EventPipeline.typed(eventsStream(spark, dir)))
       .select(col("purchase_id"), col("user_id"),
         round(col("value"), 4).as("value"),
         unix_micros(col("signup_ts")).as("signup_us"),
         unix_micros(col("purchase_ts")).as("purchase_us"))
-    // join state partitions sized to state volume, not core count — the
-    // same store-per-partition-per-batch economics as streamingDedup
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
-      val q = joined.writeStream.format("memory").queryName(sink)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-    spark.table(sink)
+    withConfs(spark, StatePartitions)(
+      memoryTable(joined, "graft_streaming_interval_join", "append"))
   }
 
   /** Watermark late-data semantics as a CHECKED key
@@ -728,12 +675,8 @@ object RefPipeline {
     * any scale. The sentinel's own still-open window never emits in
     * append mode; the guard filter is defensive only. */
   def streamingLateData(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
-    val sink = "graft_streaming_late"
-    spark.catalog.dropTempView(sink)
-    val stage = graft.GraftSession.scratchDir("graft-stream-late")
-    registerTempCleanup(stage)
+    val schema = eventsSchema(spark, dir)
+    val stage = GraftSession.scratchDir("graft-stream-late")
     val raw0 = spark.read.schema(schema).parquet(s"$dir/events.parquet")
     val now = System.currentTimeMillis()
     // STAGED IN PARALLEL (r12): the corpus slice used to be coalesce(1)'d
@@ -751,89 +694,29 @@ object RefPipeline {
     // slice always observes the 2030 watermark even if a group spills
     // into the next batch (fewer-than-groupFiles part files at tiny sf).
     val groupFiles = 8
-    def writeSlice(df: org.apache.spark.sql.DataFrame, name: String, mtimeOffsetMs: Long): Unit = {
-      val build = stage.resolve(s"build_$name")
-      df.repartition(groupFiles).write.mode("overwrite").parquet(build.toString)
-      val parts = {
-        import scala.jdk.CollectionConverters._
-        val ls = java.nio.file.Files.list(build)
-        try ls.iterator().asScala.toSeq
-          .filter(_.getFileName.toString.endsWith(".parquet")).sortBy(_.getFileName.toString)
-        finally ls.close()
-      }
-      parts.zipWithIndex.foreach { case (part, i) =>
-        val dest = stage.resolve(f"${name}_$i%03d.parquet")
-        java.nio.file.Files.move(part, dest)
-        java.nio.file.Files.setLastModifiedTime(dest,
-          java.nio.file.attribute.FileTime.fromMillis(now + mtimeOffsetMs))
-      }
-    }
-    // sentinel groups are PADDED to exactly groupFiles (Spark's
-    // non-partitioned writer eagerly creates a file per task, so the
-    // repartitioned 1-row slice already leaves groupFiles part files —
-    // 7 empty — and this pad is a no-op; the guard keeps the batch-
-    // boundary proof independent of that writer detail): a sentinel
-    // group of >= groupFiles files ends strictly before the batch that
-    // first contains a late file, because the indices differ by
-    // groupFiles + 1 — so the late slice always observes the sentinel
-    // watermark, never the corpus one
-    def padGroup(name: String, mtimeOffsetMs: Long): Unit = {
-      val first = stage.resolve(f"${name}_000.parquet")
-      (1 until groupFiles).foreach { i =>
-        val dest = stage.resolve(f"${name}_$i%03d.parquet")
-        if (!java.nio.file.Files.exists(dest)) {
-          java.nio.file.Files.copy(first, dest)
-          java.nio.file.Files.setLastModifiedTime(dest,
-            java.nio.file.attribute.FileTime.fromMillis(now + mtimeOffsetMs))
-        }
-      }
-    }
-    writeSlice(raw0.filter(col("event_id") % 50 =!= 0), "a_ontime", 0L)
-    def sentinel(tsNanos: Long) = spark.range(1).select(schema.fields.toIndexedSeq.map { f =>
-      (f.name, f.dataType) match {
-        case ("ts", org.apache.spark.sql.types.LongType) =>
-          lit(tsNanos).as("ts")
-        case ("ts", _) =>
-          lit(new java.sql.Timestamp(tsNanos / 1000000L)).as("ts")
-        case ("user_id", org.apache.spark.sql.types.LongType) =>
-          lit(Long.MinValue).as("user_id")
-        case ("value", org.apache.spark.sql.types.DoubleType) => lit(0.0d).as("value")
-        case (n, dt) => lit(null).cast(dt).as(n)
-      }
-    }: _*)
-    writeSlice(sentinel(1893456000000000000L), "b_flush1", 60000L) // 2030-01-01
-    padGroup("b_flush1", 60000L)
-    writeSlice(sentinel(1893459600000000000L), "c_flush2", 90000L) // +1 h
-    padGroup("c_flush2", 90000L)
-    writeSlice(raw0.filter(col("event_id") % 50 === 0), "d_late", 120000L)
-    val raw = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", groupFiles.toString)
-      .option("basePath", stage.toString)
-      .parquet(s"$stage/*.[p]arquet")
-    val typed = schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-      case _ => raw
-    }
-    val agg = typed
+    // sentinel groups are PADDED to exactly groupFiles: a sentinel group
+    // of >= groupFiles files ends strictly before the batch that first
+    // contains a late file, because the indices differ by groupFiles + 1
+    // — so the late slice always observes the sentinel watermark, never
+    // the corpus one
+    def group(df: DataFrame, name: String, mtimeOffsetMs: Long, pad: Boolean = false): Unit =
+      stageParts(stage, df, name, groupFiles, now + mtimeOffsetMs, pad)
+    group(raw0.filter(col("event_id") % 50 =!= 0), "a_ontime", 0L)
+    group(sentinelEvent(spark, schema, Sentinel2030Nanos), "b_flush1", 60000L, pad = true)
+    group(sentinelEvent(spark, schema, Sentinel2030Nanos + 3600000000000L), // +1 h
+      "c_flush2", 90000L, pad = true)
+    group(raw0.filter(col("event_id") % 50 === 0), "d_late", 120000L)
+    val agg = Tables.withMicrosTs(stagedStream(spark, schema, stage, groupFiles))
       .withWatermark("ts", "30 minutes")
       .groupBy(window(col("ts"), "1 day"), col("event_type"))
       .agg(count(lit(1)).as("n_events"),
         sum(expr("cast(round(value * 100) as bigint)")).as("sum_cents"))
       .select(to_date(col("window.start")).as("day"), col("event_type"),
         col("n_events"), col("sum_cents"))
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
-      val q = agg.writeStream.format("memory").queryName(sink)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
     // defensive: the sentinel's window stays open and never emits, but a
     // changed flush policy must not silently add a 2030 row
-    spark.table(sink).filter(col("day") < lit("2029-01-01").cast("date"))
+    withConfs(spark, StatePartitions)(memoryTable(agg, "graft_streaming_late", "append"))
+      .filter(col("day") < lit("2029-01-01").cast("date"))
   }
 
   /** Streaming CDC upsert compaction as a CHECKED key
@@ -882,25 +765,10 @@ object RefPipeline {
     * the recovery claim previously assumed exactly that). */
   def streamingReplacingMerge(spark: SparkSession, dir: String): DataFrame = {
     val (base, updates) = Warehouse.replacingFrames(spark, dir)
-    val stage = graft.GraftSession.scratchDir("graft-stream-cdc")
-    registerTempCleanup(stage)
-    def stageFile(df: DataFrame, name: String, mtimeOffsetMs: Long): Unit = {
-      val build = stage.resolve(s"build_$name")
-      df.coalesce(1).write.mode("overwrite").parquet(build.toString)
-      val part = {
-        import scala.jdk.CollectionConverters._
-        val ls = java.nio.file.Files.list(build)
-        try ls.iterator().asScala.find(_.getFileName.toString.endsWith(".parquet")).get
-        finally ls.close()
-      }
-      val dst = stage.resolve(s"$name.parquet")
-      java.nio.file.Files.move(part, dst)
-      java.nio.file.Files.setLastModifiedTime(dst,
-        java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis() + mtimeOffsetMs))
-    }
-    stageFile(updates, "b_updates", 0L) // only the delta ever streams
-    val stateRoot = graft.GraftSession.scratchDir("graft-cdc-state")
-    registerTempCleanup(stateRoot)
+    val stage = GraftSession.scratchDir("graft-stream-cdc")
+    // only the delta ever streams
+    stageParts(stage, updates, "b_updates", files = 1, System.currentTimeMillis())
+    val stateRoot = GraftSession.scratchDir("graft-cdc-state")
     // the manifest: bucket -> path of that bucket's latest generation.
     // Bounded at `buckets` entries; this map IS the carry-forward — an
     // untouched bucket keeps its old pointer and its files never move.
@@ -918,51 +786,42 @@ object RefPipeline {
     persistManifest(stateRoot.resolve("seed"),
       (0 until buckets).flatMap { b =>
         val d = stateRoot.resolve(s"seed/bucket=$b")
-        if (java.nio.file.Files.isDirectory(d)) Some(b -> d.toString) else None
+        if (Files.isDirectory(d)) Some(b -> d.toString) else None
       }.toMap)
     val rewrites = scala.collection.mutable.LinkedHashMap.empty[Long, Int]
-    val raw = spark.readStream.schema(base.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$stage/*.[p]arquet")
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
-      val q = raw.writeStream
-        .foreachBatch { (batch: DataFrame, n: Long) =>
-          val s = batch.sparkSession
-          val bb = batch.withColumn("bucket",
-            pmod(col("o_orderkey"), lit(buckets)).cast("int"))
-          // touched-bucket list: bounded collect (<= `buckets` rows)
-          val touched = bb.select("bucket").distinct().collect()
-            .map(_.getInt(0)).toSeq.sorted
-          // keyed by batchId: a replayed batch OVERWRITES its own entry
-          // instead of appending a duplicate observation
-          rewrites.synchronized { rewrites.put(n, touched.size) }
-          // pointer source: newest on-disk snapshot older than this batch
-          // (n is Spark's OWN batchId, so a checkpoint-recovery replay of
-          // batch n reconstructs exactly the state its first attempt saw)
-          val ptrs = reloadReplacingMergeManifest(stateRoot.toString, beforeBatch = n)
-          // existing state FOR THE TOUCHED BUCKETS ONLY, via the manifest
-          val existing = touched.flatMap(b => ptrs.get(b).map(s.read.parquet(_)))
-            .reduceOption(_ unionByName _)
-            .getOrElse(batch.limit(0))
-          val merged = Warehouse.versionWinsCollapse(existing.unionByName(batch))
-            .withColumn("bucket", pmod(col("o_orderkey"), lit(buckets)).cast("int"))
-          // one fresh dir per (batch, bucket): partitionBy routes rows,
-          // and DISTINCT paths mean a replayed batch id is idempotent
-          // (it overwrites its own batch{n} dirs and re-persists the same
-          // snapshot, computed from the same pre-n pointers)
-          merged.write.mode("overwrite").partitionBy("bucket")
-            .parquet(stateRoot.resolve(s"batch$n").toString)
-          persistManifest(stateRoot.resolve(s"batch$n"),
-            ptrs ++ touched.map(b =>
-              b -> stateRoot.resolve(s"batch$n/bucket=$b").toString))
-          ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    val fold = stagedStream(spark, base.schema, stage, filesPerBatch = 1).writeStream
+      .foreachBatch { (batch: DataFrame, n: Long) =>
+        val s = batch.sparkSession
+        val bb = batch.withColumn("bucket",
+          pmod(col("o_orderkey"), lit(buckets)).cast("int"))
+        // touched-bucket list: bounded collect (<= `buckets` rows)
+        val touched = bb.select("bucket").distinct().collect()
+          .map(_.getInt(0)).toSeq.sorted
+        // keyed by batchId: a replayed batch OVERWRITES its own entry
+        // instead of appending a duplicate observation
+        rewrites.synchronized { rewrites.put(n, touched.size) }
+        // pointer source: newest on-disk snapshot older than this batch
+        // (n is Spark's OWN batchId, so a checkpoint-recovery replay of
+        // batch n reconstructs exactly the state its first attempt saw)
+        val ptrs = reloadReplacingMergeManifest(stateRoot.toString, beforeBatch = n)
+        // existing state FOR THE TOUCHED BUCKETS ONLY, via the manifest
+        val existing = touched.flatMap(b => ptrs.get(b).map(s.read.parquet(_)))
+          .reduceOption(_ unionByName _)
+          .getOrElse(batch.limit(0))
+        val merged = Warehouse.versionWinsCollapse(existing.unionByName(batch))
+          .withColumn("bucket", pmod(col("o_orderkey"), lit(buckets)).cast("int"))
+        // one fresh dir per (batch, bucket): partitionBy routes rows,
+        // and DISTINCT paths mean a replayed batch id is idempotent
+        // (it overwrites its own batch{n} dirs and re-persists the same
+        // snapshot, computed from the same pre-n pointers)
+        merged.write.mode("overwrite").partitionBy("bucket")
+          .parquet(stateRoot.resolve(s"batch$n").toString)
+        persistManifest(stateRoot.resolve(s"batch$n"),
+          ptrs ++ touched.map(b =>
+            b -> stateRoot.resolve(s"batch$n/bucket=$b").toString))
+        ()
+      }
+    withConfs(spark, StatePartitions)(runToEnd(fold))
     lastReplacingMergeRewrites = rewrites.toSeq.sortBy(_._1).map(_._2)
     lastReplacingMergeStateRoot = stateRoot.toString
     // assemble the final table from the newest snapshot: each bucket's
@@ -978,11 +837,11 @@ object RefPipeline {
     * (<= buckets lines), written once per generation AFTER its bucket
     * dirs are complete and its pointers advanced, so the newest snapshot
     * on disk always describes a fully-materialized state. */
-  private def persistManifest(genDir: java.nio.file.Path,
+  private def persistManifest(genDir: Path,
       manifest: scala.collection.Map[Int, String]): Unit = {
     val lines = manifest.toSeq.sortBy(_._1)
       .map { case (b, p) => s"$b\t$p" }.mkString("", "\n", "\n")
-    java.nio.file.Files.write(genDir.resolve("manifest.tsv"),
+    Files.write(genDir.resolve("manifest.tsv"),
       lines.getBytes(java.nio.charset.StandardCharsets.UTF_8))
   }
 
@@ -993,21 +852,20 @@ object RefPipeline {
     * Spec-exercised against [[lastReplacingMergeStateRoot]]. */
   private[graft] def reloadReplacingMergeManifest(stateRoot: String,
       beforeBatch: Long = Long.MaxValue): Map[Int, String] = {
-    import scala.jdk.CollectionConverters._
-    val root = java.nio.file.Paths.get(stateRoot)
-    def gen(p: java.nio.file.Path): Long = {
+    val root = Paths.get(stateRoot)
+    def gen(p: Path): Long = {
       val n = p.getFileName.toString
       if (n == "seed") -1L else n.stripPrefix("batch").toLong
     }
     val gens = {
-      val ls = java.nio.file.Files.list(root)
+      val ls = Files.list(root)
       try ls.iterator().asScala.filter(p =>
-        java.nio.file.Files.exists(p.resolve("manifest.tsv")) &&
+        Files.exists(p.resolve("manifest.tsv")) &&
           gen(p) < beforeBatch).toSeq
       finally ls.close()
     }
     val newest = gens.maxBy(gen)
-    java.nio.file.Files.readAllLines(newest.resolve("manifest.tsv")).asScala
+    Files.readAllLines(newest.resolve("manifest.tsv")).asScala
       .filter(_.nonEmpty)
       .map { l => val Array(b, p) = l.split("\t", 2); b.toInt -> p }
       .toMap

@@ -222,21 +222,6 @@ object ClickHouseDemo {
       .withColumnRenamed("sum(points)", "total_points")
   }
 
-  /** `ref_ch_attendance_daily`: Steps 2-4 end-to-end through the dialect —
-    * extraction MV, the granular attendance MV + its INSERT backfill split
-    * at the README's future-timestamp cutover, the SummingMergeTree-style
-    * daily state table (maxState/minState/avgState), and the final
-    * *Merge select. Runs on the COARSE wire frame — 37 students per
-    * class slot: coarse because the default frame's unique-per-event
-    * timestamps would make Step 3's per-(timestamp, subject) counts
-    * degenerate to 1, and 37 because it is NOT divisible by the
-    * 4-subject cycle, so slot counts VARY ({10, 9, 9, 9} rotating with
-    * slot phase) and the daily max/min/avg genuinely discriminate — at
-    * perSlot 40 every count is the constant 10 and a swapped
-    * maxMerge/minMerge translation would pass every check. The `day`
-    * column is date-normalized for the cross-engine harness (timestamp
-    * hashing is timezone-fragile between engines; ClickHouseSqlSpec
-    * asserts the verbatim select in-engine instead). */
   /** The Step-2 catalog (queue → typed table → extraction MV) that every
     * ad-hoc dialect key queries against — the state a demo user is left
     * with after the README's ingestion steps. */
@@ -392,6 +377,21 @@ object ClickHouseDemo {
         "CAST(version AS BIGINT) AS version")
   }
 
+  /** `ref_ch_attendance_daily`: Steps 2-4 end-to-end through the dialect —
+    * extraction MV, the granular attendance MV + its INSERT backfill split
+    * at the README's future-timestamp cutover, the SummingMergeTree-style
+    * daily state table (maxState/minState/avgState), and the final
+    * *Merge select. Runs on the COARSE wire frame — 37 students per
+    * class slot: coarse because the default frame's unique-per-event
+    * timestamps would make Step 3's per-(timestamp, subject) counts
+    * degenerate to 1, and 37 because it is NOT divisible by the
+    * 4-subject cycle, so slot counts VARY ({10, 9, 9, 9} rotating with
+    * slot phase) and the daily max/min/avg genuinely discriminate — at
+    * perSlot 40 every count is the constant 10 and a swapped
+    * maxMerge/minMerge translation would pass every check. The `day`
+    * column is date-normalized for the cross-engine harness (timestamp
+    * hashing is timezone-fragile between engines; ClickHouseSqlSpec
+    * asserts the verbatim select in-engine instead). */
   def refChAttendanceDaily(spark: SparkSession, dir: String): DataFrame = {
     // midday on purpose: the cutover day gets state rows from BOTH legs,
     // so the final *Merge select must really merge two partial states

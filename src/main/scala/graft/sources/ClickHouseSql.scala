@@ -550,6 +550,23 @@ final class ClickHouseSql(
 
 object ClickHouseSql {
 
+  /** Index of the `)` that closes the `(` at `open`, counting nested parens
+    * (quoted literals are not tracked — see [[rewrapFnArgs]]); throws
+    * `IllegalArgumentException(what)` when the input ends first. */
+  private def closingParen(s: String, open: Int, what: => String): Int = {
+    var depth = 0
+    var j = open
+    while (j < s.length) {
+      s.charAt(j) match {
+        case '(' => depth += 1
+        case ')' => depth -= 1; if (depth == 0) return j
+        case _ =>
+      }
+      j += 1
+    }
+    throw new IllegalArgumentException(what)
+  }
+
   /** `fn(<balanced args>)` → `wrap(args)`, every occurrence, nesting-safe
     * (regex alone cannot match the balanced parens of
     * `toInt8(JSONExtractInt(m, 'k'))`). */
@@ -564,18 +581,7 @@ object ClickHouseSql {
       else if (!boundary) { sb.append(sql.substring(i, at + fn.length + 1)); i = at + fn.length + 1 }
       else {
         sb.append(sql.substring(i, at))
-        var depth = 0
-        var j = at + fn.length
-        var end = -1
-        while (end < 0 && j < sql.length) {
-          sql.charAt(j) match {
-            case '(' => depth += 1
-            case ')' => depth -= 1; if (depth == 0) end = j
-            case _ =>
-          }
-          j += 1
-        }
-        require(end > 0, s"unbalanced parens after $fn")
+        val end = closingParen(sql, at + fn.length, s"unbalanced parens after $fn")
         // recurse so nested dialect calls inside the args translate too
         sb.append(wrap(rewrapFn(sql.substring(at + fn.length + 1, end), fn, wrap)))
         i = end + 1
@@ -596,19 +602,7 @@ object ClickHouseSql {
       sql.substring(0, at + fn.length + 1) +
         rewrapParametric(sql.substring(at + fn.length + 1), fn, wrap)
     else {
-      def close(open: Int): Int = {
-        var depth = 0
-        var j = open
-        while (j < sql.length) {
-          sql.charAt(j) match {
-            case '(' => depth += 1
-            case ')' => depth -= 1; if (depth == 0) return j
-            case _ =>
-          }
-          j += 1
-        }
-        throw new IllegalArgumentException(s"unbalanced parens after $fn")
-      }
+      def close(open: Int): Int = closingParen(sql, open, s"unbalanced parens after $fn")
       val pEnd = close(at + fn.length)
       require(pEnd + 1 < sql.length && sql.charAt(pEnd + 1) == '(',
         s"$fn is parametric: expected $fn(params)(args)")
@@ -651,18 +645,7 @@ object ClickHouseSql {
     val open = s.indexOf('(')
     require(open > 0, s"missing column list in: ${s.take(60)}")
     val name = stripName(s.substring(prefix.length, open).trim)
-    var depth = 0
-    var i = open
-    var end = -1
-    while (end < 0 && i < s.length) {
-      s.charAt(i) match {
-        case '(' => depth += 1
-        case ')' => depth -= 1; if (depth == 0) end = i
-        case _ =>
-      }
-      i += 1
-    }
-    require(end > 0, "unbalanced column list")
+    val end = closingParen(s, open, "unbalanced column list")
     (name, s.substring(open + 1, end), s.substring(end + 1))
   }
 

@@ -8,7 +8,7 @@ class BenchSpec extends SparkSpec {
     val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
       "ok" -> ((s, dir) => s.read.parquet(s"$dir/region.parquet")),
       "boom" -> ((_, _) => throw new IllegalStateException("synthetic failure")))
-    val (timings, errors, probes) = Bench.run(spark, sf, Seq("ok", "boom"), queries, instrument = true)
+    val (timings, errors, probes) = Bench.run(spark, sf, Seq("ok", "boom"), queries)
     assert(timings.map(_._1) == Seq("ok"))
     assert(errors.map(_._1) == Seq("boom"))
     assert(errors.head._2.contains("IllegalStateException"))

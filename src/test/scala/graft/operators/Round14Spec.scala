@@ -207,18 +207,6 @@ class Round14Spec extends SparkSpec {
     assert(!empty.isNullAt(4) && empty.getDouble(4) == 0.0, "transitivity must be 0.0")
   }
 
-  test("hits edge-layout flag is a pure memory/shuffle trade: results identical") {
-    // single (default, r14) vs double (spark.graft.hits.doubleLayout):
-    // the layout choice trades a per-iteration edge exchange against a
-    // second cached edge copy and must never change the fixed point
-    val base = Graph.hits(spark, sf).collect().toSeq
-    spark.conf.set("spark.graft.hits.doubleLayout", "true")
-    try {
-      val dbl = Graph.hits(spark, sf).collect().toSeq
-      assert(dbl == base, "doubleLayout changed the HITS result")
-    } finally spark.conf.unset("spark.graft.hits.doubleLayout")
-  }
-
   test("hits quantum override is deterministic and preserves the L1 contract") {
     // the power-law-weight escape hatch (spark.graft.hits.quantum): the
     // oracle owns the default instance; the override must stay a valid
