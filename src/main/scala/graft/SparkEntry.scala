@@ -2931,7 +2931,7 @@ object SparkEntry {
     // quantized integer DLT priorities, per-stratum rank, (k+1)-th as tau,
     // the max(w, tau) estimate — pure positive-BIGINT arithmetic
     Key("q_reservoir", (s, d) => Pipeline.reservoir(s, d), Oracle(reservoirSql)),
-    // the IVF nprobe sweep: Round16Spec owns the monotonicity/endpoint
+    // the IVF nprobe sweep: SimilaritySpec owns the monotonicity/endpoint
     // contract, this phase owns its cost
     Key("ann_recall_curve", (s, d) => Similarity.ivfRecallCurve(s, d), BenchOnly),
     // q_reservoir's oracle verbatim: priorities are deterministic and the
@@ -2940,13 +2940,13 @@ object SparkEntry {
     // cross-micro-batch state proof
     Key("streaming_reservoir", (s, d) => RefPipeline.streamingReservoir(s, d), Oracle(
       reservoirSql)),
-    // the IVF-PQ rerank-depth sweep: Round17Spec owns the
+    // the IVF-PQ rerank-depth sweep: SimilaritySpec owns the
     // monotonicity/∞-endpoint contract
     Key("ann_ivfpq_rerank_curve", (s, d) => Similarity.ivfpqRerankCurve(s, d), BenchOnly),
-    // the IVF-PQ code-size sweep (m bytes/vector): Round18Spec owns the
+    // the IVF-PQ code-size sweep (m bytes/vector): SimilaritySpec owns the
     // monotonicity + rerank-curve-row equality
     Key("ann_ivfpq_m_curve", (s, d) => Similarity.ivfpqMCurve(s, d), BenchOnly),
-    // the IVF-PQ granularity sweep (coarse cells): Round19Spec owns the
+    // the IVF-PQ granularity sweep (coarse cells): SimilaritySpec owns the
     // triple crossing-point equality
     Key("ann_ivfpq_cells_curve", (s, d) => Similarity.ivfpqCellsCurve(s, d), BenchOnly),
   )

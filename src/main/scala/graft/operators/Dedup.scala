@@ -259,6 +259,37 @@ object Dedup {
           "1.4-1.6x for 5x rows). Expect uniform-fixture-bench cost.")
   }
 
+  /** The effective-shingle index of the prefix-filtering cores
+    * ([[jaccardPairs]], [[containmentPairs]]) over a (doc_id, sg, n)
+    * shingle frame, as two cached frames:
+    *  - `dfreq` (sh, df): vocabulary-sized 16-byte rows with at least two
+    *    consumers (the [[warnDegenerateVocabulary]] guard `who` names, and
+    *    the df <= hard join below), so the cache saves a second full
+    *    corpus scan+explode;
+    *  - `eff` (doc_id, eff, effv, n_eff): ONE doc_id aggregation builds
+    *    everything per-doc. Sorting the (df, sh) structs puts `eff` in
+    *    global-rarity order, so a prefix is just its first l elements — no
+    *    separate window pass; `effv` is the SAME set re-sorted by VALUE,
+    *    the input shape the allocation-free sorted_intersect_count verify
+    *    needs (doc-scaled sort, so the per-PAIR hot path pays none of it).
+    *    Arrays are per-DOC, bounded by document length; they meet pairs
+    *    only after candidate pruning. It fans out (prefix explode + both
+    *    sides of the verify join), hence cached. */
+  private def effectiveShingles(sgd: DataFrame, hard: Int,
+      who: String): (DataFrame, DataFrame) = {
+    val ex = sgd.select(col("doc_id"), explode(col("sg")).as("sh"))
+    val dfreq = GraftSession.trackCache(ex.groupBy("sh").agg(count(lit(1)).as("df")))
+    warnDegenerateVocabulary(dfreq, hard, who)
+    val eff = GraftSession.trackCache(ex.join(dfreq.filter(col("df") <= hard), Seq("sh"))
+      .groupBy("doc_id")
+      .agg(sort_array(collect_list(struct(col("df"), col("sh")))).as("srt"))
+      .select(col("doc_id"),
+        expr("transform(srt, s -> s.sh)").as("eff"),
+        sort_array(expr("transform(srt, s -> s.sh)")).as("effv"),
+        size(col("srt")).cast("long").as("n_eff")))
+    (dfreq, eff)
+  }
+
   /** Near-dup pairs by shingle Jaccard >= 0.9 over the df <= hard-cap
     * shingle universe. See [[jaccardPairs]] for the shape. */
   def ngramJaccard(spark: SparkSession, dir: String): DataFrame =
@@ -345,30 +376,7 @@ object Dedup {
   private[graft] def jaccardPairs(sgd: DataFrame, hard: Int,
       threshold: Double): DataFrame = {
     GraftSession.registerFunctions(sgd.sparkSession) // sorted_intersect_count
-    val ex = sgd.select(col("doc_id"), explode(col("sg")).as("sh"))
-    // dfreq gained a second consumer in r14 (the degenerate-vocabulary
-    // guard below), so it is now cached: vocabulary-sized 16-byte rows,
-    // and the cache saves the guard a second full corpus scan+explode.
-    // `eff` below genuinely fans out (prefix explode + both sides of the
-    // verify join) and stays cached too.
-    val dfreq = GraftSession.trackCache(ex.groupBy("sh").agg(count(lit(1)).as("df")))
-    warnDegenerateVocabulary(dfreq, hard, "ngramJaccard")
-    val exEff = ex.join(dfreq.filter(col("df") <= hard), Seq("sh"))
-    // ONE doc_id aggregation builds everything per-doc: sorting the
-    // (df, sh) structs puts the effective shingle array in global-rarity
-    // order, so the prefix is just its first l elements — no separate
-    // window pass; `effv` is the SAME set re-sorted by VALUE, the input
-    // shape the allocation-free sorted_intersect_count verify needs
-    // (doc-scaled sort, so the per-PAIR hot path pays none of it).
-    // Arrays are per-DOC, bounded by document length; they meet pairs
-    // only after candidate pruning.
-    val eff = GraftSession.trackCache(exEff
-      .groupBy("doc_id")
-      .agg(sort_array(collect_list(struct(col("df"), col("sh")))).as("srt"))
-      .select(col("doc_id"),
-        expr("transform(srt, s -> s.sh)").as("eff"),
-        sort_array(expr("transform(srt, s -> s.sh)")).as("effv"),
-        size(col("srt")).cast("long").as("n_eff")))
+    val (_, eff) = effectiveShingles(sgd, hard, "ngramJaccard")
     // K-extended prefix, NO positions (the K-count gate replaced the
     // positional ubound — see the scaladoc); rows are (doc_id, n_eff, sh)
     val prefix = eff.select(col("doc_id"), col("n_eff"), explode(expr(
@@ -541,18 +549,7 @@ object Dedup {
   private[graft] def containmentPairs(sgd: DataFrame, hard: Int,
       threshold: Double): DataFrame = {
     GraftSession.registerFunctions(sgd.sparkSession) // sorted_intersect_count
-    val ex = sgd.select(col("doc_id"), explode(col("sg")).as("sh"))
-    // cached for the same two-consumer reason as [[jaccardPairs]]' dfreq
-    val dfreq = GraftSession.trackCache(ex.groupBy("sh").agg(count(lit(1)).as("df")))
-    warnDegenerateVocabulary(dfreq, hard, "containment")
-    val exEff = ex.join(dfreq.filter(col("df") <= hard), Seq("sh"))
-    val eff = GraftSession.trackCache(exEff
-      .groupBy("doc_id")
-      .agg(sort_array(collect_list(struct(col("df"), col("sh")))).as("srt"))
-      .select(col("doc_id"),
-        expr("transform(srt, s -> s.sh)").as("eff"),
-        sort_array(expr("transform(srt, s -> s.sh)")).as("effv"),
-        size(col("srt")).cast("long").as("n_eff")))
+    val (dfreq, eff) = effectiveShingles(sgd, hard, "containment")
     // EXTENDED prefix + K-SHARE GATE candidates (r10, K raised 2 → 3 in
     // r18 — see [[ContainmentShareGate]]; this replaced the
     // positional-filter + distinct shape, whose measured sf5 survival
@@ -1008,8 +1005,7 @@ object Dedup {
       banded: Boolean = false): DataFrame = {
     import spark.implicits._
     val nb = EmbeddingBlocks
-    val e = Tables(spark, dir).embeddings
-      .select(col("vec_id"), expr("transform(embedding, x -> cast(x as double))").as("v"))
+    val e = Similarity.doubleVecs(spark, dir)
     if (banded) return bandedEmbedding(spark, e)
     val blocked = e.withColumn("blk", pmod(xxhash64(col("vec_id")), lit(nb)).cast("int"))
     val a = blocked.select(
@@ -1157,24 +1153,12 @@ object Dedup {
     * production k-means enforces; 16 fixed buckets here). Plan: one
     * bucket shuffle for the cogroup, one doc-keyed left join back — no
     * global sort, no window, no pair rows. */
-  def semantic(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val keyed = GraftSession.trackCache(Tables(spark, dir).embeddings
-      .select(col("vec_id"), expr("transform(embedding, x -> cast(x as double))").as("v"))
+  def semantic(spark: SparkSession, dir: String): DataFrame =
+    bucketDedup(GraftSession.trackCache(Similarity.doubleVecs(spark, dir)
       .withColumn("bucket", expr(
         """aggregate(sequence(1, 4), 0L, (acc, i) ->
           |  acc + IF(element_at(v, i) >= cast(0 as double),
-          |           cast(shiftleft(1, i - 1) as bigint), 0L))""".stripMargin)))
-    val dropped = keyed.select(col("bucket"), col("vec_id"), col("v")).as[BVec]
-      .groupByKey(_.bucket)
-      .flatMapGroups(bucketKernel _)
-      .toDF()
-    keyed.select(col("vec_id"), col("bucket"))
-      .join(dropped, Seq("vec_id"), "left")
-      .select(col("vec_id"), col("bucket"),
-        coalesce(col("w"), lit(-1L)).as("dup_of"),
-        col("w").isNull.cast("bigint").as("kept"))
-  }
+          |           cast(shiftleft(1, i - 1) as bigint), 0L))""".stripMargin))))
 
   /** The production bucketing [[semantic]]'s scaladoc names, wired as a
     * benchable config (`dedup_semantic_kmeans`, the pruned-ANN pattern:
@@ -1209,9 +1193,7 @@ object Dedup {
     * construction of k; this keeps the guarantee under any skew). */
   def semanticKMeans(spark: SparkSession, dir: String,
       k: Int = 64, cap: Int = 2048): DataFrame = {
-    import spark.implicits._
-    val e = Tables(spark, dir).embeddings
-      .select(col("vec_id"), expr("transform(embedding, x -> cast(x as double))").as("v"))
+    val e = Similarity.doubleVecs(spark, dir)
     val centroids = Similarity.kmeans(e, k, iters = 3)
     val asg = GraftSession.trackCache(Similarity.assignedTo(e, centroids))
     // loud envelope guard (r14 advice): the sub-split rank below is a
@@ -1237,7 +1219,16 @@ object Dedup {
       .select(col("vec_id"),
         (shiftleft(col("cid").cast("long"), 32) +
           ((col("rn") - 1) / cap).cast("long")).as("bucket"))
-    val keyed = asg.select("vec_id", "v").join(sub, "vec_id")
+    bucketDedup(asg.select("vec_id", "v").join(sub, "vec_id"))
+  }
+
+  /** The SemDeDup tail shared by [[semantic]] and [[semanticKMeans]] over
+    * (vec_id, v, bucket) rows: one bucket shuffle into [[bucketKernel]],
+    * then a left join back gives every vector its min-id witness `dup_of`
+    * (-1 when kept) and its `kept` flag. */
+  private def bucketDedup(keyed: DataFrame): DataFrame = {
+    val spark = keyed.sparkSession
+    import spark.implicits._
     val dropped = keyed.select(col("bucket"), col("vec_id"), col("v")).as[BVec]
       .groupByKey(_.bucket)
       .flatMapGroups(bucketKernel _)

@@ -114,28 +114,9 @@ object Multimodal {
     * because only the SIGN of adjacent differences survives. The luma
     * grid here samples the blob deterministically (the stand-in for a
     * real downscale-to-9x8 of decoded pixels — same stub contract as
-    * [[FakeDecoder]]); the hash arithmetic is the real dHash. */
-  private[graft] def dHash(blob: Array[Byte]): Long = {
-    // empty payload (empty document text): no pixels, no differences —
-    // hash 0. Without this, the modulus-1 fast path below would still
-    // index blob(0) into an empty array.
-    if (blob.isEmpty) return 0L
-    val n = blob.length
-    @inline def luma(x: Int, y: Int): Int = blob(((y * 9 + x) * 31) % n) & 0xFF
-    var h = 0L
-    var bit = 0
-    var y = 0
-    while (y < 8) {
-      var x = 0
-      while (x < 8) {
-        if (luma(x + 1, y) > luma(x, y)) h |= 1L << bit
-        bit += 1
-        x += 1
-      }
-      y += 1
-    }
-    h
-  }
+    * [[FakeDecoder]]); the hash arithmetic is the real dHash. An image
+    * is the first frame of [[frameDHash]]: frames 0-3 sample at base 0. */
+  private[graft] def dHash(blob: Array[Byte]): Long = frameDHash(blob, 0)
 
   /** Perceptual-hash image near-dup pairs (`multimodal_phash`) — the
     * CLIP-era image dedup staple: every image to a 64-bit [[dHash]] in the
@@ -213,13 +194,16 @@ object Multimodal {
 
   private[graft] final case class FrameHash(doc_id: Long, frame_idx: Long, fhash: Long)
 
-  /** dHash of ONE FRAME of the fake video: same 9x8 luma-difference
-    * arithmetic as [[dHash]], with the sampling base shifted per 4-frame
+  /** dHash of ONE FRAME of the fake video: the 9x8 luma-difference
+    * arithmetic of [[dHash]], with the sampling base shifted per 4-frame
     * group — the stub contract for "consecutive frames look alike, a new
     * shot re-frames everything" (frames inside a group hash identically;
     * each group jump resamples the blob). The hash arithmetic is the real
     * dHash; only the luma source is the deterministic stand-in. */
   private[graft] def frameDHash(blob: Array[Byte], frame: Long): Long = {
+    // empty payload (empty document text): no pixels, no differences —
+    // hash 0. Without this, the modulus-1 fast path below would still
+    // index blob(0) into an empty array.
     if (blob.isEmpty) return 0L
     val n = blob.length
     val base = ((frame / 4) * 97L).toInt

@@ -128,11 +128,15 @@ object RefPipeline {
 
   /** Runs `df` to its end into the in-memory table `sink` under output
     * `mode`, and returns the table. The view is dropped first, so a shared
-    * session may re-run the key. */
+    * session may re-run the key. The checkpoint goes to a fresh scratch
+    * dir: without one Spark makes its own temporary dir, outside
+    * [[GraftSession.scratchDir]]'s sweep, and leaves it behind when the
+    * query fails. */
   private def memoryTable(df: DataFrame, sink: String, mode: String): DataFrame = {
     val spark = df.sparkSession
     spark.catalog.dropTempView(sink)
-    runToEnd(df.writeStream.format("memory").queryName(sink).outputMode(mode))
+    runToEnd(df.writeStream.format("memory").queryName(sink).outputMode(mode)
+      .option("checkpointLocation", GraftSession.scratchDir(s"$sink-ckpt").toString))
     spark.table(sink)
   }
 

@@ -24,15 +24,41 @@ object Similarity {
   private val cosineCol =
     expr("dot_product(va, vb)") / (col("nrma") * col("nrmb"))
 
+  /** The (vec_id, v) embeddings with each float widened exactly to double. */
+  private[operators] def doubleVecs(spark: SparkSession, dir: String): DataFrame =
+    Tables(spark, dir).embeddings
+      .select(col("vec_id"), expr("transform(embedding, x -> cast(x as double))").as("v"))
+
   /** vec_id, v (double vector), nrm (L2 norm), computed map-side once. */
   private def vecs(spark: SparkSession, dir: String): DataFrame = {
     GraftSession.registerFunctions(spark)
-    Tables(spark, dir).embeddings
-      .select(col("vec_id"), expr("transform(embedding, x -> cast(x as double))").as("v"))
-      .withColumn("nrm", expr("sqrt(dot_product(v, v))"))
+    doubleVecs(spark, dir).withColumn("nrm", expr("sqrt(dot_product(v, v))"))
   }
 
-  private def rankTop5(scored: DataFrame): DataFrame =
+  /** The query/corpus split every top-k key shares: the vectors with
+    * `vec_id < 10` are the queries, the rest is the corpus searched. */
+  private val isQuery = col("vec_id") < 10
+  private val isCorpus = col("vec_id") >= 10
+
+  /** The query side renamed for [[cosineCol]] (q_id, va, nrma), plus `extra`. */
+  private def queries(df: DataFrame, extra: Column*): DataFrame =
+    df.filter(isQuery).select(
+      Seq(col("vec_id").as("q_id"), col("v").as("va"), col("nrm").as("nrma")) ++ extra: _*)
+
+  /** The corpus side renamed for [[cosineCol]] (n_id, vb, nrmb), plus `extra`. */
+  private def corpus(df: DataFrame, extra: Column*): DataFrame =
+    df.filter(isCorpus).select(
+      Seq(col("vec_id").as("n_id"), col("v").as("vb"), col("nrm").as("nrmb")) ++ extra: _*)
+
+  /** Every (query, corpus) pair with its exact cosine: the tiny query set is
+    * broadcast, so the corpus never shuffles. */
+  private def bruteForce(e: DataFrame): DataFrame =
+    corpus(e).crossJoin(broadcast(queries(e))).withColumn("cosine", cosineCol)
+
+  /** Top-5 per query by (rounded cosine, n_id) — a total order, so the
+    * result is deterministic under float reassociation. Output is q_id,
+    * n_id, the `carry` columns, score and rnk. */
+  private def rankTop5(scored: DataFrame, carry: String*): DataFrame =
     scored
       // filter on the raw row_number, cast afterwards: the filter sitting
       // directly on the window output lets the TopKPerKey rewrite replace
@@ -40,8 +66,30 @@ object Similarity {
       .withColumn("rnk_i", row_number().over(
         Window.partitionBy("q_id").orderBy(round(col("cosine"), 6).desc, col("n_id"))))
       .filter(col("rnk_i") <= 5)
-      .select(col("q_id"), col("n_id"), round(col("cosine"), 4).as("score"),
-        col("rnk_i").cast("long").as("rnk"))
+      .select(Seq(col("q_id"), col("n_id")) ++ carry.map(col) ++
+        Seq(round(col("cosine"), 4).as("score"), col("rnk_i").cast("long").as("rnk")): _*)
+
+  /** The brute-force exact top-5 (q_id, n_id) pairs and their count: the
+    * recall denominator every recall curve pays. */
+  private case class ExactTop5(pairs: DataFrame, n: Long) {
+    /** Adds n_exact and recall_at_5 = n_hits / n_exact, rounded to 4 places. */
+    def withRecall(df: DataFrame): DataFrame =
+      df.withColumn("n_exact", lit(n))
+        .withColumn("recall_at_5", round(col("n_hits") * 10000.0d / n) / 10000.0d)
+  }
+
+  /** Builds, caches and counts the exact top-5 of `e`. Fails loudly on a
+    * degenerate corpus (the bpeTrain convention): an empty embeddings table
+    * or no query rows would otherwise make every recall point NaN. */
+  private def exactTop5(e: DataFrame, caller: String): ExactTop5 = {
+    val pairs = GraftSession.trackCache(rankTop5(bruteForce(e)).select("q_id", "n_id"))
+    val nExact = pairs.count()
+    require(nExact > 0,
+      s"$caller: empty exact baseline — the embeddings table has no corpus " +
+        "rows or no query rows (vec_id < 10); the recall curve is undefined " +
+        "on this input")
+    ExactTop5(pairs, nExact)
+  }
 
   /** Contrastive training-pair construction — the CLIP/DPR-style data
     * step that turns an embedded corpus into (anchor, negative_j) rows
@@ -78,17 +126,9 @@ object Similarity {
   }
 
   /** Exact cosine top-5 for each query vector (vec_id < 10) over the rest
-    * of the corpus. The tiny query set is broadcast, so the corpus never
-    * shuffles; ranking is `row_number` over (rounded score, id) for a
-    * deterministic result under float reassociation. */
-  def topK(spark: SparkSession, dir: String): DataFrame = {
-    val e = vecs(spark, dir)
-    val q = e.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("v").as("va"), col("nrm").as("nrma"))
-    val c = e.filter(col("vec_id") >= 10)
-      .select(col("vec_id").as("n_id"), col("v").as("vb"), col("nrm").as("nrmb"))
-    rankTop5(c.crossJoin(broadcast(q)).withColumn("cosine", cosineCol))
-  }
+    * of the corpus: [[bruteForce]] ranked by [[rankTop5]]. */
+  def topK(spark: SparkSession, dir: String): DataFrame =
+    rankTop5(bruteForce(vecs(spark, dir)))
 
   /** Exact cosine RANGE search (`ann_range`) — the radius-query member of
     * the retrieval family (FAISS `range_search` semantics): every corpus
@@ -106,16 +146,10 @@ object Similarity {
     * never flip membership (the [[rankTop5]] rounding contract); the
     * banded/indexed siblings (`dedup_minhash_lsh`, `ann_ivf`) remain the
     * sub-linear route when the query side is also corpus-sized. */
-  def rangeSearch(spark: SparkSession, dir: String, tau: Double = 0.2): DataFrame = {
-    val e = vecs(spark, dir)
-    val q = e.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("v").as("va"), col("nrm").as("nrma"))
-    val c = e.filter(col("vec_id") >= 10)
-      .select(col("vec_id").as("n_id"), col("v").as("vb"), col("nrm").as("nrmb"))
-    c.crossJoin(broadcast(q)).withColumn("cosine", cosineCol)
+  def rangeSearch(spark: SparkSession, dir: String, tau: Double = 0.2): DataFrame =
+    bruteForce(vecs(spark, dir))
       .filter(round(col("cosine"), 6) >= tau)
       .select(col("q_id"), col("n_id"), round(col("cosine"), 4).as("score"))
-  }
 
   /** Sign-bit pack of a 32-dim word: bit `i` is set iff dimension
     * `offset + i` of `v` is > 0. Two words cover the 64-dim vectors.
@@ -155,9 +189,9 @@ object Similarity {
   def hammingTopK(spark: SparkSession, dir: String, shortlist: Int = 50): DataFrame = {
     val e = vecs(spark, dir)
     val packed = e.select(col("vec_id"), signPack(0).as("h0"), signPack(32).as("h1"))
-    val qp = packed.filter(col("vec_id") < 10)
+    val qp = packed.filter(isQuery)
       .select(col("vec_id").as("q_id"), col("h0").as("a0"), col("h1").as("a1"))
-    val cp = packed.filter(col("vec_id") >= 10)
+    val cp = packed.filter(isCorpus)
       .select(col("vec_id").as("n_id"), col("h0").as("b0"), col("h1").as("b1"))
     val cand = cp.crossJoin(broadcast(qp))
       .withColumn("hamming",
@@ -166,18 +200,9 @@ object Similarity {
         Window.partitionBy("q_id").orderBy(col("hamming"), col("n_id"))))
       .filter(col("rn") <= shortlist)
       .select("q_id", "n_id", "hamming")
-    val q = e.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("v").as("va"), col("nrm").as("nrma"))
-    val c = e.filter(col("vec_id") >= 10)
-      .select(col("vec_id").as("n_id"), col("v").as("vb"), col("nrm").as("nrmb"))
-    c.join(broadcast(cand), Seq("n_id"))
-      .join(broadcast(q), Seq("q_id"))
-      .withColumn("cosine", cosineCol)
-      .withColumn("rnk_i", row_number().over(
-        Window.partitionBy("q_id").orderBy(round(col("cosine"), 6).desc, col("n_id"))))
-      .filter(col("rnk_i") <= 5)
-      .select(col("q_id"), col("n_id"), col("hamming"),
-        round(col("cosine"), 4).as("score"), col("rnk_i").cast("long").as("rnk"))
+    rankTop5(corpus(e).join(broadcast(cand), Seq("n_id"))
+      .join(broadcast(queries(e)), Seq("q_id"))
+      .withColumn("cosine", cosineCol), "hamming")
   }
 
   /** Deterministic random hyperplanes (fixed seed, JVM-stable LCG),
@@ -225,20 +250,16 @@ object Similarity {
     // every id >= 64 hits no corpus row — the pairs all met in table 0
     // already). Production (probeAll = false) keeps the genuine 4-table
     // OR-amplification join untouched.
-    val qSide =
-      if (probeAll) e.filter(col("vec_id") < 10)
-        .select(col("vec_id"), col("v"), col("nrm"),
-          explode(expr("sequence(0L, 63L)")).as("bucket"))
-      else keyed.filter(col("vec_id") < 10)
-    val q = qSide
-      .select(col("vec_id").as("q_id"), col("v").as("va"), col("nrm").as("nrma"), col("bucket"))
+    val qKeyed =
+      if (probeAll) e.select(col("vec_id"), col("v"), col("nrm"),
+        explode(expr("sequence(0L, 63L)")).as("bucket"))
+      else keyed
     val cKeyed =
       if (probeAll) e.select(col("vec_id"), col("v"), col("nrm"),
         col("buckets").getItem(0).as("bucket"))
       else keyed
-    val c = cKeyed.filter(col("vec_id") >= 10)
-      .select(col("vec_id").as("n_id"), col("v").as("vb"), col("nrm").as("nrmb"), col("bucket"))
-    val cand0 = c.join(q, Seq("bucket"))
+    val cand0 = corpus(cKeyed, col("bucket"))
+      .join(queries(qKeyed, col("bucket")), Seq("bucket"))
       .select("q_id", "n_id", "va", "vb", "nrma", "nrmb")
     // The candidate de-dup is only needed when a pair can meet in MORE
     // than one table (production's 4-table OR-amplification). Under
@@ -254,20 +275,6 @@ object Similarity {
     rankTop5(cand.withColumn("cosine", cosineCol))
   }
 
-  /** IVF: k-means coarse quantizer trained with DataFrame aggregations;
-    * only the k x dim centroid matrix is ever collected to the driver.
-    * Queries probe the `nprobe` nearest centroids and rerank exactly
-    * within those inverted lists. The knobs are real tuning parameters
-    * (defaults match the driver-contract entry): more cells -> smaller
-    * inverted lists but lower recall per probe; more probes -> recall
-    * back up at linear cost; more Lloyd iterations -> tighter cells.
-    *
-    * Training is collect-once: [[kmeans]] pulls the bounded xxhash64
-    * sample to the driver and iterates Lloyd locally (r12 — the
-    * distributed per-iteration assign/mean/collect jobs were the stage
-    * soup the event log blamed for the index keys' wall). Init is a
-    * deterministic hash-sample (first k vectors in xxhash64 order), not
-    * first-k-by-id, so seeds don't share insertion locality. */
   /** df + per-row rank-equivalent squared-L2 distances to every centroid:
     * |v|^2 - 2<v,c> + |c|^2 with the rank-invariant |v|^2 term dropped. */
   private def withCentroids(df: DataFrame, cs: Array[(Int, Array[Double])]): DataFrame =
@@ -295,67 +302,101 @@ object Similarity {
     * recall specs exercise identical arithmetic.) Hash-sampled init;
     * one bounded collect; only the k x dim centroids leave this call.
     * Shared with [[Dedup.semanticKMeans]]'s capped-cell bucketing. */
-  private[operators] def kmeans(e: DataFrame, k: Int, iters: Int): Array[(Int, Array[Double])] = {
-    // ONE bounded collect, local Lloyd (r12): the sample is
-    // max(64k, 512) vectors BY DESIGN (the 100 TB argument above), so it
-    // always fits on the driver — and the previous shape paid
-    // iters x (assign + mean + collect) multi-stage DISTRIBUTED jobs
-    // over that driver-sized frame. The event-logged cost of the ANN
-    // index keys was exactly this stage soup (150+ sub-second stages,
-    // no heavy stage), so training now collects the sample once and
-    // iterates in plain Scala with the identical arithmetic: same
-    // hash-sample order, same first-k init, same rank-equivalent
-    // |c|^2 - 2<v,c> distance, same smaller-cid tie rule as the old
-    // array_min(struct(d, cid)), same empty-cell-keeps-old rule.
-    val train: Array[Array[Double]] = e
-      .withColumn("h", xxhash64(col("vec_id")))
-      .orderBy("h").limit(math.max(64 * k, 512))
+  private[operators] def kmeans(e: DataFrame, k: Int, iters: Int): Array[(Int, Array[Double])] =
+    lloyd(trainSample(e, math.max(64 * k, 512)), k, iters)
+      .zipWithIndex.map { case (v, i) => (i, v) }
+
+  /** The first `n` vectors of `e` in xxhash64(vec_id) order — the bounded,
+    * deterministic training sample of [[kmeans]] and [[pqCodebook]],
+    * collected to the driver in ONE job (r12): the sample is driver-sized
+    * by design, and the previous shape paid iters x (assign + mean +
+    * collect) multi-stage DISTRIBUTED jobs over it. The event-logged cost
+    * of the ANN index keys was exactly that stage soup (150+ sub-second
+    * stages, no heavy stage). */
+  private def trainSample(e: DataFrame, n: Int): Array[Array[Double]] =
+    e.withColumn("h", xxhash64(col("vec_id")))
+      .orderBy("h").limit(n)
       .select("v").collect().map(_.getSeq[Double](0).toArray)
-    val dim = if (train.isEmpty) 0 else train(0).length
-    var centroids: Array[(Int, Array[Double])] =
-      train.take(k).zipWithIndex.map { case (v, i) => (i, v) }
+
+  /** Lloyd's k-means over a driver-side sample, in plain Scala: init from
+    * the first `k` rows (all of them when the sample is smaller), then
+    * `iters` passes of nearest-centroid assignment by the rank-equivalent
+    * |c|^2 - 2<v,c> distance and per-cell means, sums running in sample
+    * order. Strict `<` keeps the smaller id on a tie (the order
+    * [[assignedTo]]'s array_min(struct(d, cid)) uses), and an empty cell
+    * keeps its old centroid. */
+  private[operators] def lloyd(sample: Array[Array[Double]], k: Int,
+      iters: Int): Array[Array[Double]] = {
+    val dim = if (sample.isEmpty) 0 else sample(0).length
+    var cs = sample.take(k)
     for (_ <- 1 to iters) {
-      val sums = Array.fill(centroids.length)(new Array[Double](dim))
-      val counts = new Array[Long](centroids.length)
-      train.foreach { v =>
+      val sums = Array.fill(cs.length)(new Array[Double](dim))
+      val counts = new Array[Long](cs.length)
+      sample.foreach { v =>
         var best = -1
         var bestD = Double.PositiveInfinity
-        centroids.foreach { case (cid, c) =>
+        var ci = 0
+        while (ci < cs.length) {
+          val c = cs(ci)
           var cc = 0.0
           var vc = 0.0
           var i = 0
           while (i < dim) { cc += c(i) * c(i); vc += v(i) * c(i); i += 1 }
           val d = cc - 2.0 * vc
-          if (d < bestD) { bestD = d; best = cid } // strict <: ties keep the smaller cid
+          if (d < bestD) { bestD = d; best = ci }
+          ci += 1
         }
         counts(best) += 1
         var i = 0
         while (i < dim) { sums(best)(i) += v(i); i += 1 }
       }
-      centroids = centroids.map { case (cid, old) =>
-        if (counts(cid) > 0) (cid, sums(cid).map(_ / counts(cid))) else (cid, old)
-      }
+      cs = Array.tabulate(cs.length)(ci =>
+        if (counts(ci) > 0) sums(ci).map(_ / counts(ci)) else cs(ci))
     }
-    centroids
+    cs
   }
 
-  /** The nprobe nearest cells per query vector, as (q_id, cid) rows. */
-  private def probeCells(queries: DataFrame, cs: Array[(Int, Array[Double])],
+  /** The nprobe nearest cells of each query vector in `e`, as (q_id, va,
+    * nrma, cid) rows. */
+  private def probeCells(e: DataFrame, cs: Array[(Int, Array[Double])],
       nprobe: Int): DataFrame =
-    withCentroids(queries, cs)
+    queries(withCentroids(e, cs)
       .withColumn("cid", explode(
-        expr(s"transform(slice(array_sort(dists), 1, $nprobe), s -> s.cid)")))
-      .select(col("vec_id").as("q_id"), col("v").as("va"), col("nrm").as("nrma"), col("cid"))
+        expr(s"transform(slice(array_sort(dists), 1, $nprobe), s -> s.cid)"))), col("cid"))
 
+  /** IVF pruning as (q_id, vec_id) candidates: `cells` k-means cells over
+    * `e`, the corpus assignment cached, and each query paired with every
+    * corpus vector in its `nprobe` nearest cells. */
+  private def ivfCandidates(e: DataFrame, cells: Int, nprobe: Int, iters: Int): DataFrame = {
+    val coarse = kmeans(e, cells, iters)
+    val asg = GraftSession.trackCache(
+      assignedTo(e, coarse).select(col("vec_id"), col("cid")))
+    val probe = probeCells(e, coarse, nprobe).select("q_id", "cid")
+    asg.filter(isCorpus).join(broadcast(probe), Seq("cid")).select("q_id", "vec_id")
+  }
+
+  /** IVF: a k-means coarse quantizer; only the k x dim centroid matrix
+    * leaves training. Queries probe the `nprobe` nearest centroids and
+    * rerank exactly within those inverted lists. The knobs are real
+    * tuning parameters (defaults match the driver-contract entry): more
+    * cells -> smaller inverted lists but lower recall per probe; more
+    * probes -> recall back up at linear cost; more Lloyd iterations ->
+    * tighter cells.
+    *
+    * Training is collect-once: [[kmeans]] pulls the bounded xxhash64
+    * sample to the driver and iterates Lloyd locally (r12 — the
+    * distributed per-iteration assign/mean/collect jobs were the stage
+    * soup the event log blamed for the index keys' wall). Init is a
+    * deterministic hash-sample (first k vectors in xxhash64 order), not
+    * first-k-by-id, so seeds don't share insertion locality. */
   def ivfTopK(spark: SparkSession, dir: String, k: Int = 8, nprobe: Int = 2,
       iters: Int = 3): DataFrame = {
     val e = GraftSession.trackCache(vecs(spark, dir))
     val centroids = kmeans(e, k, iters)
     val asg = GraftSession.trackCache(assignedTo(e, centroids))
-    val q = probeCells(asg.filter(col("vec_id") < 10), centroids, nprobe)
-    val c = asg.filter(col("vec_id") >= 10)
-      .select(col("vec_id").as("n_id"), col("v").as("vb"), col("nrm").as("nrmb"), col("cid"))
-    rankTop5(c.join(broadcast(q), Seq("cid")).withColumn("cosine", cosineCol))
+    val q = probeCells(asg, centroids, nprobe)
+    rankTop5(corpus(asg, col("cid")).join(broadcast(q), Seq("cid"))
+      .withColumn("cosine", cosineCol))
   }
 
   /** IVF recall-vs-cost curve (`ann_recall_curve`, bench-only) — the
@@ -384,7 +425,7 @@ object Similarity {
     * Candidate sets are supersets along np, so both axes are
     * non-decreasing by construction, and at nprobe = cells the sweep
     * reproduces brute force exactly (recall 1.0 — the built-in
-    * self-check); Round16Spec pins monotonicity and the endpoint.
+    * self-check); SimilaritySpec pins monotonicity and the endpoint.
     *
     * Scale shape: one brute-force exact-top5 pass over the cached
     * assignments (the recall DENOMINATOR — any recall curve pays it),
@@ -397,48 +438,30 @@ object Similarity {
     val e = GraftSession.trackCache(vecs(spark, dir))
     val centroids = kmeans(e, cells, iters)
     val asg = GraftSession.trackCache(assignedTo(e, centroids))
-    val corpus = asg.filter(col("vec_id") >= 10)
-      .select(col("vec_id").as("n_id"), col("v").as("vb"),
-        col("nrm").as("nrmb"), col("cid"))
-    val queries = asg.filter(col("vec_id") < 10)
-    val q = queries.select(col("vec_id").as("q_id"), col("v").as("va"),
-      col("nrm").as("nrma"))
+    val cellOf = corpus(asg, col("cid")).select("n_id", "cid")
     // per-query cell rank r = the nprobe at which the cell joins the
     // probe set (queries × cells rows, broadcast-sized)
-    val cellRank = withCentroids(queries, centroids)
+    val cellRank = withCentroids(asg.filter(isQuery), centroids)
       .select(col("vec_id").as("q_id"),
         posexplode(expr("array_sort(dists)")).as(Seq("p", "s")))
       .select(col("q_id"), (col("p") + 1).cast("long").as("cellrank"),
         col("s.cid").as("cid"))
-    val exact = GraftSession.trackCache(
-      rankTop5(corpus.drop("cid").crossJoin(broadcast(q))
-        .withColumn("cosine", cosineCol)).select("q_id", "n_id"))
-    val nExact = exact.count()
-    // fails-loudly on a degenerate corpus (the bpeTrain convention): an
-    // empty embeddings table or no vec_id < 10 queries would otherwise
-    // make every recall point NaN
-    require(nExact > 0,
-      "ivfRecallCurve: empty exact baseline — the embeddings table has " +
-        "no corpus rows or no query rows (vec_id < 10); the recall curve " +
-        "is undefined on this input")
+    val exact = exactTop5(asg, "ivfRecallCurve")
     // exact-top5 pairs annotated with their cell's per-query rank
-    val hitRank = exact
-      .join(corpus.select("n_id", "cid"), Seq("n_id"))
+    val hitRank = exact.pairs
+      .join(cellOf, Seq("n_id"))
       .join(broadcast(cellRank), Seq("q_id", "cid"))
       .groupBy("cellrank").agg(count(lit(1)).as("h"))
-    val sizes = corpus.groupBy("cid").agg(count(lit(1)).as("sz"))
+    val sizes = cellOf.groupBy("cid").agg(count(lit(1)).as("sz"))
     val candRank = cellRank.join(sizes, Seq("cid"), "left")
       .groupBy("cellrank")
       .agg(sum(coalesce(col("sz"), lit(0L))).as("c"))
     val perRank = candRank.join(hitRank, Seq("cellrank"), "left")
       .select(col("cellrank"), col("c"), coalesce(col("h"), lit(0L)).as("h"))
-    spark.range(1, cells + 1).toDF("nprobe")
+    exact.withRecall(spark.range(1, cells + 1).toDF("nprobe")
       .join(broadcast(perRank), col("cellrank") <= col("nprobe"))
       .groupBy("nprobe")
-      .agg(sum("c").as("n_candidates"), sum("h").as("n_hits"))
-      .withColumn("n_exact", lit(nExact))
-      .withColumn("recall_at_5",
-        round(col("n_hits") * 10000.0d / nExact) / 10000.0d)
+      .agg(sum("c").as("n_candidates"), sum("h").as("n_hits")))
       .orderBy("nprobe")
       .select("nprobe", "n_candidates", "n_hits", "n_exact", "recall_at_5")
   }
@@ -452,8 +475,8 @@ object Similarity {
     * is the PRUNING leg; production engines compose them (IVF-PQ).
     *
     * Everything is equi-joins and aggregations — the Spark-first shapes:
-    *  - codebook training: one bounded xxhash64-sample collect per
-    *    subspace, Lloyd iterated locally on the driver (r12); only the
+    *  - codebook training: one bounded xxhash64-sample collect, Lloyd
+    *    iterated locally per subspace on the driver (r12); only the
     *    m x k x (dim/m) codebook leaves training.
     *  - encoding: same join, kept as the columnar (vec_id, m, code) table
     *    — at 100 TB this IS the compressed index layout (m bytes/vector).
@@ -469,13 +492,9 @@ object Similarity {
   def pqTopK(spark: SparkSession, dir: String, m: Int = 8, k: Int = 16,
       iters: Int = 3, rerank: Int = 64): DataFrame = {
     val e = GraftSession.trackCache(vecs(spark, dir))
-    val subs = GraftSession.trackCache(pqSubvectors(e, m))
-    val codebook = pqCodebook(e, m, k, iters)
-    val codes = GraftSession.trackCache(pqEncoded(subs, codebook))
+    val pq = pqIndex(e, m, k, iters)
     // ADC over the WHOLE code table (PQ alone = flat compressed scan)
-    val approx = pqAdcScores(e, codes.filter(col("vec_id") >= 10),
-      pqLut(subs, codebook))
-    pqRerankExact(e, approx, rerank)
+    pqRerankExact(e, pqAdcScores(e, pq.codes.filter(isCorpus), pq.lut), rerank)
   }
 
   /** IVF-PQ (the FAISS `IndexIVFPQ` shape — how production vector search
@@ -491,24 +510,8 @@ object Similarity {
   def ivfPqTopK(spark: SparkSession, dir: String, cells: Int = 8, nprobe: Int = 2,
       m: Int = 8, k: Int = 16, iters: Int = 2, rerank: Int = 32): DataFrame = {
     val e = GraftSession.trackCache(vecs(spark, dir))
-    val coarse = kmeans(e, cells, iters)
-    val asg = GraftSession.trackCache(
-      assignedTo(e, coarse).select(col("vec_id"), col("cid")))
-    val subs = GraftSession.trackCache(pqSubvectors(e, m))
-    val codebook = pqCodebook(e, m, k, iters)
-    val codes = GraftSession.trackCache(pqEncoded(subs, codebook))
-    // IVF pruning: (q_id, vec_id) candidates from the probed cells only
-    val probe = probeCells(e.filter(col("vec_id") < 10), coarse, nprobe)
-      .select("q_id", "cid")
-    val cand = asg.filter(col("vec_id") >= 10)
-      .join(broadcast(probe), Seq("cid"))
-      .select("q_id", "vec_id")
-    // ADC restricted to the candidates: join their codes, look up the
-    // (q_id, m, code) partial dots, sum per pair
-    val approx = pqAdcScores(e,
-      cand.join(codes, Seq("vec_id")),
-      pqLut(subs, codebook), perQuery = true)
-    pqRerankExact(e, approx, rerank)
+    val cand = ivfCandidates(e, cells, nprobe, iters)
+    pqRerankExact(e, pqIndex(e, m, k, iters).candidateScores(e, cand), rerank)
   }
 
   /** IVF-PQ recall-vs-rerank curve (`ann_ivfpq_rerank_curve`,
@@ -522,7 +525,7 @@ object Similarity {
     * unlimited depth (`rerank` = Long.MaxValue, "re-rank every probed
     * candidate"): by construction it equals IVF with exact scoring at
     * the same nprobe — the matching point on the nprobe-only curve —
-    * and Round17Spec pins that equality plus monotonicity.
+    * and SimilaritySpec pins that equality plus monotonicity.
     *
     * One job, not one per depth (the r17 [[ivfRecallCurve]] algebra):
     * [[pqRerankExact]] admits a candidate iff its ADC rank along the
@@ -543,41 +546,18 @@ object Similarity {
       depths: Seq[Long] = Seq(8L, 16L, 32L, 64L, Long.MaxValue)): DataFrame = {
     import spark.implicits._
     val e = GraftSession.trackCache(vecs(spark, dir))
-    val coarse = kmeans(e, cells, iters)
-    val asg = GraftSession.trackCache(
-      assignedTo(e, coarse).select(col("vec_id"), col("cid")))
-    val subs = GraftSession.trackCache(pqSubvectors(e, m))
-    val codebook = pqCodebook(e, m, k, iters)
-    val codes = GraftSession.trackCache(pqEncoded(subs, codebook))
-    val probe = probeCells(e.filter(col("vec_id") < 10), coarse, nprobe)
-      .select("q_id", "cid")
-    val cand = asg.filter(col("vec_id") >= 10)
-      .join(broadcast(probe), Seq("cid"))
-      .select("q_id", "vec_id")
+    val cand = ivfCandidates(e, cells, nprobe, iters)
     val approx = GraftSession.trackCache(
-      pqAdcScores(e, cand.join(codes, Seq("vec_id")),
-        pqLut(subs, codebook), perQuery = true)
-        .select("q_id", "n_id", "ascore"))
+      pqIndex(e, m, k, iters).candidateScores(e, cand).select("q_id", "n_id", "ascore"))
     // each candidate's ADC rank = the smallest depth whose exact re-rank
     // sees it (the pqRerankExact admission order, verbatim)
     val aranked = approx.withColumn("arank", row_number().over(
       Window.partitionBy("q_id").orderBy(col("ascore").desc, col("n_id"))))
       .select("q_id", "n_id", "arank")
-    val q = e.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("v").as("va"), col("nrm").as("nrma"))
-    val corpus = e.filter(col("vec_id") >= 10)
-      .select(col("vec_id").as("n_id"), col("v").as("vb"), col("nrm").as("nrmb"))
-    val exact = GraftSession.trackCache(
-      rankTop5(corpus.crossJoin(broadcast(q)).withColumn("cosine", cosineCol))
-        .select("q_id", "n_id"))
-    val nExact = exact.count()
-    require(nExact > 0,
-      "ivfpqRerankCurve: empty exact baseline — the embeddings table has " +
-        "no corpus rows or no query rows (vec_id < 10); the recall curve " +
-        "is undefined on this input")
+    val exact = exactTop5(e, "ivfpqRerankCurve")
     // exact-top5 members that are candidates, with their ADC ranks
     // (inner join: a never-probed true neighbor can never be re-ranked)
-    val hitRanks = exact.join(aranked, Seq("q_id", "n_id")).select("arank")
+    val hitRanks = exact.pairs.join(aranked, Seq("q_id", "n_id")).select("arank")
     val perQ = approx.groupBy("q_id").agg(count(lit(1)).as("ncand"))
     val depthDf = depths.toDF("rerank")
     val nRer = depthDf.crossJoin(broadcast(perQ))
@@ -586,10 +566,7 @@ object Similarity {
     val hits = depthDf
       .join(broadcast(hitRanks), col("arank") <= col("rerank"), "left")
       .groupBy("rerank").agg(count(col("arank")).as("n_hits"))
-    nRer.join(hits, Seq("rerank"))
-      .withColumn("n_exact", lit(nExact))
-      .withColumn("recall_at_5",
-        round(col("n_hits") * 10000.0d / nExact) / 10000.0d)
+    exact.withRecall(nRer.join(hits, Seq("rerank")))
       .orderBy("rerank")
       .select("rerank", "n_reranked", "n_hits", "n_exact", "recall_at_5")
   }
@@ -620,7 +597,7 @@ object Similarity {
     *
     * By construction the m = 8 row equals [[ivfpqRerankCurve]]'s
     * rerank = 32 row at the shared defaults (same candidates, same
-    * codebook arithmetic, same admission order) — Round18Spec pins that
+    * codebook arithmetic, same admission order) — SimilaritySpec pins that
     * equality plus recall monotone non-decreasing in m. No SQL oracle —
     * codebooks are engine-specific sketch state (the [[pqTopK]]
     * convention); accuracy lives in the spec, cost in the sidecar. */
@@ -628,42 +605,23 @@ object Similarity {
       nprobe: Int = 2, rerank: Int = 32, k: Int = 16, iters: Int = 2,
       ms: Seq[Int] = Seq(4, 8, 16)): DataFrame = {
     val e = GraftSession.trackCache(vecs(spark, dir))
-    val coarse = kmeans(e, cells, iters)
-    val asg = GraftSession.trackCache(
-      assignedTo(e, coarse).select(col("vec_id"), col("cid")))
-    val probe = probeCells(e.filter(col("vec_id") < 10), coarse, nprobe)
-      .select("q_id", "cid")
-    val cand = GraftSession.trackCache(asg.filter(col("vec_id") >= 10)
-      .join(broadcast(probe), Seq("cid"))
-      .select("q_id", "vec_id"))
-    val q = e.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("v").as("va"), col("nrm").as("nrma"))
-    val corpus = e.filter(col("vec_id") >= 10)
-      .select(col("vec_id").as("n_id"), col("v").as("vb"), col("nrm").as("nrmb"))
-    val exact = GraftSession.trackCache(
-      rankTop5(corpus.crossJoin(broadcast(q)).withColumn("cosine", cosineCol))
-        .select("q_id", "n_id"))
-    val nExact = exact.count()
-    require(nExact > 0,
-      "ivfpqMCurve: empty exact baseline — the embeddings table has no " +
-        "corpus rows or no query rows (vec_id < 10); the recall curve is " +
-        "undefined on this input")
+    val cand = GraftSession.trackCache(ivfCandidates(e, cells, nprobe, iters))
+    val exact = exactTop5(e, "ivfpqMCurve")
     // per-m ADC legs over the SHARED candidate set, unioned under an m tag
     val scored = ms.map { mi =>
-      // cached like ivfPqTopK/ivfpqRerankCurve's subs: the per-m
-      // subvector explode has two consumers (the corpus-wide encode and
-      // the query-side LUT) — uncached each leg would pay the full
-      // corpus explode twice
+      // cached like pqIndex's subs: the per-m subvector explode has two
+      // consumers (the corpus-wide encode and the query-side LUT) —
+      // uncached each leg would pay the full corpus explode twice. The
+      // codes are not cached: each leg reads them once.
       val subs = GraftSession.trackCache(pqSubvectors(e, mi))
       val cb = pqCodebook(e, mi, k, iters)
-      pqAdcScores(e, cand.join(pqEncoded(subs, cb), Seq("vec_id")),
-        pqLut(subs, cb), perQuery = true)
+      PqIndex(subs, cb, pqEncoded(subs, cb)).candidateScores(e, cand)
         .select(lit(mi).as("m"), col("q_id"), col("n_id"), col("ascore"))
     }.reduce(_.unionAll(_))
     val aranked = scored.withColumn("arank", row_number().over(
       Window.partitionBy("m", "q_id").orderBy(col("ascore").desc, col("n_id"))))
     val hits = aranked.filter(col("arank") <= rerank)
-      .join(exact, Seq("q_id", "n_id"))
+      .join(exact.pairs, Seq("q_id", "n_id"))
       .groupBy("m").agg(count(lit(1)).as("n_hits"))
     // anchor every swept m (a zero-hit leg must still report its row)
     val msDf = {
@@ -673,13 +631,10 @@ object Similarity {
     // rerank cost is m-independent (identical candidate sets): one scalar
     val nReranked = cand.groupBy("q_id").agg(count(lit(1)).as("ncand"))
       .agg(sum(least(lit(rerank.toLong), col("ncand"))).as("n_reranked"))
-    msDf.join(broadcast(hits), Seq("m"), "left")
+    exact.withRecall(msDf.join(broadcast(hits), Seq("m"), "left")
       .withColumn("n_hits", coalesce(col("n_hits"), lit(0L)))
       .crossJoin(broadcast(nReranked))
-      .withColumn("code_bytes_per_vec", col("m").cast("long"))
-      .withColumn("n_exact", lit(nExact))
-      .withColumn("recall_at_5",
-        round(col("n_hits") * 10000.0d / nExact) / 10000.0d)
+      .withColumn("code_bytes_per_vec", col("m").cast("long")))
       .orderBy("m")
       .select("m", "code_bytes_per_vec", "n_reranked", "n_hits", "n_exact",
         "recall_at_5")
@@ -710,7 +665,7 @@ object Similarity {
     * its ADC rank along the (cells, q_id) total order is ≤ rerank. By
     * construction the cells = 8 row equals [[ivfpqMCurve]]'s m = 8 row
     * AND [[ivfpqRerankCurve]]'s rerank = 32 row — the three sweeps'
-    * shared-defaults crossing point (Round19Spec pins the triple
+    * shared-defaults crossing point (SimilaritySpec pins the triple
     * equality plus a literal [[ivfPqTopK]] run). No SQL oracle —
     * codebooks are engine-specific sketch state (the [[pqTopK]]
     * convention); accuracy lives in the spec, cost in the sidecar. */
@@ -719,59 +674,40 @@ object Similarity {
       m: Int = 8, k: Int = 16, iters: Int = 2): DataFrame = {
     import spark.implicits._
     val e = GraftSession.trackCache(vecs(spark, dir))
-    val subs = GraftSession.trackCache(pqSubvectors(e, m))
-    val codebook = pqCodebook(e, m, k, iters)
-    val codes = GraftSession.trackCache(pqEncoded(subs, codebook))
-    val queries = e.filter(col("vec_id") < 10)
+    val pq = pqIndex(e, m, k, iters)
     // per-cells candidate legs, union'd under a cells tag; cached — the
     // frame feeds the shared scoring, the rank join AND the cost rollup
     val candAll = GraftSession.trackCache(cellsSeq.map { c =>
       val coarse = kmeans(e, c, iters)
-      val probe = probeCells(queries, coarse, nprobe).select("q_id", "cid")
-      assignedTo(e.filter(col("vec_id") >= 10), coarse)
+      val probe = probeCells(e, coarse, nprobe).select("q_id", "cid")
+      assignedTo(e.filter(isCorpus), coarse)
         .select(col("vec_id"), col("cid"))
         .join(broadcast(probe), Seq("cid"))
         .select(lit(c).as("cells"), col("q_id"), col("vec_id"))
     }.reduce(_.unionAll(_)))
     // ONE shared ADC pass over the distinct candidate union
     val scored = GraftSession.trackCache(
-      pqAdcScores(e, candAll.select("q_id", "vec_id").distinct()
-          .join(codes, Seq("vec_id")),
-        pqLut(subs, codebook), perQuery = true)
+      pq.candidateScores(e, candAll.select("q_id", "vec_id").distinct())
         .select("q_id", "n_id", "ascore"))
     val aranked = candAll
       .select(col("cells"), col("q_id"), col("vec_id").as("n_id"))
       .join(scored, Seq("q_id", "n_id"))
       .withColumn("arank", row_number().over(
         Window.partitionBy("cells", "q_id").orderBy(col("ascore").desc, col("n_id"))))
-    val q = queries
-      .select(col("vec_id").as("q_id"), col("v").as("va"), col("nrm").as("nrma"))
-    val corpus = e.filter(col("vec_id") >= 10)
-      .select(col("vec_id").as("n_id"), col("v").as("vb"), col("nrm").as("nrmb"))
-    val exact = GraftSession.trackCache(
-      rankTop5(corpus.crossJoin(broadcast(q)).withColumn("cosine", cosineCol))
-        .select("q_id", "n_id"))
-    val nExact = exact.count()
-    require(nExact > 0,
-      "ivfpqCellsCurve: empty exact baseline — the embeddings table has " +
-        "no corpus rows or no query rows (vec_id < 10); the recall curve " +
-        "is undefined on this input")
+    val exact = exactTop5(e, "ivfpqCellsCurve")
     val hits = aranked.filter(col("arank") <= rerank)
-      .join(exact, Seq("q_id", "n_id"))
+      .join(exact.pairs, Seq("q_id", "n_id"))
       .groupBy("cells").agg(count(lit(1)).as("n_hits"))
     val costs = candAll.groupBy("cells", "q_id").agg(count(lit(1)).as("ncand"))
       .groupBy("cells").agg(sum("ncand").as("n_cand"),
         sum(least(lit(rerank.toLong), col("ncand"))).as("n_reranked"))
     // anchor every swept cells value (a zero-hit leg still reports)
-    cellsSeq.toDF("cells")
+    exact.withRecall(cellsSeq.toDF("cells")
       .join(broadcast(costs), Seq("cells"), "left")
       .join(broadcast(hits), Seq("cells"), "left")
       .withColumn("n_cand", coalesce(col("n_cand"), lit(0L)))
       .withColumn("n_reranked", coalesce(col("n_reranked"), lit(0L)))
-      .withColumn("n_hits", coalesce(col("n_hits"), lit(0L)))
-      .withColumn("n_exact", lit(nExact))
-      .withColumn("recall_at_5",
-        round(col("n_hits") * 10000.0d / nExact) / 10000.0d)
+      .withColumn("n_hits", coalesce(col("n_hits"), lit(0L))))
       .orderBy("cells")
       .select("cells", "n_cand", "n_reranked", "n_hits", "n_exact",
         "recall_at_5")
@@ -822,60 +758,40 @@ object Similarity {
     * arithmetic.) */
   private def pqCodebook(e: DataFrame, m: Int, k: Int,
       iters: Int): Seq[(Int, Int, Seq[Double])] = {
-    // ONE bounded collect, local Lloyd per subspace (r12) — the
-    // [[kmeans]] rationale verbatim: the train sample is max(32k, 256)
-    // vectors by design, and the old per-iteration encode-join-agg-
-    // collect chain was pure stage-count overhead on a driver-sized
-    // frame. Arithmetic is unchanged: same hash-sample order, init from
-    // the first k sampled vectors' slices, argmin by |c|^2 - 2<sv,c>
-    // with the smaller-code tie rule (the old min(struct(d, code))),
-    // empty cells keep their codeword.
+    // ONE bounded collect of max(32k, 256) vectors; [[lloyd]] trains each
+    // subspace on its slice of that sample
     val sub = 64 / m
-    val train: Array[Array[Double]] = e
-      .withColumn("h", xxhash64(col("vec_id"))).orderBy("h")
-      .limit(math.max(32 * k, 256))
-      .select("v").collect().map(_.getSeq[Double](0).toArray)
-    // codebook(mi)(ci) = codeword; init = slices of the first k samples
-    val codebook: Array[Array[Array[Double]]] = Array.tabulate(m) { mi =>
-      train.take(k).map(v => v.slice(mi * sub, (mi + 1) * sub))
+    val train = trainSample(e, math.max(32 * k, 256))
+    (0 until m).flatMap { mi =>
+      lloyd(train.map(_.slice(mi * sub, (mi + 1) * sub)), k, iters)
+        .zipWithIndex.map { case (c, ci) => (mi, ci, c.toSeq) }
     }
-    for (_ <- 1 to iters; mi <- 0 until m) {
-      val cb = codebook(mi)
-      val sums = Array.fill(cb.length)(new Array[Double](sub))
-      val counts = new Array[Long](cb.length)
-      train.foreach { v =>
-        val off = mi * sub
-        var best = -1
-        var bestD = Double.PositiveInfinity
-        var ci = 0
-        while (ci < cb.length) {
-          val c = cb(ci)
-          var cc = 0.0
-          var vc = 0.0
-          var i = 0
-          while (i < sub) { cc += c(i) * c(i); vc += v(off + i) * c(i); i += 1 }
-          val d = cc - 2.0 * vc
-          if (d < bestD) { bestD = d; best = ci } // strict <: ties keep the smaller code
-          ci += 1
-        }
-        counts(best) += 1
-        var i = 0
-        while (i < sub) { sums(best)(i) += v(off + i); i += 1 }
-      }
-      var ci = 0
-      while (ci < cb.length) {
-        if (counts(ci) > 0) codebook(mi)(ci) = sums(ci).map(_ / counts(ci))
-        ci += 1
-      }
-    }
-    (for (mi <- 0 until m; ci <- codebook(mi).indices)
-      yield (mi, ci, codebook(mi)(ci).toSeq)).toSeq
+  }
+
+  /** A PQ index: the subvector layout, the codebook and the code table. */
+  private case class PqIndex(subs: DataFrame, codebook: Seq[(Int, Int, Seq[Double])],
+      codes: DataFrame) {
+    def lut: DataFrame = pqLut(subs, codebook)
+
+    /** ADC restricted to per-query (q_id, vec_id) candidates: join their
+      * codes, look up the (q_id, m, code) partial dots, sum per pair. */
+    def candidateScores(e: DataFrame, cand: DataFrame): DataFrame =
+      pqAdcScores(e, cand.join(codes, Seq("vec_id")), lut, perQuery = true)
+  }
+
+  /** Builds the PQ index of `e` with `m` subspaces of `k` codewords; the
+    * subvectors (two consumers: the encode and the query-side LUT) and the
+    * codes are cached. */
+  private def pqIndex(e: DataFrame, m: Int, k: Int, iters: Int): PqIndex = {
+    val subs = GraftSession.trackCache(pqSubvectors(e, m))
+    val codebook = pqCodebook(e, m, k, iters)
+    PqIndex(subs, codebook, GraftSession.trackCache(pqEncoded(subs, codebook)))
   }
 
   /** ADC lookup table: partial dot of each query subvector with each
     * codeword — q x m x k small rows, always broadcast. */
   private def pqLut(subs: DataFrame, cb: Seq[(Int, Int, Seq[Double])]): DataFrame =
-    subs.filter(col("vec_id") < 10)
+    subs.filter(isQuery)
       .join(broadcast(pqCbDf(subs.sparkSession, cb)), Seq("m"))
       .select(col("vec_id").as("q_id"), col("m"), col("code"),
         expr("dot_product(sv, c)").as("pdot"))
@@ -905,9 +821,8 @@ object Similarity {
       .filter(col("r") <= rerank)
       .select("q_id", "n_id")
     val exact = cand
-      .join(e.select(col("vec_id").as("n_id"), col("v").as("vb"), col("nrm").as("nrmb")), Seq("n_id"))
-      .join(broadcast(e.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("q_id"), col("v").as("va"), col("nrm").as("nrma"))), Seq("q_id"))
+      .join(corpus(e), Seq("n_id"))
+      .join(broadcast(queries(e)), Seq("q_id"))
     rankTop5(exact.withColumn("cosine", cosineCol))
   }
 
@@ -1115,8 +1030,7 @@ object Similarity {
     def retained(w: Int) = expr(
       s"""floor(sqrt(aggregate(slice(v, 1, $w), 0.0d, (a, x) -> a + x * x))
          |  / sqrt(aggregate(v, 0.0d, (a, x) -> a + x * x)) * 1e4 + 0.5) / 1e4""".stripMargin)
-    Tables(spark, dir).embeddings
-      .select(col("vec_id"), expr("transform(embedding, x -> cast(x as double))").as("v"))
+    doubleVecs(spark, dir)
       .select(col("vec_id"),
         retained(16).as("retain_16"),
         retained(32).as("retain_32"),
@@ -1140,17 +1054,16 @@ object Similarity {
     * quantized ONCE to 1e-12 units then summed as exact BIGINTs. A
     * zero vector (scale 0) takes the declared all-zero-codes path. */
   def int8Quantize(spark: SparkSession, dir: String): DataFrame =
-    Tables(spark, dir).embeddings
-      .select(col("vec_id"), expr("transform(embedding, x -> cast(x as double))").as("emb"))
-      .withColumn("scale", expr("array_max(transform(emb, x -> abs(x))) / 127.0"))
+    doubleVecs(spark, dir)
+      .withColumn("scale", expr("array_max(transform(v, x -> abs(x))) / 127.0"))
       .select(col("vec_id"),
-        size(col("emb")).cast("long").as("n_dims"),
+        size(col("v")).cast("long").as("n_dims"),
         expr("cast(floor(scale * 1e9 + 0.5) as bigint)").as("scale_q9"),
         expr("""CASE WHEN scale > 0 THEN
-                  aggregate(emb, 0L, (a, x) -> a + abs(cast(floor(x / scale + 0.5) as bigint)))
+                  aggregate(v, 0L, (a, x) -> a + abs(cast(floor(x / scale + 0.5) as bigint)))
                 ELSE 0L END""").as("sum_abs_code"),
         expr("""CASE WHEN scale > 0 THEN
-                  aggregate(emb, 0L, (a, x) ->
+                  aggregate(v, 0L, (a, x) ->
                     a + cast(floor((x - floor(x / scale + 0.5) * scale)
                                  * (x - floor(x / scale + 0.5) * scale) * 1e12 + 0.5) as bigint))
                 ELSE 0L END""").as("sse_q12"))

@@ -9,8 +9,7 @@ import org.apache.spark.sql.functions._
   * variance band, the train→apply BPE loop against an independent
   * trainer+encoder, the bpeTrain materialization boundary (R > 32), the
   * priority-sampling reservoir against an independent priority replay
-  * with the DLT estimator band, and the IVF recall-curve contracts
-  * (monotone, exact endpoint).
+  * with the DLT estimator band.
   */
 class Round16Spec extends SparkSpec {
 
@@ -312,24 +311,5 @@ class Round16Spec extends SparkSpec {
     val got = TextAnalysis.bpeApplyCore(docs, rounds = 1).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
     assert(got === Seq(("a", 3L, 1L), ("bc", 2L, 1L)))
-  }
-
-  // ---------- ann_recall_curve ----------
-
-  test("ivfRecallCurve: recall is monotone in nprobe, candidates nest, and the full probe reproduces brute force") {
-    val rows = Similarity.ivfRecallCurve(spark, sf).orderBy("nprobe").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getDouble(4)))
-    assert(rows.map(_._1).toSeq === (1L to 8L))
-    assert(rows.forall(_._4 == 50L), "10 queries x top-5 exact baseline")
-    val recalls = rows.map(_._5)
-    assert(recalls.zip(recalls.tail).forall { case (a, b) => b >= a },
-      s"recall not monotone: ${recalls.mkString(", ")}")
-    val cands = rows.map(_._2)
-    assert(cands.zip(cands.tail).forall { case (a, b) => b >= a },
-      s"candidate counts not nested: ${cands.mkString(", ")}")
-    assert(recalls.last === 1.0, s"full probe must reproduce brute force, got ${recalls.last}")
-    assert(recalls.head < 1.0 || cands.head == cands.last,
-      "sweep is vacuous: nprobe=1 already at full recall with fewer candidates")
-    info(s"curve: ${rows.map(r => s"np=${r._1} cand=${r._2} r@5=${r._5}").mkString("; ")}")
   }
 }

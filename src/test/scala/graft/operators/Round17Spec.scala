@@ -1,16 +1,13 @@
 package graft.operators
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 /** Round-17 gates: the streaming reservoir against its batch sibling
   * (key-level equality at the driver fixture AND a planted multi-file
   * corpus forcing cross-micro-batch admit/evict, with the τ-absent
-  * branch), the IVF-PQ rerank-depth curve contracts (monotone in depth,
-  * the ∞ endpoint = IVF-with-exact-scoring at the same nprobe, one
-  * interior point = a literal ivfPqTopK run), and the bpeApply
-  * materialization boundary (R > BpeMatEvery = 32 via the segmented
-  * chain, the apply-side twin of Round16Spec's train boundary gate).
+  * branch), and the bpeApply materialization boundary (R > BpeMatEvery =
+  * 32 via the segmented chain, the apply-side twin of Round16Spec's train
+  * boundary gate).
   */
 class Round17Spec extends SparkSpec {
 
@@ -67,9 +64,9 @@ class Round17Spec extends SparkSpec {
         "τ-absent estimates must equal the raw weights exactly")
       assert(streamed.count(_._1 == "yy") === k, "the > k stratum must report exactly k members")
     } finally {
-      // delete the fixture parquet (the streaming side's checkpoint is a
-      // Spark-managed temporary one, removed on query stop) — without
-      // this every spec run leaks the fixture in /tmp. The walk stream
+      // delete the fixture parquet (the streaming side's checkpoint sits
+      // in a GraftSession scratch dir, swept at exit) — without this
+      // every spec run leaks the fixture in /tmp. The walk stream
       // must be closed (it holds a directory handle), and one failed
       // delete must not abandon the rest of the cleanup.
       import scala.jdk.CollectionConverters._
@@ -79,43 +76,6 @@ class Round17Spec extends SparkSpec {
           catch { case _: java.io.IOException => () })
       }
     }
-  }
-
-  // ---------- ann_ivfpq_rerank_curve ----------
-
-  test("ivfpqRerankCurve: recall monotone in depth, ∞ endpoint = IVF-exact at the same nprobe, depth-8 point = a literal ivfPqTopK run") {
-    val rows = Similarity.ivfpqRerankCurve(spark, sf).orderBy("rerank").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getDouble(4)))
-    assert(rows.map(_._1).toSeq === Seq(8L, 16L, 32L, 64L, Long.MaxValue))
-    assert(rows.forall(_._4 == 50L), "10 queries x top-5 exact baseline")
-    val recalls = rows.map(_._5)
-    assert(recalls.zip(recalls.tail).forall { case (a, b) => b >= a },
-      s"recall not monotone in rerank: ${recalls.mkString(", ")}")
-    val rer = rows.map(_._2)
-    assert(rer.zip(rer.tail).forall { case (a, b) => b >= a },
-      s"re-rank volumes not monotone: ${rer.mkString(", ")}")
-    val pairs = (df: org.apache.spark.sql.DataFrame) => df
-      .select("q_id", "n_id").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val exact5 = pairs(Similarity.topK(spark, sf))
-    // the ∞ endpoint: re-ranking EVERY probed candidate exactly is IVF
-    // with exact scoring — the matching nprobe-only point (cells=8,
-    // nprobe=2, iters=2, the curve's build parameters)
-    val ivf5 = pairs(Similarity.ivfTopK(spark, sf, k = 8, nprobe = 2, iters = 2))
-    val infHits = ivf5.intersect(exact5).size.toLong
-    assert(rows.last._3 === infHits,
-      s"∞ hits ${rows.last._3} != IVF-exact hits $infHits at the same nprobe")
-    // the curve's single-plan algebra equals the production composition
-    // at an interior depth: hits(8) = |ivfPqTopK(rerank=8) ∩ exact top-5|
-    val pq8 = pairs(Similarity.ivfPqTopK(spark, sf, rerank = 8))
-    assert(rows.head._3 === pq8.intersect(exact5).size.toLong,
-      "depth-8 hits diverge from a literal ivfPqTopK(rerank=8) run")
-    // non-vacuity: the sweep must actually move (otherwise the fixture
-    // stopped exercising the refinement axis)
-    assert(rows.head._2 < rows.last._2,
-      "depth 8 already re-ranks every candidate — the sweep is vacuous")
-    info(s"curve: ${rows.map(r => s"d=${if (r._1 == Long.MaxValue) "inf" else r._1} " +
-      s"rer=${r._2} r@5=${r._5}").mkString("; ")}")
   }
 
   // ---------- bpeApply across the BpeMatEvery boundary ----------

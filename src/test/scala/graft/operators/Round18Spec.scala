@@ -3,61 +3,12 @@ package graft.operators
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
-/** Round-18 gates: the IVF-PQ code-size curve contracts (recall monotone
-  * non-decreasing in m, the m = 8 row = the rerank curve's rerank = 32 row
-  * at the shared build parameters, one point = a literal ivfPqTopK run),
-  * and the restructured containment candidate generation (the K = 3 share
+/** Round-18 gates: the restructured containment candidate generation (the K = 3 share
   * gate's zero-miss boundary — a true pair whose miss budget is spent on
   * its very rarest shingles shares EXACTLY K prefix' shingles — plus the
   * short-doc side leg that keeps the exact na-dependent gate).
   */
 class Round18Spec extends SparkSpec {
-
-  // ---------- ann_ivfpq_m_curve ----------
-
-  test("ivfpqMCurve: recall monotone in m, m=8 row = rerank curve's rerank=32 row, m=8 = a literal ivfPqTopK run") {
-    val rows = Similarity.ivfpqMCurve(spark, sf).orderBy("m").collect()
-      .map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3),
-        r.getLong(4), r.getDouble(5)))
-    assert(rows.map(_._1).toSeq === Seq(4, 8, 16))
-    assert(rows.forall(_._5 == 50L), "10 queries x top-5 exact baseline")
-    // code bytes per vector IS the swept knob
-    assert(rows.map(_._2).toSeq === Seq(4L, 8L, 16L))
-    // the rerank cost column is m-independent by construction (identical
-    // IVF candidate sets — compression never changes what is probed)
-    assert(rows.map(_._3).distinct.length === 1,
-      s"n_reranked must not vary with m: ${rows.map(_._3).mkString(", ")}")
-    val recalls = rows.map(_._6)
-    // FIXTURE-PINNED (like the recall-floor specs), not a structural
-    // invariant: unlike the nprobe curve (candidate supersets) and the
-    // rerank curve (depth nesting), nothing guarantees ADC quality is
-    // non-decreasing in m at fixed rerank — finer codes merely tend to
-    // rank better. On THIS fixture (seed-pinned data, deterministic
-    // k-means inits) the observed recalls are 0.2/0.34/0.36; if a
-    // legitimate fixture or codebook-training change reorders them,
-    // re-pin rather than suspect the curve.
-    assert(recalls.zip(recalls.tail).forall { case (a, b) => b >= a },
-      s"recall not monotone in m on the pinned fixture: ${recalls.mkString(", ")}")
-    // the m = 8 row is the SAME point as the rerank curve's rerank = 32
-    // row (shared defaults: cells=8, nprobe=2, k=16, iters=2, m=8) — the
-    // two sweeps must agree where their axes cross
-    val rer32 = Similarity.ivfpqRerankCurve(spark, sf)
-      .filter(col("rerank") === 32L).collect().head
-    val m8 = rows.find(_._1 == 8).get
-    assert(m8._4 === rer32.getLong(2),
-      s"m=8 n_hits ${m8._4} != rerank-curve rerank=32 n_hits ${rer32.getLong(2)}")
-    assert(m8._3 === rer32.getLong(1),
-      s"m=8 n_reranked ${m8._3} != rerank-curve rerank=32 n_reranked ${rer32.getLong(1)}")
-    // and both equal the production composition run literally
-    val pairs = (df: org.apache.spark.sql.DataFrame) => df
-      .select("q_id", "n_id").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val exact5 = pairs(Similarity.topK(spark, sf))
-    val pqM8 = pairs(Similarity.ivfPqTopK(spark, sf))
-    assert(m8._4 === pqM8.intersect(exact5).size.toLong,
-      "m=8 hits diverge from a literal ivfPqTopK() run at the defaults")
-    info(s"curve: ${rows.map(r => s"m=${r._1} r@5=${r._6}").mkString("; ")}")
-  }
 
   // ---------- dedup_containment: K-share gate + short-doc leg ----------
 

@@ -3,59 +3,13 @@ package graft.operators
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
-/** Round-19 gates: the IVF-PQ granularity curve's contracts (the triple
-  * crossing-point equality — at the shared defaults the cells, m, and
-  * rerank sweeps are the SAME point, and that point equals a literal
-  * ivfPqTopK run), and the restructured Jaccard candidate generation (the
+/** Round-19 gates: the restructured Jaccard candidate generation (the
   * K = 3 share gate's zero-miss boundary on both legs — a true pair whose
   * miss budgets are spent on its very rarest shingles shares EXACTLY K
   * extended-prefix shingles; short docs and their cross pairs ride the
   * broadcast side leg).
   */
 class Round19Spec extends SparkSpec {
-
-  // ---------- ann_ivfpq_cells_curve ----------
-
-  test("ivfpqCellsCurve: cost column honest, cells=8 row = m-curve m=8 row = rerank-curve rerank=32 row = a literal ivfPqTopK run") {
-    val rows = Similarity.ivfpqCellsCurve(spark, sf).orderBy("cells").collect()
-      .map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3),
-        r.getLong(4), r.getDouble(5)))
-    assert(rows.map(_._1).toSeq === Seq(4, 8, 16))
-    assert(rows.forall(_._5 == 50L), "10 queries x top-5 exact baseline")
-    // cost honesty: n_reranked = sum_q min(rerank, ncand) can never
-    // exceed the probed candidate volume, and a probed leg reports it
-    rows.foreach { r =>
-      assert(r._3 <= r._2, s"cells=${r._1}: n_reranked ${r._3} > n_cand ${r._2}")
-      assert(r._2 > 0L, s"cells=${r._1}: empty candidate leg")
-    }
-    // the TRIPLE crossing point: at the shared defaults (cells=8,
-    // nprobe=2, m=8, rerank=32, k=16, iters=2) all three sweeps describe
-    // the identical configuration — the same coarse build, candidates,
-    // codes and admission order — so their rows must agree exactly
-    val c8 = rows.find(_._1 == 8).get
-    val m8 = Similarity.ivfpqMCurve(spark, sf)
-      .filter(col("m") === 8).collect().head
-    assert(c8._4 === m8.getLong(3),
-      s"cells=8 n_hits ${c8._4} != m-curve m=8 n_hits ${m8.getLong(3)}")
-    assert(c8._3 === m8.getLong(2),
-      s"cells=8 n_reranked ${c8._3} != m-curve m=8 n_reranked ${m8.getLong(2)}")
-    val rer32 = Similarity.ivfpqRerankCurve(spark, sf)
-      .filter(col("rerank") === 32L).collect().head
-    assert(c8._4 === rer32.getLong(2),
-      s"cells=8 n_hits ${c8._4} != rerank-curve rerank=32 n_hits ${rer32.getLong(2)}")
-    assert(c8._3 === rer32.getLong(1),
-      s"cells=8 n_reranked ${c8._3} != rerank-curve rerank=32 n_reranked ${rer32.getLong(1)}")
-    // and the crossing point equals the production composition literally
-    val pairs = (df: org.apache.spark.sql.DataFrame) => df
-      .select("q_id", "n_id").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val exact5 = pairs(Similarity.topK(spark, sf))
-    val pq = pairs(Similarity.ivfPqTopK(spark, sf))
-    assert(c8._4 === pq.intersect(exact5).size.toLong,
-      "cells=8 hits diverge from a literal ivfPqTopK() run at the defaults")
-    info(s"curve: ${rows.map(r =>
-      s"cells=${r._1} n_cand=${r._2} r@5=${r._6}").mkString("; ")}")
-  }
 
   // ---------- dedup_ngram_jaccard: K-share gate + short-doc side leg ----------
 
