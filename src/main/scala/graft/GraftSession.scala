@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import graft.functions.{CdcChunks, CharStats, DotProduct, GramStats, HammingDistance64, MinHash32, SimHash64, SortedIntersectCount}
@@ -136,6 +136,19 @@ object GraftSession {
   /** Contexts whose application end sweeps their sessions' caches. */
   private val watched = java.util.Collections.newSetFromMap(
     new java.util.WeakHashMap[org.apache.spark.SparkContext, java.lang.Boolean])
+
+  /** Eagerly localCheckpoints the frame `build` returns and the row of
+    * metrics it observes with the [[Observation]] it is handed. The
+    * checkpoint's own job fills the observation, so a fixed-point loop
+    * reads its per-round numbers (sizes, changed rows) without a second
+    * action over the rows. The metrics arrive through the listener bus
+    * just after the job ends; a bounded wait fails loudly instead of
+    * hanging should they never come. */
+  def checkpointObserved(build: Observation => DataFrame): (DataFrame, Row) = {
+    val obs = Observation()
+    val cp = build(obs).localCheckpoint()
+    (cp, scala.concurrent.Await.result(obs.future, scala.concurrent.duration.Duration(5, "min")))
+  }
 
   /** `df.cache()` + remember the frame so [[sweepCaches]] can free it. */
   def trackCache(df: DataFrame): DataFrame = synchronized {

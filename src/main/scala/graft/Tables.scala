@@ -1,8 +1,10 @@
 package graft
 
+import scala.collection.concurrent.TrieMap
+import org.apache.hadoop.fs.{Path => HadoopPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.expr
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.types.{LongType, StructType}
 
 /** Parquet table loaders for the driver's TPC-H-ish star schema.
   *
@@ -12,7 +14,14 @@ import org.apache.spark.sql.types.LongType
   * `PushedFilters` must carry the query predicates.
   */
 final case class Tables(spark: SparkSession, dir: String) {
-  private def t(name: String): DataFrame = spark.read.parquet(s"$dir/$name.parquet")
+  private def t(name: String): DataFrame = read(name)._1
+
+  /** The table `name` read with its memoized schema, and its layout. */
+  private def read(name: String): (DataFrame, Tables.Layout) = {
+    val path = s"$dir/$name.parquet"
+    val layout = Tables.layout(spark, path)
+    (spark.read.schema(layout.schema).parquet(path), layout)
+  }
 
   /** Gated scatter for the compute-heavy per-row tables (documents,
     * embeddings). The driver's testdata writes each table as ONE parquet
@@ -23,23 +32,21 @@ final case class Tables(spark: SparkSession, dir: String) {
     * real many-split 100 TB table the gate makes this a no-op (the scan
     * already feeds the cluster), so the extra shuffle is only ever paid
     * when it buys parallelism that the file layout withheld. */
-  private def scattered(df: DataFrame, name: String): DataFrame = {
+  private def scattered(name: String): DataFrame = {
+    val (df, layout) = read(name)
     val slots = spark.sparkContext.defaultParallelism
     // the split-count probe (`df.rdd.getNumPartitions`) forces a full
-    // physical-planning + RDD-conversion pass, so memoize it. The split
-    // count is a pure function of the file layout AND the session's
-    // file-split configs, so both are in the key — two sessions in one
-    // JVM with different maxPartitionBytes (or a different parallelism)
-    // must not share a count, or the gate would silently skip/apply the
-    // scatter under the wrong plan shape. A regenerated testdata dir is
-    // the remaining invalidation case: call [[Tables.clearSplitCounts]].
-    // plain .get (no custom default): these are registered confs, and Spark
-    // 4 type-validates any caller-supplied default string
-    val key = (dir, name,
-      spark.conf.get("spark.sql.files.maxPartitionBytes"),
-      spark.conf.get("spark.sql.files.openCostInBytes"),
-      slots)
-    val splits = Tables.splitCounts.getOrElseUpdate(key, df.rdd.getNumPartitions)
+    // physical-planning + RDD-conversion pass, so it is memoized with the
+    // table's layout (which a rewrite of the files replaces). The count
+    // is also a function of the session's file-split configs, so they
+    // key it — two sessions in one JVM with different maxPartitionBytes
+    // (or a different parallelism) must not share a count, or the gate
+    // would silently skip/apply the scatter under the wrong plan shape.
+    // plain .get (no custom default): these are registered confs, and
+    // Spark 4 type-validates any caller-supplied default string
+    val key = (spark.conf.get("spark.sql.files.maxPartitionBytes"),
+      spark.conf.get("spark.sql.files.openCostInBytes"), slots)
+    val splits = layout.splits.getOrElseUpdate(key, df.rdd.getNumPartitions)
     if (splits < slots) df.repartition(slots) else df
   }
 
@@ -65,19 +72,51 @@ final case class Tables(spark: SparkSession, dir: String) {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     Tables.withMicrosTs(t("events"))
   }
-  def documents: DataFrame = scattered(t("documents"), "documents")
-  def embeddings: DataFrame = scattered(t("embeddings"), "embeddings")
+  def documents: DataFrame = scattered("documents")
+  def embeddings: DataFrame = scattered("embeddings")
 }
 
 object Tables {
-  private val splitCounts =
-    scala.collection.concurrent.TrieMap.empty[(String, String, String, String, Int), Int]
+  /** What one table's files fix: the schema Spark infers from them, and
+    * the scan split counts [[Tables.scattered]] probed, per split-config
+    * key (maxPartitionBytes, openCostInBytes, parallelism). */
+  private[graft] final case class Layout(schema: StructType,
+      splits: TrieMap[(String, String, Int), Int] = TrieMap.empty)
 
-  /** Drops every memoized split count — for the rare case where the files
-    * under a previously-probed dir changed (regenerated testdata, a
-    * rewritten layout). Mirrors what Warehouse.dropShingleLayout does for
-    * the shingle registry. */
-  def clearSplitCounts(): Unit = splitCounts.clear()
+  /** The confs that change the schema Spark infers from parquet footers. */
+  private val inferenceConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp")
+
+  private val layouts = TrieMap.empty[(String, Seq[(String, Long, Long)], Seq[String]), Layout]
+
+  /** The layout of the parquet table at `path`. Schema inference is a
+    * Spark job (a footer read), so each table is inferred once. The memo
+    * key is the table's files — name, size and modification time of each
+    * — and the inference confs, so rewritten files or a changed conf
+    * infer afresh and nothing needs an explicit clear. */
+  private[graft] def layout(spark: SparkSession, path: String): Layout = {
+    val key = (path, files(spark, path), inferenceConfs.map(spark.conf.get))
+    layouts.getOrElseUpdate(key, Layout(spark.read.parquet(path).schema))
+  }
+
+  /** (name, size, mtime) of every file under `path`, sorted; empty when
+    * `path` does not exist (the read then fails with Spark's own error). */
+  private def files(spark: SparkSession, path: String): Seq[(String, Long, Long)] = {
+    val p = new HadoopPath(path)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    val out = Seq.newBuilder[(String, Long, Long)]
+    try {
+      val it = fs.listFiles(p, true)
+      while (it.hasNext) {
+        val f = it.next()
+        out += ((f.getPath.toString, f.getLen, f.getModificationTime))
+      }
+    } catch { case _: java.io.FileNotFoundException => }
+    out.result().sorted
+  }
 
   /** The `ts` rebuild for an events frame, batch or stream: a nanos long
     * (the TIMESTAMP(NANOS) layout read under nanosAsLong) becomes a

@@ -892,8 +892,15 @@ object Dedup {
     * representative each cluster keeps). Distributed min-label
     * propagation — one join per iteration, converges in O(component
     * diameter) rounds (near-dup clusters are shallow), every step a plain
-    * shuffle join that AQE handles at any scale. */
-  def clusters(spark: SparkSession, dir: String): DataFrame = {
+    * shuffle join that AQE handles at any scale. Each round is one
+    * checkpoint job: an Observation on it counts the changed labels, so
+    * the convergence test launches no job of its own. */
+  def clusters(spark: SparkSession, dir: String): DataFrame = clusterLabels(spark, dir)._1
+
+  /** [[clusters]] and its row count (the number of clustered docs), both
+    * from the propagation's own checkpoint jobs: the labels are the last
+    * round's checkpoint, and its Observation holds the count. */
+  private[graft] def clusterLabels(spark: SparkSession, dir: String): (DataFrame, Long) = {
     val pairs = minhashLsh(spark, dir).select("doc_a", "doc_b")
     val edges = GraftSession.trackCache(
       pairs.union(pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b"))))
@@ -906,6 +913,7 @@ object Dedup {
       .withColumn("lbl", col("doc"))
       .localCheckpoint()
     var converged = false
+    var nDocs = 0L
     var iter = 0
     val maxIter = 50
     while (!converged && iter < maxIter) {
@@ -914,8 +922,9 @@ object Dedup {
       // chains, so convergence takes O(log diameter) rounds instead of
       // O(diameter) — at small SF each round is dominated by fixed
       // job/checkpoint overhead, and at 100 TB rounds are whole shuffle
-      // stages, so halving the round count pays in both regimes.
-      val next = edges
+      // stages, so halving the round count pays in both regimes. The
+      // Observation counts changed labels (the convergence test) and rows.
+      val (next, m) = GraftSession.checkpointObserved(obs => edges
         .join(labels.withColumnRenamed("doc", "doc_b").withColumnRenamed("lbl", "nlbl"), Seq("doc_b"))
         .groupBy(col("doc_a").as("doc")).agg(min("nlbl").as("nbr"))
         .join(labels, Seq("doc"))
@@ -923,8 +932,9 @@ object Dedup {
         .select(col("doc"),
           least(col("nbr"), col("lbl"), coalesce(col("jmp"), col("lbl"))).as("lbl"),
           (least(col("nbr"), coalesce(col("jmp"), col("lbl"))) < col("lbl")).as("chg"))
-        .localCheckpoint()
-      converged = next.filter(col("chg")).isEmpty
+        .observe(obs, count(when(col("chg"), 1)).as("changed"), count(lit(1)).as("n")))
+      converged = m.getLong(0) == 0L
+      nDocs = m.getLong(1)
       freeLocalCheckpoint(labels)
       labels = next.select("doc", "lbl")
       iter += 1
@@ -933,7 +943,7 @@ object Dedup {
     // would silently mislabel any component with diameter > maxIter
     if (!converged) throw new IllegalStateException(
       s"label propagation did not converge in $maxIter iterations")
-    labels.select(col("doc").as("doc_id"), col("lbl").as("cluster_id"))
+    (labels.select(col("doc").as("doc_id"), col("lbl").as("cluster_id")), nDocs)
   }
 
   /** Frees the block-store copy behind a localCheckpoint()ed frame (the

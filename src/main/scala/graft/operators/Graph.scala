@@ -1,7 +1,9 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.GraftSession
 
 /** Iterative link analysis over join-derived graphs — the web-graph
   * centrality signal the CommonCrawl curation stacks (OPIC/Harmonic/
@@ -102,7 +104,7 @@ object Graph {
     // the same exact BIGINT Σw as the old aggregate-join.
     val edges = graft.GraftSession.trackCache(
       edges0.withColumn("wtot", sum("w").over(
-        org.apache.spark.sql.expressions.Window.partitionBy("src"))))
+        Window.partitionBy("src"))))
     val nodes = graft.GraftSession.trackCache(edges.select("src").distinct())
     // scalar |V| (node-count, not node rows) — sizes the teleport term
     val v = nodes.count()
@@ -163,10 +165,11 @@ object Graph {
     * with ≥ 2 lineitems (one-off trades are noise, repeat business is
     * structure); node ids interleave the key spaces as in [[pageRank]].
     *
-    * Each alternation is one neighborhood-min aggregate + one
-    * co-partitioned join + one distinct over a NON-INCREASING edge set —
-    * never pair-space, never a collect, and the needed round count is
-    * O(log n) worst-case but diameter-driven in practice, so `rounds` = 8
+    * Each alternation ([[componentRound]]) is two neighborhood-min
+    * windows + one distinct aggregate over a NON-INCREASING edge set —
+    * three shuffles and one checkpoint job, never pair-space, never a
+    * collect — and the needed round count is O(log n) worst-case but
+    * diameter-driven in practice, so `rounds` = 8
     * is fixed (the oracle replays the identical unrolled recurrence;
     * Round12Spec asserts round 8 is a fixed point on the fixtures AND
     * that the labeling equals a driver-side union-find). Measured
@@ -188,21 +191,18 @@ object Graph {
     // canonical orientation: u = the larger endpoint, v = the smaller
     var e = pairs.select(greatest(col("c"), col("s")).as("u"),
       least(col("c"), col("s")).as("v"))
-    // Early fixed-point exit (r20, guide §1.2 "don't compute things you
-    // throw away"): each alternation is a DETERMINISTIC function of the
-    // edge SET, so e_{k+1} == e_k implies every later round reproduces
-    // e_k verbatim and rounds k+2..8 are pure waste. Measured convergence
-    // is 3-5 rounds at every tested sf against the fixed 8-round
-    // contract, so 3-5 full alternations (explode + two agg self-joins +
-    // union + two distincts + checkpoint each) are skipped per run. The
-    // check itself is two node-bounded actions per round (a count on the
-    // fresh checkpoint + one except). The OUTPUT is unchanged by
+    // Early fixed-point exit: each alternation is a DETERMINISTIC
+    // function of the edge SET, so e_{k+1} == e_k implies every later
+    // round reproduces e_k verbatim. Measured convergence is 3-5 rounds
+    // at every tested sf against the fixed 8-round contract, so 3-5 full
+    // alternations are skipped per run. The test costs no job of its
+    // own (see [[componentRound]]). The OUTPUT is unchanged by
     // construction — the declared contract stays "the 8-round unrolled
     // recurrence" (the oracle replays it; Round12Spec pins round 8 as a
     // fixed point), this only skips provably-identical work.
-    // lineage cut, load-bearing twice over: each alternation references
-    // its input ~8× (sym explode ×2, two agg self-joins, the union), so
-    // an uncut plan grows 8^round — the analyzer's DeduplicateRelations
+    // lineage cut: each alternation references its input more than once
+    // (the symmetric closure, the old-row tag), so an uncut plan grows
+    // geometrically with the round — the analyzer's DeduplicateRelations
     // pass alone is exponential (measured: the 8-round plan never
     // finishes analysis). Eager localCheckpoint materializes the
     // (non-increasing, node-bounded) edge set once per round and starts
@@ -212,35 +212,11 @@ object Graph {
     // The initial edge set is checkpointed here, once; every later round
     // starts from the previous round's already-checkpointed `next`.
     e = e.localCheckpoint()
-    var eCount = e.count()
     var converged = false
     var round = 0
     while (round < rounds && !converged) {
-      val prev = e
-      // LARGE-STAR over the symmetric closure: every node u links its
-      // STRICTLY LARGER neighbors to m = min(Γ(u) ∪ {u}); output stays
-      // canonical (m <= u < emitted source).
-      val sym = prev.select(explode(array(
-          struct(col("u"), col("v")),
-          struct(col("v").as("u"), col("u").as("v")))).as("p"))
-        .select(col("p.u").as("u"), col("p.v").as("v"))
-      val lsMin = sym.groupBy("u").agg(least(min(col("v")), col("u")).as("m"))
-      val ls = sym.join(lsMin, "u").where(col("v") > col("u"))
-        .select(col("v").as("u"), col("m").as("v")).distinct()
-      // SMALL-STAR on the canonical orientation: every node u links its
-      // smaller neighborhood (and itself) to that neighborhood's min
-      val ssMin = ls.groupBy("u").agg(min(col("v")).as("m"))
-      val j = ls.join(ssMin, "u")
-      val next = j.select(col("u"), col("m").as("v"))
-        .unionByName(j.where(col("v") =!= col("m"))
-          .select(col("v").as("u"), col("m").as("v")))
-        .distinct()
-        .localCheckpoint()
-      // both sides are distinct row sets, so |next| == |prev| plus an
-      // empty one-sided difference IS set equality
-      val nextCount = next.count()
-      converged = nextCount == eCount && next.except(prev).isEmpty
-      eCount = nextCount
+      val (next, diff) = componentRound(e)
+      converged = diff == 0L
       e = next
       round += 1
     }
@@ -250,6 +226,49 @@ object Graph {
     e.select(col("u").as("node"), col("v").as("root"))
       .unionByName(e.select(col("v").as("node"), col("v").as("root")))
       .distinct()
+  }
+
+  /** One Large-Star/Small-Star alternation over the canonical (u > v),
+    * distinct edge set `prev`, eagerly checkpointed, with the number of
+    * edges found in only one of `next` and `prev` (0 iff the round is a
+    * fixed point). Three shuffles:
+    *
+    *  - LARGE-STAR over the symmetric closure: every node u links its
+    *    STRICTLY LARGER neighbors to m = min(Γ(u) ∪ {u}) — a `min` window
+    *    over `u`; the output stays canonical (m <= u < emitted source).
+    *  - SMALL-STAR on the canonical orientation: every node u links its
+    *    smaller neighborhood (and itself) to that neighborhood's min — a
+    *    `min` window over the new `u`, whose rows explode into (u, m) and
+    *    (v, m), self-loops dropped.
+    *  - one `groupBy(u, v)` is the distinct AND the fixed-point test: it
+    *    also takes in `prev`'s rows, tagged old, so `min(old)` is false
+    *    exactly for `next`'s rows and `min(old) == max(old)` exactly for
+    *    rows on one side only. The Observation counts those while the
+    *    checkpoint job runs, so set equality costs no count or except.
+    *
+    * Exposed for the spec, which pins it against the join-and-distinct
+    * rendition of the same round. */
+  private[graft] def componentRound(prev: DataFrame): (DataFrame, Long) = {
+    val sym = prev.select(explode(array(
+        struct(col("u"), col("v")),
+        struct(col("v").as("u"), col("u").as("v")))).as("p"))
+      .select(col("p.u").as("u"), col("p.v").as("v"))
+    val ls = sym
+      .withColumn("m", least(min(col("v")).over(Window.partitionBy("u")), col("u")))
+      .where(col("v") > col("u"))
+      .select(col("v").as("u"), col("m").as("v"))
+    val ss = ls.withColumn("m", min(col("v")).over(Window.partitionBy("u")))
+      .select(explode(array(
+        struct(col("u"), col("m").as("v")), struct(col("v").as("u"), col("m").as("v")))).as("p"))
+      .select(col("p.u").as("u"), col("p.v").as("v"))
+      .where(col("u") =!= col("v"))
+    val tagged = ss.withColumn("old", lit(false))
+      .unionByName(prev.withColumn("old", lit(true)))
+      .groupBy("u", "v").agg(min("old").as("lo"), max("old").as("hi"))
+    val (next, m) = GraftSession.checkpointObserved(obs =>
+      tagged.observe(obs, count(when(col("lo") === col("hi"), 1)).as("one_sided"))
+        .where(!col("lo")).select("u", "v"))
+    (next, m.getLong(0))
   }
 
   /** Connected components (`q_components`): top-20 repeat-trade
@@ -988,45 +1007,60 @@ object Graph {
     * asserts round 9 changes nothing on the fixture, and the oracle
     * replays the identical unrolled recurrence (pure set semantics).
     *
-    * Scale shape: each round is one degree aggregate on the current
-    * (non-increasing) edge set + two left-semi joins against the
-    * node-sized survivor list, eagerly localCheckpoint-ed (the family's
-    * per-round lineage cut — the edge set is referenced by the degree
-    * agg AND both semi-joins). The 9 profile counts are scalar actions
-    * (bounded collect — the GlobalRank P-slice discipline), never row
-    * data on the driver. */
+    * Scale shape: the (non-increasing) edge set is held as adjacency
+    * rows (node, neighbors), so a node's degree is its list's size and
+    * the profile's two counts are the row count and the summed sizes.
+    * Each round is ONE shuffle: every node sends (itself, its degree) to
+    * each neighbor; a node grouped with its senders knows its own degree
+    * (the edge set is symmetric) and keeps the senders of degree >= k
+    * when its own degree is >= k. The round is eagerly
+    * localCheckpoint-ed (the family's per-round lineage cut) with an
+    * Observation of both counts, so the 9 profile rows cost no action
+    * beyond the round's own checkpoint job and never move row data to
+    * the driver. */
   def kcore(spark: SparkSession, dir: String, k: Int = 3,
-      rounds: Int = 8): DataFrame = {
-    var e = repeatTradeSym(spark, dir).localCheckpoint()
-    val profile = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
-    var nNodes = e.select("src").distinct().count()
-    var nEdges = e.count()
-    profile += ((0L, nNodes, nEdges))
-    // Fixed-point fill-forward (r20): the peel only ever REMOVES edges
-    // (two semi-joins), so an unchanged edge COUNT means the edge SET is
-    // unchanged, the next round's survivor list is unchanged, and every
-    // remaining round reports the same two counts — skip the 3-stage
-    // round and write the counts directly. Measured convergence is 4-5
-    // rounds against the fixed 9-row contract, so 3-4 full rounds
-    // (degree agg + two semi-joins + checkpoint + two count actions) are
-    // skipped per run; the OUTPUT rows are identical by construction.
+      rounds: Int = 8): DataFrame =
+    kcoreProfile(repeatTradeSym(spark, dir), k, rounds)
+
+  /** [[kcore]]'s profile over any symmetric (src, dst) edge set —
+    * exposed for the spec's random graphs. */
+  private[graft] def kcoreProfile(sym: DataFrame, k: Int, rounds: Int): DataFrame = {
+    // checkpoints adjacency rows with the round's (n_nodes, n_edges)
+    def observed(adj: DataFrame): (DataFrame, Long, Long) = {
+      val (cp, m) = GraftSession.checkpointObserved(obs => adj.observe(obs,
+        count(lit(1)).as("n_nodes"),
+        coalesce(sum(size(col("nbrs"))), lit(0L)).as("n_edges")))
+      (cp, m.getLong(0), m.getLong(1))
+    }
+    var (adj, nNodes, nEdges) = observed(sym
+      .groupBy("src").agg(collect_list("dst").as("nbrs")))
+    val profile = scala.collection.mutable.ArrayBuffer((0L, nNodes, nEdges))
+    // Fixed-point fill-forward: the peel only ever REMOVES edges, so an
+    // unchanged edge COUNT means the edge SET is unchanged, the next
+    // round's survivor list is unchanged, and every remaining round
+    // reports the same two counts — skip the round and write the counts
+    // directly. Measured convergence is 4-5 rounds against the fixed
+    // 9-row contract, so 3-4 full rounds are skipped per run; the OUTPUT
+    // rows are identical by construction.
     var done = false
     for (r <- 1 to rounds) {
       if (!done) {
-        val keep = e.groupBy("src").agg(count(lit(1)).as("deg"))
-          .where(col("deg") >= k).select("src")
-        e = e.join(keep, Seq("src"), "left_semi")
-          .join(keep.select(col("src").as("dst")), Seq("dst"), "left_semi")
-          .select("src", "dst")
-          .localCheckpoint()
-        val nE = e.count()
+        val (next, nN, nE) = observed(adj
+          .select(explode(col("nbrs")).as("src"),
+            struct(col("src").as("n"), size(col("nbrs")).as("d")).as("from"))
+          .groupBy("src").agg(collect_list("from").as("from"))
+          .where(size(col("from")) >= k)
+          .select(col("src"),
+            transform(filter(col("from"), f => f("d") >= k), f => f("n")).as("nbrs"))
+          .where(size(col("nbrs")) > 0))
         done = nE == nEdges
-        if (!done) nNodes = e.select("src").distinct().count()
+        adj = next
+        nNodes = nN
         nEdges = nE
       }
       profile += ((r.toLong, nNodes, nEdges))
     }
-    import spark.implicits._
+    import sym.sparkSession.implicits._
     profile.toSeq.toDF("round", "n_nodes", "n_directed_edges")
   }
 

@@ -435,16 +435,17 @@ object Pipeline {
     // the near-dup-member-sized cluster list, so ~all of the tokenize HOF
     // pass scored docs the join immediately dropped (sf5: ~190 task-CPU
     // seconds of the key's 401 were the full-corpus quality pass; members
-    // are ~1k of 250k docs). The membership is localCheckpoint-ed once
-    // (it feeds the member filter AND the final cluster join) and
-    // broadcast under a measured row cap, the Dedup side-leg convention —
+    // are ~1k of 250k docs). The membership is already a checkpoint
+    // (the label propagation's last round; it feeds the member filter AND
+    // the final cluster join), its row count comes with it, and it is
+    // broadcast under a measured byte cap, the Dedup side-leg convention —
     // an unexpectedly near-dup-saturated corpus falls back to the
     // full-scan shuffled join, which is answer-identical.
-    val members = Dedup.clusters(spark, dir).localCheckpoint()
+    val (members, nMembers) = Dedup.clusterLabels(spark, dir)
     // price the broadcast from the REAL schema (defaultSize per field +
     // ~16 B of unsafe-row overhead), not an assumed row shape
     val rowBytes = members.schema.fields.map(_.dataType.defaultSize).sum + 16
-    val small = members.count() * rowBytes <= KeepBestBroadcastMaxBytes
+    val small = nMembers * rowBytes <= KeepBestBroadcastMaxBytes
     val qual =
       if (small)
         TextAnalysis.qualityOf(

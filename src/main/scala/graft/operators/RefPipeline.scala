@@ -161,12 +161,13 @@ object RefPipeline {
       filesPerBatch: Int): DataFrame =
     parquetStream(spark, schema, stage.toString, s"$stage/*.[p]arquet", filesPerBatch)
 
-  /** The raw footer schema of `dir/events.parquet`. Its `ts` is parquet
+  /** The raw footer schema of `dir/events.parquet`, inferred once with
+    * the batch reader's (see [[Tables.layout]]). Its `ts` is parquet
     * TIMESTAMP(NANOS), which Spark reads only as a long, under nanosAsLong
     * (set here, as [[Tables.events]] sets it). */
   private def eventsSchema(spark: SparkSession, dir: String): StructType = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.read.parquet(s"$dir/events.parquet").schema
+    Tables.layout(spark, s"$dir/events.parquet").schema
   }
 
   /** The events table as a file stream — the stand-in for the Kafka source
@@ -426,13 +427,15 @@ object RefPipeline {
     * the reference invented the trick. */
   def mvBackfillCutover(spark: SparkSession, dir: String): DataFrame = {
     val cutover = lit("2024-01-16").cast("date")
-    val sink = GraftSession.scratchDir("graft-mv-cutover").resolve("mv").toString
+    val scratch = GraftSession.scratchDir("graft-mv-cutover")
+    val sink = scratch.resolve("mv").toString
     val mv = eventsStream(spark, dir)
       .filter(to_date(col("ts")) >= cutover) // the MV's future-timestamp WHERE
       .groupBy(to_date(col("ts")).as("day"), col("event_type"))
       .agg(round(sum("value"), 4).as("total"), count(lit(1)).as("n"))
     // state volume: days x types ≈ 75 keys
-    withConfs(spark, StatePartitions)(runToEnd(ParquetUpsertSink.attach(mv, sink)))
+    withConfs(spark, StatePartitions)(runToEnd(ParquetUpsertSink.attach(mv, sink)
+      .option("checkpointLocation", scratch.resolve("ckpt").toString)))
     // Zero batches written (possible when no row lands past the cutover):
     // the read-back would die on schema inference — the MV half is then
     // legitimately empty, with the MV's own schema.
@@ -825,7 +828,10 @@ object RefPipeline {
             b -> stateRoot.resolve(s"batch$n/bucket=$b").toString))
         ()
       }
-    withConfs(spark, StatePartitions)(runToEnd(fold))
+    // the checkpoint sits beside the generations it commits (the
+    // manifest reload reads only dirs holding a manifest.tsv)
+    withConfs(spark, StatePartitions)(runToEnd(
+      fold.option("checkpointLocation", stateRoot.resolve("ckpt").toString)))
     lastReplacingMergeRewrites = rewrites.toSeq.sortBy(_._1).map(_._2)
     lastReplacingMergeStateRoot = stateRoot.toString
     // assemble the final table from the newest snapshot: each bucket's

@@ -9,6 +9,7 @@ import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.{AllTuples, ClusteredDistribution, Distribution}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
+import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
 import org.apache.spark.sql.types.IntegerType
 
 /** Per-key top-k as a first-class operator.
@@ -65,6 +66,9 @@ final case class TopKPerKeyExec(
   override def output: Seq[Attribute] = child.output :+ rankAttr
   override def producedAttributes: AttributeSet = AttributeSet(rankAttr)
 
+  override lazy val metrics: Map[String, SQLMetric] = Map(
+    "numOutputRows" -> SQLMetrics.createMetric(sparkContext, "number of output rows"))
+
   override def requiredChildDistribution: Seq[Distribution] =
     if (partitionSpec.isEmpty) AllTuples :: Nil
     else ClusteredDistribution(partitionSpec) :: Nil
@@ -75,6 +79,7 @@ final case class TopKPerKeyExec(
     val partSpec = partitionSpec
     val ordSpec = orderSpec
     val outAttrs = output
+    val numOutputRows = longMetric("numOutputRows")
     child.execute().mapPartitions({ iter =>
       val keyProj = UnsafeProjection.create(partSpec, childOutput)
       val ordering = GenerateOrdering.generate(ordSpec, childOutput)
@@ -113,6 +118,7 @@ final case class TopKPerKeyExec(
               outProj(joined(row, rankRow))
             }
           }
+          numOutputRows += 1
           current.next()
         }
       }

@@ -56,6 +56,24 @@ class StreamingKeysSpec extends SparkSpec {
       batch)
   }
 
+  test("the foreachBatch keys keep their streaming checkpoint in their own scratch dir") {
+    // a query started without a checkpointLocation makes a Spark temp dir
+    // outside GraftSession.scratchDir's sweep; these two name their own
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def cutoverDirs = tmp.listFiles().filter(_.getName.startsWith("graft-mv-cutover")).toSet
+    val before = cutoverDirs
+    RefPipeline.mvBackfillCutover(spark, sf).count()
+    val made = cutoverDirs -- before
+    assert(made.size == 1, s"one scratch dir per run: $made")
+    def committed(ckpt: java.io.File) =
+      Option(new java.io.File(ckpt, "commits").list()).exists(_.nonEmpty)
+    assert(committed(new java.io.File(made.head, "ckpt")),
+      s"no committed checkpoint under ${made.head}")
+    RefPipeline.streamingReplacingMerge(spark, sf).count()
+    val root = RefPipeline.lastReplacingMergeStateRoot
+    assert(committed(new java.io.File(root, "ckpt")), s"no committed checkpoint under $root")
+  }
+
   test("the nine streaming keys restore every session conf they pin") {
     val keys = SparkEntry.keys.filter(_.name.startsWith("streaming_"))
     assert(keys.size == 9, keys.map(_.name))

@@ -2,10 +2,11 @@ package graft.plans
 
 import graft.SparkSpec
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-class TopKPerKeySpec extends SparkSpec {
+class TopKPerKeySpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private def topkQuery(): DataFrame = {
     import spark.implicits._
@@ -71,6 +72,14 @@ class TopKPerKeySpec extends SparkSpec {
       assert(plan.contains("TopKPerKey"), s"$name: rewrite did not fire:\n$plan")
       assert(!plan.contains("Window "), s"$name: WindowExec still present:\n$plan")
     }
+  }
+
+  test("TopKPerKeyExec reports its output rows as the numOutputRows metric") {
+    val df = topkQuery()
+    val n = df.collect().length
+    val execs = collect(df.queryExecution.executedPlan) { case e: TopKPerKeyExec => e }
+    assert(execs.size == 1, df.queryExecution.executedPlan)
+    assert(execs.head.metrics("numOutputRows").value == n.toLong)
   }
 
   test("every key yields exactly min(k, group size) ranked rows") {
