@@ -36,53 +36,109 @@ import graft.GraftSession
   * ≤ corpus rows, so `r*w` stays < 2^63 up to ~4.6M lineitems per
   * (cust,supp) pair — far past any tested sf; a 100 TB run would drop
   * the quantization to 1e-9 units.
+  *
+  * The trade graph is built in one place. [[pairCounts]] is the one
+  * lineitem⨝orders scan, giving `(c, s, w)`: customer key, supplier key
+  * and lineitem count. It has two named builds, each keeping the join
+  * strategy measured for it: [[tradePairs]] (every pair, orders side
+  * hash-built; [[pageRank]] and [[hits]]) and [[repeatPairs]] (the
+  * w ≥ 2 repeat-trade set, default join; [[componentMembers]],
+  * [[repeatTradeSym]] and [[cotradeEdges]]). Keys whose nodes mix both
+  * sides use one BIGINT node id: customer k is node 2k, supplier k is
+  * node 2k+1 ([[asNodes]] encodes, [[isCustomer]] decodes).
   */
 object Graph {
+
+  /** `(c, s, w)` per customer–supplier pair: one lineitem is one unit of
+    * weight between its order's customer and its supplier. */
+  private def pairCounts(spark: SparkSession, dir: String, hashOrders: Boolean): DataFrame = {
+    val t = graft.Tables(spark, dir)
+    val orders = t.orders.select("o_orderkey", "o_custkey")
+    t.lineitem.select("l_orderkey", "l_suppkey")
+      .join(if (hashOrders) orders.hint("shuffle_hash") else orders,
+        col("l_orderkey") === col("o_orderkey"))
+      .groupBy(col("o_custkey").as("c"), col("l_suppkey").as("s"))
+      .agg(count(lit(1)).as("w"))
+  }
+
+  /** Every trade pair `(c, s, w)`. shuffle_hash on the orders side (r19):
+    * the default sort-merge plan external-sorted both join slices per
+    * task (measured 1.3 GB of q_pagerank's sf10 disk spill in this one
+    * stage); hash-building the order-scaled side streams lineitem
+    * unsorted — the (c,s) aggregate hashes anyway, so the sorts bought
+    * nothing. */
+  private def tradePairs(spark: SparkSession, dir: String): DataFrame =
+    pairCounts(spark, dir, hashOrders = true)
+
+  /** The repeat-trade pairs `(c, s)`: pairs with ≥ 2 lineitems (one-off
+    * trades are noise, repeat business is structure). Default join, by
+    * measurement (r13 A/B at sf10): the probe's high "spillMB" here is
+    * memoryBytesSpilled ACCOUNTING (uncompressed in-memory size), not
+    * disk — a stage-level listener shows ~1.4 GB of actual disk spill in
+    * the pairs aggregate. Both candidate "fixes" (explicit
+    * pre-repartition before the groupBy; the shuffle_hash hint on the
+    * orders join) measured ~15% WORSE wall (12.1 → 14.0 s): the extra
+    * raw-row exchange costs more than the partial-agg fallback it
+    * avoids. */
+  private def repeatPairs(spark: SparkSession, dir: String): DataFrame =
+    pairCounts(spark, dir, hashOrders = false).where(col("w") >= 2).select("c", "s")
+
+  /** Encodes a pair frame's `c` and `s` keys as node ids (2k, 2k+1). */
+  private def asNodes(pairs: DataFrame): DataFrame =
+    pairs.withColumns(Map("c" -> col("c") * 2, "s" -> (col("s") * 2 + 1)))
+
+  /** Decodes a node id's side: true for a customer, false for a supplier. */
+  private def isCustomer(node: Column): Column = node % 2 === 0
+
+  /** `<prefix>_type` ("customer"/"supplier") and `<prefix>_key` of node column `node`. */
+  private def nodeTypeKey(node: String, prefix: String): Seq[Column] = Seq(
+    when(isCustomer(col(node)), lit("customer")).otherwise(lit("supplier"))
+      .as(s"${prefix}_type"),
+    expr(s"$node div 2").as(s"${prefix}_key"))
+
+  /** `n_customers` and `n_suppliers` aggregates over node column `node`. */
+  private def sideCounts(node: String): Seq[Column] = Seq(
+    sum(when(isCustomer(col(node)), 1L).otherwise(0L)).as("n_customers"),
+    sum(when(isCustomer(col(node)), 0L).otherwise(1L)).as("n_suppliers"))
+
+  /** Both directions of every `(a, b)` row as `(src, dst)` rows, with the
+    * `carry` columns. ONE pass: each row explodes into both directions
+    * (a union of two selects re-ran the whole lineitem⨝orders build per
+    * branch — the two sides' differing null filters defeat exchange
+    * reuse; measured ~2× the build cost at sf5). */
+  private def bothWays(df: DataFrame, a: String, b: String, src: String = "src",
+      dst: String = "dst", carry: Seq[String] = Nil): DataFrame =
+    df.select(explode(array(
+        struct(col(a).as(src), col(b).as(dst)),
+        struct(col(b).as(src), col(a).as(dst)))).as("e") +: carry.map(col): _*)
+      .select(col(s"e.$src").as(src) +: col(s"e.$dst").as(dst) +: carry.map(col): _*)
+
+  /** Hash-repartitions `df` on `key` into exactly
+    * `spark.sql.shuffle.partitions` partitions. EXPLICIT count, not
+    * repartition(col): the count-less form plans at AQE's 512 initial
+    * partitions and materializes a cache behind an AdaptiveSparkPlan
+    * whose coalesced output partitioning does NOT satisfy a later join's
+    * required hash distribution — EnsureRequirements then re-exchanged
+    * the WHOLE cached edge frame every iteration (measured q_pagerank
+    * sf5: five 958 MB / 60M-record exchanges, 4.8 GB of the query's
+    * 14.7 GB). REPARTITION_BY_NUM is exempt from AQE coalescing, so a
+    * cache reports exact hashpartitioning(key, N). The same holds for a
+    * loop's node-sized iterate: an AQE-coalesced aggregate output
+    * hash(node, N') ≠ the cache's hash(src, N) was resolved by
+    * re-exchanging the EDGE side; pinning the iterate back costs ~4 MB
+    * instead of 958 MB per iteration. */
+  private def hashOn(df: DataFrame, key: String): DataFrame =
+    df.repartition(df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt, col(key))
 
   /** Damped PageRank (d=0.85, 5 iterations) over the undirected
     * customer↔supplier order graph; top 20 nodes by final rank
     * (ties → smaller node id), rank exposed exactly in 1e-12 units. */
   def pageRank(spark: SparkSession, dir: String, iters: Int = 5): DataFrame = {
-    val t = graft.Tables(spark, dir)
-    // weighted bipartite edges: one lineitem = one unit of weight between
-    // the order's customer and the line's supplier. Node ids interleave
-    // the two key spaces (customer 2k, supplier 2k+1) so one BIGINT
-    // column carries both sides.
-    // shuffle_hash on the orders side (r19): the default sort-merge
-    // plan external-sorted both join slices per task (measured 1.3 GB
-    // of the key's sf10 disk spill in this one stage); hash-building
-    // the order-scaled side streams lineitem unsorted — the (c,s)
-    // aggregate above hashes anyway, so the sorts bought nothing.
-    val pairs = t.lineitem.select("l_orderkey", "l_suppkey")
-      .join(t.orders.select("o_orderkey", "o_custkey").hint("shuffle_hash"),
-        col("l_orderkey") === col("o_orderkey"))
-      .groupBy((col("o_custkey") * 2).as("c"), (col("l_suppkey") * 2 + 1).as("s"))
-      .agg(count(lit(1)).as("w"))
-    // ONE pair scan: each (c,s,w) explodes into both directions (a
-    // union of two pairs-selects re-ran the whole lineitem⨝orders build
-    // per branch — the two sides' differing null filters defeat exchange
-    // reuse; measured ~2× the build cost at sf5), and ONE exchange by
-    // `src` then serves the degree aggregate, the degree join's
-    // co-location AND the cached layout the iteration loop joins against.
-    // EXPLICIT-count repartition, not repartition(col): the count-less
-    // form plans at AQE's 512 initial partitions and materializes the
-    // cache behind an AdaptiveSparkPlan whose coalesced output
-    // partitioning does NOT satisfy the loop join's required hash
-    // distribution — EnsureRequirements then re-exchanged the WHOLE 60M-
-    // edge frame EVERY iteration (measured sf5: five 958 MB / 60M-record
-    // exchanges, one per iteration — 4.8 GB of the query's 14.7 GB
-    // total, plus the recompute spill). REPARTITION_BY_NUM is exempt
-    // from AQE coalescing, so the cache reports exact
-    // hashpartitioning(src, N) and each iteration shuffles ONLY the
-    // node-sized rank table onto it (sf5: 4.3 MB vs 958 MB).
-    val nShuf = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val edges0 = pairs
-      .select(explode(array(
-          struct(col("c").as("src"), col("s").as("dst")),
-          struct(col("s").as("src"), col("c").as("dst")))).as("e"),
-        col("w"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"), col("w"))
-      .repartition(nShuf, col("src"))
+    // ONE exchange by `src` (an explicit-count [[hashOn]]) serves the
+    // degree window, its co-location AND the cached layout the
+    // iteration loop joins against.
+    val edges0 = hashOn(bothWays(asNodes(tradePairs(spark, dir)), "c", "s",
+      carry = Seq("w")), "src")
     // per-source total weight as a WINDOW SUM over the one explicit
     // edge exchange, NOT a separate degree aggregate + join (r19 —
     // found by stage-level event-log attribution at sf10): with
@@ -119,7 +175,7 @@ object Graph {
       val inflow = edges.join(ranks.hint("shuffle_hash"), edges("src") === ranks("node"))
         .select(col("dst"), expr("(r * w) div wtot").as("contrib"))
         .groupBy("dst").agg(sum("contrib").as("inflow"))
-      // no node left-join: the explode above emits BOTH directions of
+      // no node left-join: [[bothWays]] emits BOTH directions of
       // every pair, so each node occurs as a dst of some positive-weight
       // edge and (ranks staying > 0 by induction: r0 > 0 and the damping
       // floor is 15·r0 div 100) the inflow aggregate covers exactly the
@@ -130,40 +186,26 @@ object Graph {
       // ranks has ONE consumer per iteration, so the lineage is linear
       // and executes exactly once. The r12 "structural spill" reading
       // (~15 GB at sf5) was NOT structural: it was the edge frame being
-      // re-exchanged every iteration because the cache's AQE-coalesced
-      // partitioning failed the join's distribution check (see the
-      // repartition notes above/below). With both explicit-count
-      // repartitions in place the sf5 measurement is 28.6 s wall,
-      // 5.4 GB total shuffle, ZERO spill (r12: 41 s / 14.7 GB / 15.6 GB
-      // spill) — per iteration the moved bytes are the ~8 MB rank
-      // exchange plus the ~185 MB map-side-combined inflow partials.
-      // explicit-count repartition BACK onto the edge layout: the inflow
-      // aggregate's own exchange is AQE-coalesced to some N ≠ nShuf, and
-      // when the next iteration's join sees hash(node, N) vs the cache's
-      // hash(src, nShuf), EnsureRequirements resolves the mismatch by
-      // re-exchanging the EDGE side (958 MB / 60M records per iteration
-      // at sf5) — re-shuffling the node-sized rank table instead is
-      // ~4 MB. REPARTITION_BY_NUM again so AQE can't re-coalesce it.
-      ranks = inflow.select(col("dst").as("node"),
-          expr(s"(15 * ${r0}L + 85 * inflow) div 100").as("r"))
-        .repartition(nShuf, col("node"))
+      // re-exchanged every iteration (see [[hashOn]]). With both
+      // explicit-count repartitions in place — the edge cache above, the
+      // rank iterate pinned back onto its layout below — the sf5
+      // measurement is 28.6 s wall, 5.4 GB total shuffle, ZERO spill
+      // (r12: 41 s / 14.7 GB / 15.6 GB spill) — per iteration the moved
+      // bytes are the ~8 MB rank exchange plus the ~185 MB map-side-
+      // combined inflow partials.
+      ranks = hashOn(inflow.select(col("dst").as("node"),
+          expr(s"(15 * ${r0}L + 85 * inflow) div 100").as("r")), "node")
     }
     ranks
       .orderBy(col("r").desc, col("node"))
       .limit(20)
-      .select(
-        when(col("node") % 2 === 0, lit("customer")).otherwise(lit("supplier"))
-          .as("node_type"),
-        expr("node div 2").as("node_key"),
-        col("r").as("rank_q12"))
+      .select(nodeTypeKey("node", "node") :+ col("r").as("rank_q12"): _*)
   }
 
   /** Converged star labeling (node, root) of the repeat-trade graph —
     * the Large-Star/Small-Star contraction of Kiveris et al., "Connected
     * Components in MapReduce and Beyond" (SoCC 2014), the published
-    * web-graph-scale CC algorithm. Edge rule: customer↔supplier pairs
-    * with ≥ 2 lineitems (one-off trades are noise, repeat business is
-    * structure); node ids interleave the key spaces as in [[pageRank]].
+    * web-graph-scale CC algorithm, over the [[repeatPairs]] edges.
     *
     * Each alternation ([[componentRound]]) is two neighborhood-min
     * windows + one distinct aggregate over a NON-INCREASING edge set —
@@ -181,13 +223,7 @@ object Graph {
     * Exposed for the spec; [[components]] is the public aggregate. */
   private[graft] def componentMembers(spark: SparkSession, dir: String,
       rounds: Int = 8): DataFrame = {
-    val t = graft.Tables(spark, dir)
-    val pairs = t.lineitem.select("l_orderkey", "l_suppkey")
-      .join(t.orders.select("o_orderkey", "o_custkey"),
-        col("l_orderkey") === col("o_orderkey"))
-      .groupBy((col("o_custkey") * 2).as("c"), (col("l_suppkey") * 2 + 1).as("s"))
-      .agg(count(lit(1)).as("w"))
-      .where(col("w") >= 2)
+    val pairs = asNodes(repeatPairs(spark, dir))
     // canonical orientation: u = the larger endpoint, v = the smaller
     var e = pairs.select(greatest(col("c"), col("s")).as("u"),
       least(col("c"), col("s")).as("v"))
@@ -249,11 +285,7 @@ object Graph {
     * Exposed for the spec, which pins it against the join-and-distinct
     * rendition of the same round. */
   private[graft] def componentRound(prev: DataFrame): (DataFrame, Long) = {
-    val sym = prev.select(explode(array(
-        struct(col("u"), col("v")),
-        struct(col("v").as("u"), col("u").as("v")))).as("p"))
-      .select(col("p.u").as("u"), col("p.v").as("v"))
-    val ls = sym
+    val ls = bothWays(prev, "u", "v", "u", "v")
       .withColumn("m", least(min(col("v")).over(Window.partitionBy("u")), col("u")))
       .where(col("v") > col("u"))
       .select(col("v").as("u"), col("m").as("v"))
@@ -277,16 +309,11 @@ object Graph {
   def components(spark: SparkSession, dir: String): DataFrame =
     componentMembers(spark, dir)
       .groupBy("root")
-      .agg(count(lit(1)).as("n_nodes"),
-        sum(when(col("node") % 2 === 0, 1L).otherwise(0L)).as("n_customers"),
-        sum(when(col("node") % 2 === 1, 1L).otherwise(0L)).as("n_suppliers"))
+      .agg(count(lit(1)).as("n_nodes"), sideCounts("node"): _*)
       .orderBy(col("n_nodes").desc, col("root"))
       .limit(20)
-      .select(
-        when(col("root") % 2 === 0, lit("customer")).otherwise(lit("supplier"))
-          .as("root_type"),
-        expr("root div 2").as("root_key"),
-        col("n_nodes"), col("n_customers"), col("n_suppliers"))
+      .select(nodeTypeKey("root", "root") ++
+        Seq(col("n_nodes"), col("n_customers"), col("n_suppliers")): _*)
 
   /** Triangle counting + local clustering coefficient (`q_triangles`)
     * over the co-trade projection (customers linked iff some supplier
@@ -340,9 +367,8 @@ object Graph {
     * shared by [[triangles]], [[transitivity]] and [[linkPredict]].
     *
     * ONE supplier exchange, cached, serving BOTH sides of the projection
-    * self-join — the join is co-partitioned by construction. Explicit
-    * count so the cache reports exact hashpartitioning the self-join can
-    * consume (the pageRank cached-partitioning trap).
+    * self-join — the join is co-partitioned by construction ([[hashOn]]:
+    * the cache reports exact hashpartitioning the self-join can consume).
     *
     * `smax` (default 1024, a DECLARED contract every consumer's oracle
     * mirrors) drops suppliers with MORE than `smax` repeat customers
@@ -359,20 +385,11 @@ object Graph {
     * 49,203 suppliers (99.8%) and bounds the stream at 52M. */
   private def cotradeEdges(spark: SparkSession, dir: String,
       smax: Int = CotradeSmax): DataFrame = {
-    val t = graft.Tables(spark, dir)
-    val cs0 = t.lineitem.select("l_orderkey", "l_suppkey")
-      .join(t.orders.select("o_orderkey", "o_custkey"),
-        col("l_orderkey") === col("o_orderkey"))
-      .groupBy(col("l_suppkey").as("s"), col("o_custkey").as("c"))
-      .agg(count(lit(1)).as("w"))
-      .where(col("w") >= 2)
-      .select("s", "c")
+    val cs0 = repeatPairs(spark, dir)
     val keep = cs0.groupBy("s").agg(count(lit(1)).as("sc"))
       .where(col("sc") <= smax).select("s")
-    val cs = graft.GraftSession.trackCache(cs0
-      .join(keep, Seq("s"), "left_semi")
-      .repartition(
-        spark.conf.get("spark.sql.shuffle.partitions").toInt, col("s")))
+    val cs = graft.GraftSession.trackCache(
+      hashOn(cs0.join(keep, Seq("s"), "left_semi"), "s"))
     graft.GraftSession.trackCache(
       cs.as("x").join(cs.as("y"),
           col("x.s") === col("y.s") && col("x.c") < col("y.c"))
@@ -622,8 +639,7 @@ object Graph {
       .unionByName(edges.select(col("b").as("z"), col("a").as("x")))
       .join(deg.select(col("n").as("z"), col("d")), "z")
       .where(col("d") <= dmax)
-    val adj = graft.GraftSession.trackCache(adj0.repartition(
-      spark.conf.get("spark.sql.shuffle.partitions").toInt, col("z")))
+    val adj = graft.GraftSession.trackCache(hashOn(adj0, "z"))
     val scored = adj.as("p").join(adj.as("q"),
         col("p.z") === col("q.z") && col("p.x") < col("q.x"))
       .select(col("p.x").as("u"), col("q.x").as("v"),
@@ -653,41 +669,26 @@ object Graph {
     * is ~6); a 100 TB run drops the quantum to 1e6 units the way
     * [[pageRank]]'s scaladoc drops its own.
     *
-    * Scale shape mirrors [[pageRank]]: the weighted edge list is built
-    * from ONE lineitem⨝orders scan and cached ONCE, partitioned by
-    * customer; the two half-steps join on alternating keys, each against a
-    * shuffle_hash build of the node-sized score table, so the hub
+    * Scale shape mirrors [[pageRank]]: the [[tradePairs]] edge list is
+    * cached ONCE, partitioned by customer; the two half-steps join on
+    * alternating keys, each against a shuffle_hash build of the
+    * node-sized score table, so the hub
     * half-step re-exchanges the edge stream by supplier; totals ride a
     * broadcast single-row crossJoin. No collect anywhere; node and edge
     * state stays distributed. */
   def hits(spark: SparkSession, dir: String, iters: Int = 4): DataFrame = {
-    val t = graft.Tables(spark, dir)
     // `spark.graft.hits.quantum`: the scaladoc's 100 TB remedy made
     // operational — on power-law edge WEIGHTS the wmax ≤ 9 envelope
     // breaks (zipf-graph fixture: max raw 21.9e9 at m = 1e9, the guard
     // below refuses) and the fix is a coarser quantum, NOT a bigger
     // int. The DuckDB oracle replays the DEFAULT instance (conf unset);
     // a non-default quantum is an operational choice the caller owns,
-    // results stay deterministic at any m (Round14Spec pins both).
+    // results stay deterministic at any m (GraphSpec pins both).
     val m = spark.conf.getOption("spark.graft.hits.quantum")
       .map(_.toLong).getOrElse(1000000000L)
-    // shuffle_hash on the orders side, same r19 receipt as pageRank's
-    // pairs build: the SMJ sorts fed nothing but a hash aggregate and
-    // spilled ~1.3 GB per layout build at sf10.
-    val pairs = t.lineitem.select("l_orderkey", "l_suppkey")
-      .join(t.orders.select("o_orderkey", "o_custkey").hint("shuffle_hash"),
-        col("l_orderkey") === col("o_orderkey"))
-      .groupBy(col("o_custkey").as("c"), col("l_suppkey").as("s"))
-      .agg(count(lit(1)).as("w"))
-    // explicit-count repartitions (REPARTITION_BY_NUM): the countless
-    // form cached behind an AQE-coalesced partitioning that fails the
-    // half-step joins' distribution check, so EnsureRequirements
-    // re-exchanged the EDGE side every half-step — 8 edge-sized
-    // exchanges per run (the q_pagerank trap; see pageRank's notes).
-    // With exact hashpartitioning on the cache, only the node-sized
-    // checkpointed score table is shuffled each half-step.
-    val nShuf = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val byC = graft.GraftSession.trackCache(pairs.repartition(nShuf, col("c")))
+    // [[hashOn]], so each half-step shuffles only the node-sized score
+    // table, never the cached edge side
+    val byC = graft.GraftSession.trackCache(hashOn(tradePairs(spark, dir), "c"))
     // ONE cached edge layout (by `c`): the hub half-step re-exchanges the
     // edge stream by `s` once per iteration rather than caching a second
     // edge copy by `s`. A/B at sf10 under the 8 g bench JVM (measured
@@ -784,38 +785,15 @@ object Graph {
             col("h").as("score_q9")))
   }
 
-  /** The symmetric repeat-trade edge set (both directions of every
-    * customer↔supplier pair with ≥ 2 lineitems), interleaved node ids as
-    * in [[pageRank]] — shared by [[seedDistance]] and [[degreeDist]].
-    * Cached hash-partitioned by `src`: the BFS loop joins on it every
-    * round and the degree aggregate reuses the same exchange. */
-  private def repeatTradeSym(spark: SparkSession, dir: String): DataFrame = {
-    val t = graft.Tables(spark, dir)
-    // NOTE (r13 A/B at sf10, measured): the probe's high "spillMB" on
-    // the graph family is memoryBytesSpilled ACCOUNTING (uncompressed
-    // in-memory size), not disk — a stage-level listener shows ~1.4 GB
-    // of actual disk spill in the pairs aggregate. Both candidate
-    // "fixes" (explicit pre-repartition before the groupBy, containment-
-    // style; shuffle_hash hint on the orders join) measured ~15% WORSE
-    // wall (12.1 → 14.0 s) because the extra raw-row exchange costs
-    // more than the partial-agg fallback it avoids. Kept as-is.
-    val pairs = t.lineitem.select("l_orderkey", "l_suppkey")
-      .join(t.orders.select("o_orderkey", "o_custkey"),
-        col("l_orderkey") === col("o_orderkey"))
-      .groupBy((col("o_custkey") * 2).as("c"), (col("l_suppkey") * 2 + 1).as("s"))
-      .agg(count(lit(1)).as("w"))
-      .where(col("w") >= 2)
-    // explicit-count repartition — same cached-partitioning trap as
-    // pageRank/hits: the BFS loop must consume this layout, not
-    // re-exchange it every round
-    graft.GraftSession.trackCache(pairs
-      .select(explode(array(
-          struct(col("c").as("src"), col("s").as("dst")),
-          struct(col("s").as("src"), col("c").as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .repartition(spark.conf.get("spark.sql.shuffle.partitions").toInt,
-        col("src")))
-  }
+  /** The symmetric repeat-trade edge set `(src, dst)` over node ids —
+    * both directions of every [[repeatPairs]] pair — shared by
+    * [[seedDistance]], [[labelPropMembers]], [[modularity]],
+    * [[assortativity]], [[kcore]] and [[degreeDist]]. Cached
+    * hash-partitioned by `src` ([[hashOn]]): the loops join on it every
+    * round and the degree aggregates reuse the same exchange. */
+  private def repeatTradeSym(spark: SparkSession, dir: String): DataFrame =
+    graft.GraftSession.trackCache(
+      hashOn(bothWays(asNodes(repeatPairs(spark, dir)), "c", "s"), "src"))
 
   /** Multi-source BFS seed distance (`q_seed_distance`) — hop distance
     * from a fixed seed set, capped at `rounds` hops: the TrustRank /
@@ -853,10 +831,26 @@ object Graph {
       .join(dist, Seq("node"), "left")
       .select(coalesce(col("d"), lit(-1L)).as("dist"), col("node"))
       .groupBy("dist")
-      .agg(count(lit(1)).as("n_nodes"),
-        sum(when(col("node") % 2 === 0, 1L).otherwise(0L)).as("n_customers"),
-        sum(when(col("node") % 2 === 1, 1L).otherwise(0L)).as("n_suppliers"))
+      .agg(count(lit(1)).as("n_nodes"), sideCounts("node"): _*)
       .orderBy("dist")
+  }
+
+  /** The (node, lbl) frame after `rounds` synchronous LPA rounds —
+    * [[labelProp]]'s loop, exposed for [[modularity]] and the spec. */
+  private[graft] def labelPropMembers(spark: SparkSession, dir: String,
+      rounds: Int = 4): DataFrame = {
+    val sym = repeatTradeSym(spark, dir)
+    var labels = hashOn(sym.select(col("src").as("node")).distinct()
+      .select(col("node"), col("node").as("lbl")), "node")
+    for (_ <- 1 to rounds) {
+      labels = hashOn(sym.join(labels.hint("shuffle_hash"), sym("src") === labels("node"))
+        .groupBy(col("dst"), col("lbl"))
+        .agg(count(lit(1)).as("c"))
+        .groupBy(col("dst"))
+        .agg(max_by(col("lbl"), struct(col("c"), (-col("lbl")).as("nl"))).as("lbl"))
+        .select(col("dst").as("node"), col("lbl")), "node")
+    }
+    labels
   }
 
   /** Synchronous label propagation (`q_label_prop`, Raghavan et al.,
@@ -876,10 +870,9 @@ object Graph {
     *
     * Scale shape: per round, one labels⨝edges join onto the SHARED
     * cached hash(src, n) layout of [[repeatTradeSym]] (shuffle_hash —
-    * the edge stream is never sorted and never re-exchanged: the
-    * explicit-count repartition pins the iterate back onto the cache's
-    * partitioning, the r13 lesson), one (dst, lbl) count aggregate, one
-    * per-dst argmax via `max_by(lbl, struct(c, -lbl))` (largest count,
+    * the edge stream is never sorted, and [[hashOn]] pins the iterate
+    * back onto the cache's partitioning), one (dst, lbl) count
+    * aggregate, one per-dst argmax via `max_by(lbl, struct(c, -lbl))` (largest count,
     * then smallest label — exact BIGINT, no float). Labels have ONE
     * consumer per round, so the lineage is linear like [[pageRank]]'s —
     * no checkpoint needed. Every node occurs as a dst of the symmetric
@@ -887,39 +880,13 @@ object Graph {
     * top-20 communities by size (ties → smaller label), with the
     * customer/supplier member split — [[components]]' shape, so the two
     * keys read side by side. */
-  /** The (node, lbl) frame after `rounds` synchronous LPA rounds —
-    * [[labelProp]]'s loop, exposed for [[modularity]] and the spec. */
-  private[graft] def labelPropMembers(spark: SparkSession, dir: String,
-      rounds: Int = 4): DataFrame = {
-    val sym = repeatTradeSym(spark, dir)
-    val nShuf = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    var labels = sym.select(col("src").as("node")).distinct()
-      .select(col("node"), col("node").as("lbl"))
-      .repartition(nShuf, col("node"))
-    for (_ <- 1 to rounds) {
-      labels = sym.join(labels.hint("shuffle_hash"), sym("src") === labels("node"))
-        .groupBy(col("dst"), col("lbl"))
-        .agg(count(lit(1)).as("c"))
-        .groupBy(col("dst"))
-        .agg(max_by(col("lbl"), struct(col("c"), (-col("lbl")).as("nl"))).as("lbl"))
-        .select(col("dst").as("node"), col("lbl"))
-        .repartition(nShuf, col("node"))
-    }
-    labels
-  }
-
   def labelProp(spark: SparkSession, dir: String, rounds: Int = 4): DataFrame = {
     labelPropMembers(spark, dir, rounds).groupBy("lbl")
-      .agg(count(lit(1)).as("n_nodes"),
-        sum(when(col("node") % 2 === 0, 1L).otherwise(0L)).as("n_customers"),
-        sum(when(col("node") % 2 === 1, 1L).otherwise(0L)).as("n_suppliers"))
+      .agg(count(lit(1)).as("n_nodes"), sideCounts("node"): _*)
       .orderBy(col("n_nodes").desc, col("lbl"))
       .limit(20)
-      .select(
-        when(col("lbl") % 2 === 0, lit("customer")).otherwise(lit("supplier"))
-          .as("label_type"),
-        expr("lbl div 2").as("label_key"),
-        col("n_nodes"), col("n_customers"), col("n_suppliers"))
+      .select(nodeTypeKey("lbl", "label") ++
+        Seq(col("n_nodes"), col("n_customers"), col("n_suppliers")): _*)
   }
 
   /** Newman modularity (`q_modularity`, Newman & Girvan, Phys. Rev. E
@@ -1079,8 +1046,6 @@ object Graph {
         (length(expr("bin(deg)")) - 1).cast("long").as("bucket"))
       .groupBy("bucket")
       .agg(count(lit(1)).as("n_nodes"),
-        sum(when(col("src") % 2 === 0, 1L).otherwise(0L)).as("n_customers"),
-        sum(when(col("src") % 2 === 1, 1L).otherwise(0L)).as("n_suppliers"),
-        min("deg").as("min_deg"), max("deg").as("max_deg"))
+        sideCounts("src") ++ Seq(min("deg").as("min_deg"), max("deg").as("max_deg")): _*)
       .orderBy("bucket")
 }

@@ -815,7 +815,8 @@ object RefPipeline {
         val existing = touched.flatMap(b => ptrs.get(b).map(s.read.parquet(_)))
           .reduceOption(_ unionByName _)
           .getOrElse(batch.limit(0))
-        val merged = Warehouse.versionWinsCollapse(existing.unionByName(batch))
+        val merged = Warehouse.versionWinsCollapse(existing.unionByName(batch),
+          Seq("o_orderkey"), "version")
           .withColumn("bucket", pmod(col("o_orderkey"), lit(buckets)).cast("int"))
         // one fresh dir per (batch, bucket): partitionBy routes rows,
         // and DISTINCT paths mean a replayed batch id is idempotent

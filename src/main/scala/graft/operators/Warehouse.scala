@@ -354,33 +354,33 @@ object Warehouse {
     * not parallel implementations. */
   private[operators] def replacingFrames(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
     val base = graft.Tables(spark, dir).orders
-      .select(col("o_orderkey"), col("o_orderstatus"),
-        expr("cast(round(o_totalprice * 100) as bigint)").as("total_cents"),
-        lit(1L).as("version"))
+      .select(col("o_orderkey"), lit(1L).as("version"), col("o_orderstatus"),
+        expr("cast(round(o_totalprice * 100) as bigint)").as("total_cents"))
     val updates = base.filter(col("o_orderkey") % 10 === 0)
-      .select(col("o_orderkey"), lit("F").as("o_orderstatus"),
-        (col("total_cents") + lit(500L)).as("total_cents"),
-        lit(2L).as("version"))
+      .select(col("o_orderkey"), lit(2L).as("version"), lit("F").as("o_orderstatus"),
+        (col("total_cents") + lit(500L)).as("total_cents"))
     (base, updates)
   }
 
-  /** Version-wins collapse: one algebraic `max_by` aggregate per key.
-    * Associative AND commutative (versions are distinct per key), so any
-    * batch split of the version stream — including a streaming arrival
-    * order — converges to the identical table. */
-  private[operators] def versionWinsCollapse(versions: DataFrame): DataFrame =
-    versions
-      .groupBy("o_orderkey")
-      .agg(max_by(
-        struct(col("version"), col("o_orderstatus"), col("total_cents")),
-        col("version")).as("w"))
-      .select(col("o_orderkey"), col("w.version").as("version"),
-        col("w.o_orderstatus").as("o_orderstatus"),
-        col("w.total_cents").as("total_cents"))
+  /** Version-wins collapse: per `key`, the row with the largest `version`
+    * — one algebraic `max_by(struct(payload), version)` aggregate, where
+    * the payload is every non-key column. Output: the key columns, then
+    * the payload in input order. Associative AND commutative (versions
+    * are distinct per key), so any batch split of the version stream —
+    * including a streaming arrival order — converges to the identical
+    * table. `wh_replacing_merge`, its streaming twin and the ClickHouse
+    * dialect's `FROM t FINAL` all run this one collapse. */
+  private[graft] def versionWinsCollapse(rows: DataFrame, key: Seq[String],
+      version: String): DataFrame = {
+    val payload = rows.columns.filterNot(key.contains)
+    rows.groupBy(key.map(col): _*)
+      .agg(max_by(struct(payload.map(col): _*), col(version)).as("__graft_r"))
+      .select(key.map(col) ++ payload.map(c => col(s"__graft_r.$c").as(c)): _*)
+  }
 
   def replacingMerge(spark: SparkSession, dir: String): DataFrame = {
     val (base, updates) = replacingFrames(spark, dir)
-    versionWinsCollapse(base.unionByName(updates))
+    versionWinsCollapse(base.unionByName(updates), Seq("o_orderkey"), "version")
   }
 
   /** ONE fragmented-layout dir + ONE compacted dir per JVM, overwritten in

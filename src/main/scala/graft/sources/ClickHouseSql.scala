@@ -191,8 +191,8 @@ final class ClickHouseSql(
     }
 
   /** The `FINAL` collapse of a `ReplacingMergeTree(version)` table:
-    * version-wins per ORDER-BY key — `max_by(struct(payload), version)`
-    * per key, one partial-aggregated shuffle (the same plan the native
+    * version-wins per ORDER-BY key — [[graft.operators.Warehouse.versionWinsCollapse]],
+    * one partial-aggregated shuffle (the same collapse the native
     * `wh_replacing_merge` runs; ClickHouse's FINAL is the same k-way
     * merge applied at read time). CH without a version column keeps the
     * last-inserted row — insertion order is not a deterministic contract
@@ -204,10 +204,7 @@ final class ClickHouseSql(
       throw new IllegalArgumentException(s"unknown table $t for FINAL"))
     tableMeta.get(t) match {
       case Some(("ReplacingMergeTree", Seq(ver), key)) if key.nonEmpty =>
-        val payload = df.columns.filterNot(key.contains)
-        df.groupBy(key.map(col): _*)
-          .agg(max_by(struct(payload.map(col): _*), col(ver)).as("__graft_r"))
-          .select(key.map(col) ++ payload.map(c => col(s"__graft_r.$c").as(c)): _*)
+        graft.operators.Warehouse.versionWinsCollapse(df, key, ver)
       case Some((eng, _, _)) => throw new IllegalArgumentException(
         s"FINAL supported only for ReplacingMergeTree(version) with ORDER BY, " +
           s"got $eng for $t")

@@ -167,5 +167,10 @@ class Round10Spec extends SparkSpec {
     assert(got == brute,
       s"partition visibility diverged: extra=${got.diff(brute).take(3)} missing=${brute.diff(got).take(3)}")
     assert(got.exists(_._1 == "2024-01-05"), "the reattached day must be visible")
+    // DETACH/ATTACH are renames: the reattached day's part file is the
+    // same inode as before the round trip (no copy, no rewrite)
+    val (before, after) = Warehouse.partOpsInodes
+    assert(before != null && after != null, "part-file inodes were not observed")
+    assert(before == after, s"reattached part file changed inode: $before -> $after")
   }
 }

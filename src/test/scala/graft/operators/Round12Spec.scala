@@ -326,14 +326,8 @@ class Round12Spec extends SparkSpec {
     val rows = out.collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
 
     // exact replay of the 1e-12-unit recurrence on the collected graph
-    val t = graft.Tables(spark, sf)
-    val ord = t.orders.select("o_orderkey", "o_custkey").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toMap
-    val w = scala.collection.mutable.Map.empty[(Long, Long), Long].withDefaultValue(0L)
-    t.lineitem.select("l_orderkey", "l_suppkey").collect().foreach { r =>
-      ord.get(r.getLong(0)).foreach { ck => w((ck * 2, r.getLong(1) * 2 + 1)) += 1L }
-    }
-    val edges = w.toSeq.flatMap { case ((c, s2), wt) => Seq((c, s2, wt), (s2, c, wt)) }
+    val edges = TradeGraphRef(spark, sf).weightedNodes
+      .flatMap { case (c, s2, wt) => Seq((c, s2, wt), (s2, c, wt)) }
     val wtot = edges.groupBy(_._1).view.mapValues(_.map(_._3).sum).toMap
     val nodes = edges.map(_._1).distinct.sorted
     val r0 = 1000000000000L / nodes.size
@@ -398,17 +392,7 @@ class Round12Spec extends SparkSpec {
 
   test("q_components labeling equals a driver-side union-find; round 8 is a fixed point") {
     // brute-force reference: union-find over the same w>=2 edge rule
-    val t = graft.Tables(spark, sf)
-    val ord = t.orders.select("o_orderkey", "o_custkey").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toMap
-    val w = scala.collection.mutable.Map.empty[(Long, Long), Long].withDefaultValue(0L)
-    t.lineitem.select("l_orderkey", "l_suppkey").collect().foreach { r =>
-      ord.get(r.getLong(0)).foreach { ck => w((ck * 2, r.getLong(1) * 2 + 1)) += 1L }
-    }
-    // iterator first: collect on a Map would rebuild a MAP from the
-    // emitted (c, s) tuples, silently collapsing the edge list to one
-    // edge per distinct c (measured: 1299 -> 150 edges on sf0.001)
-    val edges = w.iterator.collect { case ((c, s), n) if n >= 2 => (c, s) }.toSeq
+    val edges = TradeGraphRef(spark, sf).repeatNodes
     assert(edges.nonEmpty, "fixture must produce repeat-trade edges")
     val parent = scala.collection.mutable.Map.empty[Long, Long]
     def find(x: Long): Long = {
@@ -475,27 +459,8 @@ class Round12Spec extends SparkSpec {
     assert(longDoc.isDefined, "fixture should contain a doc longer than one window")
   }
 
-  /** The repeat-trade (supplier, customer) pairs and the co-trade
-    * projection edges, collected — shared by the triangle tests. */
-  private def coTradeEdges(): Seq[(Long, Long)] = {
-    val t = graft.Tables(spark, sf)
-    val ord = t.orders.select("o_orderkey", "o_custkey").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toMap
-    val w = scala.collection.mutable.Map.empty[(Long, Long), Long].withDefaultValue(0L)
-    t.lineitem.select("l_orderkey", "l_suppkey").collect().foreach { r =>
-      ord.get(r.getLong(0)).foreach { ck => w((r.getLong(1), ck)) += 1L }
-    }
-    val bySupp = w.iterator.collect { case ((s, c), n) if n >= 2 => (s, c) }
-      .toSeq.groupBy(_._1).values
-    bySupp.flatMap { cs =>
-      val cands = cs.map(_._2).distinct.sorted
-      for (i <- cands.indices; j <- (i + 1) until cands.size)
-        yield (cands(i), cands(j))
-    }.toSeq.distinct
-  }
-
   test("q_triangles equals a brute-force triangle count with exact clustering coefficients") {
-    val edges = coTradeEdges()
+    val edges = TradeGraphRef(spark, sf).cotrade().toSeq
     assert(edges.nonEmpty, "fixture must produce co-trade edges")
     val adj = edges.flatMap { case (a, b) => Seq(a -> b, b -> a) }
       .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
@@ -529,14 +494,7 @@ class Round12Spec extends SparkSpec {
       "per-side top-10 must be the bounded TakeOrderedAndProject")
     val got = out.collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
 
-    val t = graft.Tables(spark, sf)
-    val ord = t.orders.select("o_orderkey", "o_custkey").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toMap
-    val w = scala.collection.mutable.Map.empty[(Long, Long), Long].withDefaultValue(0L)
-    t.lineitem.select("l_orderkey", "l_suppkey").collect().foreach { r =>
-      ord.get(r.getLong(0)).foreach { ck => w((ck, r.getLong(1))) += 1L }
-    }
-    val edges = w.toSeq.map { case ((c, s), n) => (c, s, n) }
+    val edges = TradeGraphRef(spark, sf).w.toSeq.map { case ((c, s), n) => (c, s, n) }
     val m = 1000000000L
     val custs = edges.map(_._1).distinct
     var hub = custs.map(_ -> (m / custs.size)).toMap
@@ -614,18 +572,7 @@ class Round12Spec extends SparkSpec {
   }
 
   test("q_seed_distance equals a driver-side capped BFS; unreached reported as -1") {
-    val edges = {
-      val t = graft.Tables(spark, sf)
-      val ord = t.orders.select("o_orderkey", "o_custkey").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toMap
-      val w = scala.collection.mutable.Map.empty[(Long, Long), Long].withDefaultValue(0L)
-      t.lineitem.select("l_orderkey", "l_suppkey").collect().foreach { r =>
-        ord.get(r.getLong(0)).foreach { ck => w((ck * 2, r.getLong(1) * 2 + 1)) += 1L }
-      }
-      w.iterator.collect { case ((c, s), n) if n >= 2 => (c, s) }.toSeq
-        .flatMap { case (c, s) => Seq((c, s), (s, c)) }
-    }
-    val adj = edges.groupBy(_._1).view.mapValues(_.map(_._2)).toMap
+    val adj = TradeGraphRef(spark, sf).symmetric.groupBy(_._1).view.mapValues(_.map(_._2)).toMap
     val nodes = adj.keySet
     val seeds = nodes.toSeq.sorted.take(3)
     val dist = scala.collection.mutable.Map.empty[Long, Long]
@@ -657,15 +604,8 @@ class Round12Spec extends SparkSpec {
         s"bucket $b must contain degrees in [2^$b, 2^${b + 1}): got [$lo, $hi]")
     }
     // node-count conservation against the components fixture edge rule
-    val t = graft.Tables(spark, sf)
-    val ord = t.orders.select("o_orderkey", "o_custkey").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toMap
-    val w = scala.collection.mutable.Map.empty[(Long, Long), Long].withDefaultValue(0L)
-    t.lineitem.select("l_orderkey", "l_suppkey").collect().foreach { r =>
-      ord.get(r.getLong(0)).foreach { ck => w((ck * 2, r.getLong(1) * 2 + 1)) += 1L }
-    }
-    val deg = scala.collection.mutable.Map.empty[Long, Long].withDefaultValue(0L)
-    w.foreach { case ((c, s), n) => if (n >= 2) { deg(c) += 1; deg(s) += 1 } }
+    val deg = TradeGraphRef(spark, sf).symmetric.groupBy(_._1)
+      .map { case (n, es) => n -> es.size.toLong }
     assert(out.map(_._2).sum == deg.size.toLong, "every node exactly once")
     val expected = deg.toSeq.map { case (n, d) =>
       (63 - java.lang.Long.numberOfLeadingZeros(d), n, d)
@@ -701,7 +641,7 @@ class Round12Spec extends SparkSpec {
   }
 
   test("q_assortativity equals a driver-side exact-moment replay") {
-    val edges = coTradeSymEdges()
+    val edges = TradeGraphRef(spark, sf).symmetric
     val deg = edges.groupBy(_._1).view.mapValues(_.size.toLong).toMap
     val (n, sx, sy, sxx, syy, sxy) = edges.foldLeft((0L, 0L, 0L, 0L, 0L, 0L)) {
       case ((cn, cx, cy, cxx, cyy, cxy), (u, v)) =>
@@ -733,7 +673,7 @@ class Round12Spec extends SparkSpec {
       }
       prof.toSeq
     }
-    val edges = coTradeSymEdges()
+    val edges = TradeGraphRef(spark, sf).symmetric
     val expected = peel(edges, 3, 8)
     val got = Graph.kcore(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
@@ -745,19 +685,5 @@ class Round12Spec extends SparkSpec {
       "round 9 must be a fixed point on the fixture")
     // and the peel must actually bite (else the key degenerates)
     assert(got.last._2 < got.head._2, "the k=3 peel should remove peripheral nodes")
-  }
-
-  /** Symmetric (both directions) repeat-trade edges with interleaved
-    * node ids — the Graph family's edge rule, collected. */
-  private def coTradeSymEdges(): Seq[(Long, Long)] = {
-    val t = graft.Tables(spark, sf)
-    val ord = t.orders.select("o_orderkey", "o_custkey").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toMap
-    val w = scala.collection.mutable.Map.empty[(Long, Long), Long].withDefaultValue(0L)
-    t.lineitem.select("l_orderkey", "l_suppkey").collect().foreach { r =>
-      ord.get(r.getLong(0)).foreach { ck => w((ck * 2, r.getLong(1) * 2 + 1)) += 1L }
-    }
-    w.iterator.collect { case ((c, s), x) if x >= 2 => (c, s) }.toSeq
-      .flatMap { case (c, s) => Seq((c, s), (s, c)) }
   }
 }

@@ -75,13 +75,7 @@ class Round13Spec extends SparkSpec {
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
       .toSeq
     // reference: the same 4 synchronous rounds, plain Scala
-    val pairs = graft.Tables(spark, sf).lineitem
-      .select(col("l_orderkey"), col("l_suppkey"))
-      .join(graft.Tables(spark, sf).orders.select(col("o_orderkey"), col("o_custkey")),
-        col("l_orderkey") === col("o_orderkey"))
-      .groupBy((col("o_custkey") * 2).as("c"), (col("l_suppkey") * 2 + 1).as("s"))
-      .agg(count(lit(1)).as("w")).where(col("w") >= 2)
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
+    val pairs = TradeGraphRef(spark, sf).repeatNodes
     val adj = scala.collection.mutable.Map.empty[Long, List[Long]].withDefaultValue(Nil)
     pairs.foreach { case (c, s) => adj(c) ::= s; adj(s) ::= c }
     var lbl: Map[Long, Long] = adj.keys.map(n => n -> n).toMap
@@ -108,13 +102,7 @@ class Round13Spec extends SparkSpec {
     val row = Graph.modularity(spark, sf).collect().head
     val (gm, gc, gq) = (row.getLong(0), row.getLong(1), row.getDouble(2))
     // replay: the Round13Spec LPA reference labeling, then Q by hand
-    val pairs = graft.Tables(spark, sf).lineitem
-      .select(col("l_orderkey"), col("l_suppkey"))
-      .join(graft.Tables(spark, sf).orders.select(col("o_orderkey"), col("o_custkey")),
-        col("l_orderkey") === col("o_orderkey"))
-      .groupBy((col("o_custkey") * 2).as("c"), (col("l_suppkey") * 2 + 1).as("s"))
-      .agg(count(lit(1)).as("w")).where(col("w") >= 2)
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
+    val pairs = TradeGraphRef(spark, sf).repeatNodes
     val adj = scala.collection.mutable.Map.empty[Long, List[Long]].withDefaultValue(Nil)
     pairs.foreach { case (c, s) => adj(c) ::= s; adj(s) ::= c }
     var lbl: Map[Long, Long] = adj.keys.map(n => n -> n).toMap

@@ -20,26 +20,6 @@ class Round16Spec extends SparkSpec {
   private def coin(a: Long, b: Long): Boolean =
     ((((a % 1048576L) * 1048573L + b) % 1048576L) * 2654435761L) % 1048576L < 262144L
 
-  /** The declared co-trade projection rule, independently: collect the
-    * raw (supplier, customer) trade pairs and build repeat-trade
-    * co-customer edges in plain Scala (count >= 2, smax = 1024). */
-  private def cotradeEdgesRef(): Set[(Long, Long)] = {
-    val t = graft.Tables(spark, sf)
-    val raw = t.lineitem.select(col("l_orderkey"), col("l_suppkey"))
-      .join(t.orders.select(col("o_orderkey"), col("o_custkey")),
-        col("l_orderkey") === col("o_orderkey"))
-      .select(col("l_suppkey"), col("o_custkey")).collect()
-      .map(r => (r.getLong(0), r.getLong(1)))
-    // keySet, not collect-to-tuples: Map#collect with tuple results
-    // rebuilds a MAP and silently collapses (s, c) pairs by supplier
-    val repeat = raw.groupBy(identity).filter(_._2.length >= 2).keySet
-    val bySupp = repeat.toSeq.groupBy(_._1).filter(_._2.size <= 1024)
-    bySupp.values.flatMap { scs =>
-      val cs = scs.map(_._2).distinct.sorted
-      for (i <- cs.indices; j <- (i + 1) until cs.length) yield (cs(i), cs(j))
-    }.toSet
-  }
-
   private def perNodeTriangles(edges: Set[(Long, Long)]): Map[Long, Long] = {
     val adj = (edges.toSeq.flatMap { case (a, b) => Seq(a -> b, b -> a) })
       .groupBy(_._1).map { case (n, vs) => n -> vs.map(_._2).toSet }
@@ -52,7 +32,7 @@ class Round16Spec extends SparkSpec {
   }
 
   test("trianglesApproxNodes equals the independent replay row-for-row (coin, census, floor, degrees, quantization)") {
-    val edges = cotradeEdgesRef()
+    val edges = TradeGraphRef(spark, sf).cotrade()
     val sampled = edges.filter { case (a, b) => coin(a, b) }
     val deg = edges.toSeq.flatMap { case (a, b) => Seq(a, b) }
       .groupBy(identity).map { case (n, vs) => n -> vs.size.toLong }
@@ -69,7 +49,7 @@ class Round16Spec extends SparkSpec {
   }
 
   test("trianglesApproxNodes accuracy: reported estimates stay within a small factor of exact, and the aggregate is census-tight") {
-    val edges = cotradeEdgesRef()
+    val edges = TradeGraphRef(spark, sf).cotrade()
     val exact = perNodeTriangles(edges)
     val sampledPer = perNodeTriangles(edges.filter { case (a, b) => coin(a, b) })
     // aggregate unbiasedness: sum over ALL nodes of the per-node

@@ -220,13 +220,13 @@ class WarehouseSpec extends SparkSpec {
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getAs[Long]("o_orderkey"), r.getAs[Long]("version"),
         r.getAs[String]("o_orderstatus"), r.getAs[Long]("total_cents"))).toSet
-    val once = rows(Warehouse.versionWinsCollapse(base.unionByName(updates)))
-    val replayed = rows(Warehouse.versionWinsCollapse(
-      base.unionByName(updates).unionByName(updates)))
+    def collapse(df: org.apache.spark.sql.DataFrame) =
+      Warehouse.versionWinsCollapse(df, Seq("o_orderkey"), "version")
+    val once = rows(collapse(base.unionByName(updates)))
+    val replayed = rows(collapse(base.unionByName(updates).unionByName(updates)))
     assert(once == replayed, "a replayed updates batch must be absorbed")
     // and folding the already-collapsed state with the replay is also stable
-    val folded = rows(Warehouse.versionWinsCollapse(
-      Warehouse.versionWinsCollapse(base.unionByName(updates)).unionByName(updates)))
+    val folded = rows(collapse(collapse(base.unionByName(updates)).unionByName(updates)))
     assert(folded == once, "re-folding collapsed state with a replay must be a no-op")
   }
 
