@@ -118,6 +118,27 @@ object GraftSession {
       .config("spark.ui.retainedStages", "100")
       .config("spark.ui.retainedTasks", "5000")
       .config("spark.sql.ui.retainedExecutions", "20")
+      // file:// through java.nio instead of a chmod/ls/readlink process per
+      // metadata call (no native Hadoop library here): FileSystem for
+      // every parquet read and write, AbstractFileSystem for FileContext,
+      // which streaming checkpoints go through. A perfbench `stream` run
+      // (seed 7, 4 cores) started 5,952 processes with Hadoop's class and
+      // 26 with this one (tools/fork_census.sh); a `chmod` process took
+      // 0.7 ms from a small JVM, the nio call 3-6 µs. Hadoop caches a
+      // FileSystem per scheme and user, not per conf, so the first
+      // file:// FileSystem a JVM opens decides its class.
+      .config("spark.hadoop.fs.file.impl", classOf[graft.fs.NioLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[graft.fs.NioLocalFs].getName)
+      // List input files on the driver up to 1024 paths (default 32).
+      // Above the threshold Spark lists with a Spark job, which costs
+      // more than listing a few dozen local paths: a ParquetUpsertSink
+      // read of its `batch=N` partitions, and the file-stream source's
+      // 40-file backlog batch, both cross 32. With the nio file system the
+      // stream's faster triggers write more sink partitions, so a
+      // perfbench `stream` run (seed 7, 4 cores, 3 runs each) at the
+      // default threshold gave queries_per_s 9.2-9.3 and makespan_s
+      // 0.66-0.69 s; at 1024, 10.3-10.7 and 0.54-0.56 s.
+      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
 
   def get(): SparkSession = {
     val s = builder().getOrCreate()

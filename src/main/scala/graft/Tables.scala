@@ -103,19 +103,17 @@ object Tables {
   }
 
   /** (name, size, mtime) of every file under `path`, sorted; empty when
-    * `path` does not exist (the read then fails with Spark's own error). */
+    * `path` does not exist (the read then fails with Spark's own error).
+    * A `listStatus` walk, as Spark's own file listing does: `listFiles`
+    * builds a `LocatedFileStatus`, which reads each file's permission
+    * (an `ls -ld` process per file on a stock local file system). */
   private def files(spark: SparkSession, path: String): Seq[(String, Long, Long)] = {
     val p = new HadoopPath(path)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val out = Seq.newBuilder[(String, Long, Long)]
-    try {
-      val it = fs.listFiles(p, true)
-      while (it.hasNext) {
-        val f = it.next()
-        out += ((f.getPath.toString, f.getLen, f.getModificationTime))
-      }
-    } catch { case _: java.io.FileNotFoundException => }
-    out.result().sorted
+    def walk(dir: HadoopPath): Seq[(String, Long, Long)] = fs.listStatus(dir).toSeq.flatMap { f =>
+      if (f.isDirectory) walk(f.getPath) else Seq((f.getPath.toString, f.getLen, f.getModificationTime))
+    }
+    try walk(p).sorted catch { case _: java.io.FileNotFoundException => Nil }
   }
 
   /** The `ts` rebuild for an events frame, batch or stream: a nanos long

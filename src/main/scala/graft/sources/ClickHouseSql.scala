@@ -360,13 +360,28 @@ final class ClickHouseSql(
     val existing = tables.getOrElse(target,
       throw new IllegalArgumentException(s"unknown destination table $target"))
     val rows = withViews {
-      sql(translateQuery(chSelect, tupleOwner = Some(target)))
+      unsorted(sql(translateQuery(chSelect, tupleOwner = Some(target))))
     }
     val aligned = rows.select(existing.schema.map(f =>
       col(f.name).cast(f.dataType).as(f.name)): _*)
     if (readers(target) >= 2) graft.GraftSession.trackCache(aligned)
     else unstored.getOrElseUpdate(target, mutable.Buffer.empty) += aligned
     tables(target) = existing.unionByName(aligned)
+  }
+
+  /** `df` without its top-level ORDER BY when nothing limits the sorted
+    * rows: a part's row order is never observable (a table reads as the
+    * union of its parts, and each statement over it sorts its own
+    * output), so that sort would only cost a range-sampling job and a
+    * shuffle. A sort under a LIMIT stays: it picks the rows. */
+  private def unsorted(df: DataFrame): DataFrame = {
+    import org.apache.spark.sql.catalyst.plans.logical.{Project, Sort}
+    val plan = df.queryExecution.analyzed match {
+      case Sort(_, true, child, _) => Some(child)
+      case p @ Project(_, Sort(_, true, child, _)) => Some(p.withNewChildren(Seq(child)))
+      case _ => None
+    }
+    plan.map(org.apache.spark.sql.GraftSqlBridge.frame(spark, _)).getOrElse(df)
   }
 
   /** The JSONExtract family → fields of ONE `from_json` per message

@@ -3,8 +3,10 @@ package graft
 import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Tracked caches of a context that stops. The check runs in a child JVM:
-  * it stops its context, and the suites' shared one must stay up. */
+/** What a built session carries: tracked caches of a context that stops
+  * are dropped (checked in a child JVM: it stops its context, and the
+  * suites' shared one must stay up), and `file:` opens graft's file
+  * systems. */
 class GraftSessionSpec extends AnyFunSuite {
   test("stopping a context empties its cache manager of tracked frames") {
     val flags = java.lang.management.ManagementFactory.getRuntimeMXBean.getInputArguments.asScala
@@ -15,6 +17,18 @@ class GraftSessionSpec extends AnyFunSuite {
     val code = scala.sys.process.Process(cmd).!(scala.sys.process.ProcessLogger(out += _, err += _))
     assert(code == 0, err.takeRight(20).mkString("\n"))
     assert(out.lastOption.contains("cache entries after stop: 0"), out.mkString("\n"))
+  }
+
+  test("a built session resolves file: to graft's java.nio file systems") {
+    val conf = SparkSpec.session.sessionState.newHadoopConf()
+    val root = java.net.URI.create("file:///")
+    val fs = org.apache.hadoop.fs.FileSystem.newInstance(root, conf)
+    try {
+      assert(fs.getClass == classOf[graft.fs.NioLocalFileSystem])
+      assert(fs.asInstanceOf[org.apache.hadoop.fs.LocalFileSystem].getRaw.getClass ==
+        classOf[graft.fs.NioRawLocalFileSystem])
+    } finally fs.close()
+    assert(org.apache.hadoop.fs.AbstractFileSystem.get(root, conf).getClass == classOf[graft.fs.NioLocalFs])
   }
 }
 

@@ -300,6 +300,34 @@ class ClickHouseSqlSpec extends SparkSpec {
     graft.GraftSession.sweepCaches(spark)
   }
 
+  test("appended parts: an ORDER BY without LIMIT is dropped, an ORDER BY ... LIMIT is kept") {
+    val cutoff = "2013-09-02 12:00:00"
+    val c = new ClickHouseSql(spark,
+      _ => EventsSource.syntheticKafkaFrameCoarse(spark, 2000L, 37, 4))
+    c.executeAll(Seq(ClickHouseDemo.queueDdl, ClickHouseDemo.eventsDdl, ClickHouseDemo.eventsMv,
+      ClickHouseDemo.granularDdl, ClickHouseDemo.granularMv(cutoff)))
+    def sorts(df: org.apache.spark.sql.DataFrame) = df.queryExecution.analyzed.collect {
+      case s: org.apache.spark.sql.catalyst.plans.logical.Sort => s
+    }
+    // the MV select ends in `ORDER BY timestamp`: its part is not sorted
+    val mv = c.execute("SELECT * FROM class_attendance_granular").get
+    assert(sorts(mv).isEmpty, "the stored part still sorts its rows")
+    val mvRows = answer(mv)
+    val groups = "SELECT timestamp, subject, count(student) AS studentCount " +
+      s"FROM student_entry_events WHERE timestamp < '$cutoff' GROUP BY timestamp, subject"
+    assert(mvRows == answer(c.execute(groups.replace("<", ">=")).get))
+    // a sort under a LIMIT picks the rows: it stays, and the part holds
+    // the three latest slots before the cutoff
+    c.execute(s"INSERT INTO class_attendance_granular $groups ORDER BY timestamp DESC LIMIT 3")
+    val all = c.execute("SELECT * FROM class_attendance_granular").get
+    assert(sorts(all).size == 1)
+    val latest = answer(c.execute(groups).get).toSeq.map(_.head.asInstanceOf[java.sql.Timestamp])
+      .sortBy(-_.getTime).take(3)
+    val limited = (answer(all) -- mvRows).toSeq.map(_.head.asInstanceOf[java.sql.Timestamp])
+    assert(limited.size == 3 && limited.sortBy(-_.getTime) == latest)
+    graft.GraftSession.sweepCaches(spark)
+  }
+
   private def stored(df: org.apache.spark.sql.DataFrame): Boolean =
     df.queryExecution.withCachedData.exists(
       _.isInstanceOf[org.apache.spark.sql.execution.columnar.InMemoryRelation])
