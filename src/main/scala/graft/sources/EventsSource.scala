@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -8,12 +8,14 @@ import org.apache.spark.sql.types._
   * (anelook/apache-kafka-clickhouse-demo: kcat -> Kafka topic
   * `entry-events` -> ClickHouse Kafka engine, README.rst Step 1-2).
   *
-  * The Spark-native shape: one explicit schema + one JSON-as-string
-  * projection, reusable across EVERY source — the transforms downstream
-  * never know whether rows arrived from Kafka, files, or a test
-  * MemoryStream. That is the analog of the reference's
-  * `JSONAsString` Kafka-engine table + extraction materialized view,
-  * without coupling the pipeline to the broker.
+  * The Spark-native shape: one explicit schema + one typed projection,
+  * reused across EVERY source — the transforms downstream never know
+  * whether rows arrived from Kafka, files, or a test MemoryStream. A
+  * message column (Kafka's value) is parsed with `from_json` ([[parse]]);
+  * NDJSON files with Spark's JSON reader ([[fileStream]]). That is the
+  * analog of the reference's `JSONAsString` Kafka-engine table +
+  * extraction materialized view, without coupling the pipeline to the
+  * broker.
   */
 object EventsSource {
 
@@ -30,23 +32,34 @@ object EventsSource {
 
   /** JSON-as-string -> typed columns (JSONExtract* + fromUnixTimestamp64Milli
     * analog, all codegen'd builtins). Works on any DataFrame with a
-    * `message: string` column — batch or streaming. */
+    * `message: string` column — batch or streaming (the Kafka value). A
+    * malformed message gives a row of null fields. */
   def parse(raw: DataFrame): DataFrame =
     raw
       .select(from_json(col("message"), eventSchema).as("e"))
-      .select(
-        col("e.event_id").as("event_id"),
-        timestamp_millis(col("e.timestamp")).as("ts"),
-        col("e.user_id").as("user_id"),
-        col("e.event_type").as("event_type"),
-        col("e.value").as("value"),
-        col("e.props").as("props"))
+      .select(typedColumns(f => col(s"e.$f")): _*)
+
+  /** The typed projection over the [[eventSchema]] fields, each reached
+    * through `field` — the one select list [[parse]] and [[fileStream]]
+    * share. */
+  private def typedColumns(field: String => Column): Seq[Column] = Seq(
+    field("event_id").as("event_id"),
+    timestamp_millis(field("timestamp")).as("ts"),
+    field("user_id").as("user_id"),
+    field("event_type").as("event_type"),
+    field("value").as("value"),
+    field("props").as("props"))
 
   /** Streaming NDJSON file source (each line one JSON event) — drop-in for
-    * the kcat -> topic flow when testing without a broker. */
+    * the kcat -> topic flow when testing without a broker. Spark's JSON
+    * reader parses each line's bytes directly against [[eventSchema]]
+    * (no per-row string and parser as `from_json` builds), then the same
+    * typed projection as [[parse]]. A malformed line gives a row of null
+    * fields, as in [[parse]]; a blank line gives no row (`parse` gives a
+    * null row for an empty message). */
   def fileStream(spark: SparkSession, path: String): DataFrame =
-    parse(spark.readStream.schema(StructType(Seq(StructField("value", StringType))))
-      .text(path).withColumnRenamed("value", "message"))
+    spark.readStream.schema(eventSchema).json(path)
+      .select(typedColumns(col): _*)
 
   /** Wire schema of the reference's ACTUAL NDJSON corpus
     * (README.rst Step 2.2: events_years_*.ndjson — timestamp unix-ms,

@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.sql.{DriverManager, SQLException}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode}
+import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.sql.types._
 
 /** A REAL JDBC keyed-upsert sink — the warehouse-MERGE rendition of
@@ -177,11 +177,12 @@ object JdbcUpsertSink {
   }
 
   /** Attach the sink to an update-mode aggregated stream: each micro-batch
-    * MERGEs (delete+insert) into the JDBC table, keyed. */
+    * MERGEs (delete+insert) into the JDBC table, keyed. Like
+    * [[ParquetUpsertSink.attach]], one micro-batch per drain, on a clone
+    * of the caller's session taken here: see [[UpdateModeWriter]]. */
   def attach(aggregated: DataFrame, url: String, table: String,
       keyCols: Seq[String]): DataStreamWriter[Row] =
-    aggregated.writeStream
-      .outputMode(OutputMode.Update())
+    UpdateModeWriter(aggregated)
       .foreachBatch((batch: DataFrame, _: Long) => upsertBatch(batch, url, table, keyCols))
 
   /** Reads the table back through Spark's JDBC source (the state a

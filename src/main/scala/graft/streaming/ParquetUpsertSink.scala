@@ -1,48 +1,93 @@
 package graft.streaming
 
+import java.io.FileNotFoundException
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode}
+import org.apache.spark.sql.streaming.DataStreamWriter
+import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
 
 /** Idempotent micro-batch sink — the MergeTree-table analog the reference's
   * materialized view writes into (README.rst Step 2.2-2.3), made
   * exactly-once for real instead of by assertion.
   *
   * Contract: every `foreachBatch` invocation OVERWRITES the partition
-  * directory `batch=<batchId>` with that batch's rows. Structured
-  * Streaming replays an uncommitted batch after a crash/restart under the
-  * SAME batchId with the SAME deterministic content, so a replay truncates
-  * and rewrites its own directory — duplicates are structurally impossible,
-  * no sink-side transaction log needed. (This is the parquet rendition of
-  * the classic keyed-MERGE/JDBC-upsert; the same `(batchId, key)` scheme
-  * drives a real MERGE statement on a warehouse sink.)
+  * directory `batch=<batchId>` with that batch's rows, as one file.
+  * Structured Streaming replays an uncommitted batch after a crash/restart
+  * under the SAME batchId with the SAME deterministic content, so a replay
+  * truncates and rewrites its own directory — duplicates are structurally
+  * impossible, no sink-side transaction log needed. (This is the parquet
+  * rendition of the classic keyed-MERGE/JDBC-upsert; the same
+  * `(batchId, key)` scheme drives a real MERGE statement on a warehouse
+  * sink.)
   *
   * Readers resolve current state as "latest batch wins per key", exactly
-  * how update-mode aggregation emits refined values over time.
+  * how update-mode aggregation emits refined values over time. A read
+  * still opens one file per committed micro-batch; nothing compacts old
+  * batches.
   */
 object ParquetUpsertSink {
 
   /** One idempotent micro-batch write (public so a replay can be simulated
-    * and asserted in tests by invoking it twice with one batchId). */
+    * and asserted in tests by invoking it twice with one batchId). One
+    * file per batch: an update-mode batch holds at most the aggregation's
+    * state rows (the keys it touched), and every file is one more open
+    * for each later [[read]]. `coalesce(1)` also runs the batch's
+    * state-store stage as one task; at tens of rows that is no slower
+    * than the extra shuffle stage of `repartition(1)`. */
   def writeBatch(batch: DataFrame, batchId: Long, path: String): Unit =
-    batch.write.mode("overwrite").parquet(s"$path/batch=$batchId")
+    batch.coalesce(1).write.mode("overwrite").parquet(s"$path/batch=$batchId")
 
-  /** Attach the sink to an update-mode aggregated stream. */
+  /** Attach the sink to an update-mode aggregated stream. The query runs
+    * one micro-batch per drain (no trailing no-data batch), on a clone of
+    * the caller's session taken here: see [[UpdateModeWriter]]. */
   def attach(aggregated: DataFrame, path: String): DataStreamWriter[Row] =
-    aggregated.writeStream
-      .outputMode(OutputMode.Update())
+    UpdateModeWriter(aggregated)
       .foreachBatch((batch: DataFrame, batchId: Long) => writeBatch(batch, batchId, path))
 
   /** Current table state: the newest row per key across all batch
     * partitions (update-mode re-emissions superseded by batch order). The
-    * `batch` column comes free from hive-style partition discovery, so
-    * batch pruning works like any partition filter. */
+    * `batch` column comes from the hive-style partition directories, read
+    * as a number (batch 10 outranks batch 9), so batch pruning works like
+    * any partition filter. The schema comes from one part's footer on the
+    * driver ([[footerSchema]]), so a read runs no schema-inference job. */
   def read(spark: SparkSession, path: String, keyCols: Seq[String]): DataFrame = {
     val w = Window.partitionBy(keyCols.map(col): _*).orderBy(col("batch").desc)
-    spark.read.parquet(path)
+    val reader = footerSchema(spark, path).fold(spark.read)(s =>
+      spark.read.schema(s.add(StructField("batch", LongType))))
+    reader.parquet(path)
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1)
       .drop("rn", "batch")
+  }
+
+  /** Key under which Spark's parquet writer stores the row schema (JSON)
+    * in each file's footer. */
+  private val RowMetadataKey = "org.apache.spark.sql.parquet.row.metadata"
+
+  /** The row schema Spark wrote into the footer of one part file under a
+    * `batch=` directory, or None (no such file, or one written without
+    * the key): the caller then lets Spark infer it, and fail as before on
+    * a missing or empty sink. Every batch comes from one query, so one
+    * footer stands for all of them. */
+  private def footerSchema(spark: SparkSession, path: String): Option[StructType] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val root = new Path(path)
+    val fs = root.getFileSystem(conf)
+    val batches = try fs.listStatus(root) catch { case _: FileNotFoundException => Array.empty[FileStatus] }
+    val part = batches.iterator
+      .filter(d => d.isDirectory && d.getPath.getName.startsWith("batch="))
+      .flatMap(d => fs.listStatus(d.getPath).iterator)
+      .map(_.getPath)
+      .find(p => p.getName.startsWith("part-") && p.getName.endsWith(".parquet"))
+    part.flatMap { p =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(p, conf))
+      val json = try reader.getFooter.getFileMetaData.getKeyValueMetaData.get(RowMetadataKey)
+      finally reader.close()
+      Option(json).map(DataType.fromJson(_).asInstanceOf[StructType])
+    }
   }
 }

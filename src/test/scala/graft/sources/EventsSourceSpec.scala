@@ -37,6 +37,32 @@ class EventsSourceSpec extends SparkSpec {
     assert(r.head.isNullAt(r.head.fieldIndex("event_id")))
   }
 
+  test("the file stream gives parse's rows: a null-field row per malformed line, none per blank line") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-events-bad").toFile
+    val lines = Seq(
+      """{"event_id": 1, "timestamp": 1700000000000, "user_id": 7, "event_type": "click", "value": 1.5, "props": "{}"}""",
+      "not json at all",
+      "",
+      """{"event_id": 2, "timestamp": 1700000060000, "user_id": 8, "event_type": "buy", "value": 9.99, "props": "{}"}""")
+    Files.write(new java.io.File(dir, "part-0.ndjson").toPath, lines.mkString("\n").getBytes("utf-8"))
+
+    val q = EventsSource.fileStream(spark, dir.getAbsolutePath)
+      .writeStream.format("memory").queryName("typed_events_bad")
+      .outputMode(OutputMode.Append()).start()
+    val streamed = try {
+      q.processAllAvailable()
+      spark.table("typed_events_bad").collect().toSeq
+    } finally q.stop()
+    val parsed = EventsSource.parse(lines.toDF("message")).collect().toSeq
+    def bag(rows: Seq[org.apache.spark.sql.Row]) = rows.map(_.toSeq).groupBy(identity).view.mapValues(_.size).toMap
+    val nullRow = Seq.fill(6)(null)
+    // the JSON reader skips the blank line; from_json("") gives a null row
+    assert(bag(parsed) == bag(streamed).updated(nullRow, 2))
+    assert(bag(streamed)(nullRow) == 1)
+    assert(streamed.size == 3)
+  }
+
   test("foreachBatch sink lands the hourly aggregate stream in the parquet table") {
     import graft.streaming.EventPipeline
     implicit val s = spark

@@ -39,8 +39,11 @@ class JdbcUpsertSinkSpec extends SparkSpec {
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"), sum("value").as("total"))
     JdbcUpsertSink.ensureTable(url, "pts", agg.schema)
+    val key = "spark.sql.streaming.noDataMicroBatches.enabled"
+    spark.conf.set(key, "true")
     val q = JdbcUpsertSink.attach(agg, url, "pts", Seq("event_type")).start()
     try {
+      assert(spark.conf.get(key) == "true", "attach must leave the caller's conf as it was")
       input.addData(ev(1, 1000, 1, "click", 1.0), ev(2, 1010, 2, "click", 2.0))
       q.processAllAvailable()
       // update mode refines the click row in place, adds the buy row
@@ -49,7 +52,10 @@ class JdbcUpsertSinkSpec extends SparkSpec {
       val got = JdbcUpsertSink.read(spark, url, "pts").collect()
         .map(r => r.getString(0) -> ((r.getLong(1), r.getDouble(2)))).toMap
       assert(got == Map("click" -> ((3L, 7.0)), "buy" -> ((1L, 9.0))), s"got $got")
-    } finally q.stop()
+    } finally {
+      q.stop()
+      spark.conf.unset(key)
+    }
   }
 
   test("embedded-Derby URL classification behind the local-mode guard") {
